@@ -254,13 +254,15 @@ class SnapshotStore:
             w = w.partitionBy(*partition_by)
         # label the write job (guide §1.5) — job descriptions are
         # thread-local, so each overlapped pool write is attributed
-        # correctly in the UI / event log
+        # correctly in the UI / event log; the caller's own label is
+        # put back afterwards, not cleared
         sc = df.sparkSession.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription("store write: " + "/".join(parts))
         try:
             w.parquet(path)
         finally:
-            sc.setJobDescription(None)
+            sc.setJobDescription(caller)
         return str(pathlib.Path(*parts))
 
     # --------------------------------------------------------------- gc

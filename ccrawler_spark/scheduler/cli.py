@@ -44,7 +44,7 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
     shm = pathlib.Path("/dev/shm/ccrawler-spark-local")
     shm.mkdir(exist_ok=True)
 
-    return (
+    spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("ccrawler-spark")
         .config("spark.local.dir", str(shm))
@@ -84,8 +84,27 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        # list store tables on the driver: above this many paths Spark
+        # lists them in a Spark job, and every read of a 64-bucket
+        # store table crossed the default of 32 — 3 listing jobs and
+        # 165 tasks a round for directories the driver lists in
+        # milliseconds. 4096 covers every store table's partition
+        # directories (host_buckets / seen_partitions: 64 in the
+        # shipped confs, 4096 buckets at design scale)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "4096")
         .getOrCreate()
     )
+    # the fetch sequence's unpartitioned windows (stages
+    # .with_fetch_sequence) are single-partition by design, over rows
+    # the round budget bounds; WindowExec warns about every such plan,
+    # which made a wall of identical WARN lines per round
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
+    return spark
 
 
 def make_engine(spark, fixture_dir: str, out_dir: str, conf=None,

@@ -24,6 +24,7 @@ from pyspark.sql.types import (
 from ccrawler_spark.bloom import filter as bf
 from ccrawler_spark.conf import CrawlConf
 from ccrawler_spark.functions.spark_exprs import umod_long
+from ccrawler_spark.io.corpus_layout import ID_PUSHDOWN_CAP
 from ccrawler_spark.io.snapshot import SnapshotStore
 from ccrawler_spark.scheduler import stages
 from ccrawler_spark.scheduler.fetch import fetch_and_decode
@@ -47,10 +48,33 @@ BLOOM_SCHEMA = StructType([
 # below this many candidates (proxied by the previous round's enqueued
 # count) the bloom pre-filter's fixed cogroup + Arrow-crossing cost
 # exceeds what it saves the exact anti-join — skip the probe (results
-# identical; see run_round). 4096 matches the small-schedule regime
-# bound (ID_PUSHDOWN_CAP): the same "metadata-sized round" cutoff used
-# elsewhere.
-BLOOM_PROBE_MIN_PREV_ENQUEUED = 4096
+# identical; see run_round). It is the small-schedule regime bound: the
+# same "metadata-sized round" cutoff used elsewhere.
+BLOOM_PROBE_MIN_PREV_ENQUEUED = ID_PUSHDOWN_CAP
+
+
+def layout_dedup(rows: DataFrame, n_parts: int) -> DataFrame:
+    """Frontier rows → the (host_bucket, umod(url_hash, 8)) file layout
+    in ``n_parts`` partitions, one row kept per url.
+
+    Canonical duplicates collapse to identical frontier rows (priority
+    0, discover_ts t0, depth 0), so the keep-rule is irrelevant. The
+    keep-one rides the layout repartition: the partition keys are
+    functions of the url (host_bucket via host, umod of url_hash =
+    xxhash64(url)), so duplicates are co-located and the window needs
+    only a sort, not a second exchange (HashPartitioning on a subset of
+    the window keys satisfies its clustering at any partition count;
+    plan-asserted in test_plans)."""
+    from pyspark.sql import Window
+
+    layout_keys = [F.col("host_bucket"), umod_long(F.col("url_hash"), 8)]
+    w_dedup = Window.partitionBy(*layout_keys, "url").orderBy("url")
+    return (
+        rows.repartition(n_parts, *layout_keys)
+        .withColumn("_rn", F.row_number().over(w_dedup))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def _pair_ids(rows) -> dict[str, set[str]]:
@@ -126,48 +150,38 @@ class CrawlEngine:
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame) -> RoundStats:
         """Seeds → snapshot 0 (SEMANTICS.md §6 bootstrap)."""
+        from concurrent.futures import ThreadPoolExecutor
+
         conf = self.conf
+        # the seed count (an upper bound on frontier rows) sizes the
+        # layout shuffle below, so a small seed list is not spread over
+        # 256 near-empty tasks for each of the snapshot-0 outputs
+        layout_parts = stages._fanout("bootstrap", seeds.count())
         # seed sources are often single-file/single-partition; spread
         # them before the (CPU-bound) normalization UDF
-        from concurrent.futures import ThreadPoolExecutor
-        from pyspark.sql import Window
-
         seeds = seeds.select("url").repartition(
             self.spark.sparkContext.defaultParallelism * 4
         )
         seeds = stages.normalize_urls(seeds)
-        # canonical duplicates collapse to identical frontier rows
-        # (priority 0, discover_ts t0, depth 0) — keep-rule irrelevant.
-        # The keep-one rides the layout repartition: the partition keys
-        # are functions of the url (host_bucket via host, umod of
-        # url_hash = xxhash64(url)), so duplicates are co-located and
-        # the window needs only a sort, not a second 10M-row exchange
-        # (HashPartitioning on a subset of the window keys satisfies
-        # its clustering; plan-asserted in test_plans).
-        layout_keys = [F.col("host_bucket"), umod_long(F.col("url_hash"), 8)]
-        w_dedup = Window.partitionBy(*layout_keys, "url").orderBy("url")
-        frontier0 = (
+        frontier0 = layout_dedup(
             stages.with_url_derivations(seeds, conf)
             .withColumn("priority", F.lit(0))
             .withColumn("discover_ts", F.timestamp_micros(F.lit(conf.t0_micros)))
             .withColumn("depth", F.lit(0))
             .withColumn("status", F.lit("queued"))
             .withColumn("retry_count", F.lit(0))
-            .select(*FRONTIER_COLS)
-            .repartition(256, *layout_keys)
-            .withColumn("_rn", F.row_number().over(w_dedup))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .cache()
-        )
+            .select(*FRONTIER_COLS),
+            layout_parts,
+        ).cache()
         seen0 = frontier0.select(
             "url_hash", "url",
             umod_long(F.col("url_hash"), conf.seen_partitions)
             .cast("int").alias("seen_part"),
             # repartition by the write-partition key (same rationale as
-            # run_round's seen delta): without it the 256 layout tasks
-            # each write a file into every seen_part dir — 16k small
-            # files that every later round's anti-join has to list
+            # run_round's seen delta): without it each layout task
+            # writes a file into every seen_part dir — 16k small files
+            # at the 256-way design-scale layout, all of which every
+            # later round's anti-join has to list
         ).repartition("seen_part")
         # the four snapshot-0 outputs are independent given the cached
         # frontier0 — overlap them like run_round's write phase
@@ -219,8 +233,8 @@ class CrawlEngine:
             "counters": {"fetched_total": 0, "denied_total": 0},
             "lineage": lineage,
         })
-        n = frontier0.count()
         frontier0.unpersist()
+        n = sum(seed_buckets.values())
         return RoundStats(0, 0, 0, n, n)
 
     # ------------------------------------------------------------ run_round
@@ -347,8 +361,6 @@ class CrawlEngine:
         # regime (same static bound as the metadata collect): identical
         # seq from one single-partition window instead of the 3-stage
         # group prefix-sum — see stages.with_fetch_sequence.
-        from ccrawler_spark.io.corpus_layout import ID_PUSHDOWN_CAP
-
         seq_offset = prev["counters"]["fetched_total"]
         scheduled = stages.with_fetch_sequence(
             sched0, r, seq_offset,
@@ -445,7 +457,7 @@ class CrawlEngine:
         # the whole dequeue pipeline twice
         tagged_job = pool.submit(tagged.collect)
         corpus_side = self._corpus_side(sched_counts, push)
-        fetched = fetch_and_decode(scheduled, corpus_side)
+        fetched = fetch_and_decode(scheduled, corpus_side, n_fetched)
         fetch_log = fetched.select(
             "seq", "url", "host", "host_bucket", "slot_ms", "priority",
             "discover_ts", "depth", "fetch_ok", "pixels_ok", "caption_ok",
@@ -541,14 +553,13 @@ class CrawlEngine:
             )
         if n_fresh or recrawl is not None:
             # adds-delta layout shuffle, sized from the counts now in
-            # hand (~25k rows/partition, capped at the previous fixed
-            # 64): same (host_bucket, umod8) co-location keys, so a
-            # compacted hot bucket still spans multiple files, but a
-            # metadata-sized round writes 1 task instead of 64
+            # hand (stages._fanout): same (host_bucket, umod8)
+            # co-location keys, so a compacted hot bucket still spans
+            # multiple files, but a metadata-sized round writes 1 task
+            # instead of 64
             n_adds = n_fresh + (n_fetched if recrawl is not None else 0)
-            adds_parts = min(64, max(1, -(-n_adds // 25_000)))
             additions = additions.repartition(
-                adds_parts, F.col("host_bucket"),
+                stages._fanout("adds", n_adds), F.col("host_bucket"),
                 umod_long(F.col("url_hash"), 8),
             )
             jobs["adds"] = pool.submit(
@@ -703,8 +714,7 @@ class CrawlEngine:
         from math import ceil
 
         from ccrawler_spark.io.corpus_layout import (
-            HOST_PUSHDOWN_CAP, ID_PUSHDOWN_CAP, read_layout_meta,
-            split_hosts_by_width,
+            HOST_PUSHDOWN_CAP, read_layout_meta, split_hosts_by_width,
         )
 
         if self.conf.round_budget <= ID_PUSHDOWN_CAP:

@@ -23,7 +23,6 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ccrawler_spark.functions.spark_exprs import expected_caption
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -33,6 +32,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ccrawler_spark.functions.spark_exprs import expected_caption
+from ccrawler_spark.scheduler import stages
 
 DECODE_CHECK_FIELDS = [
     StructField("url", StringType()),
@@ -119,8 +121,13 @@ def _decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
         )
 
 
-def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame) -> DataFrame:
+def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame,
+                     n_rows: int | None = None) -> DataFrame:
     """Join scheduled URLs (≤ K rows) to the corpus and decode.
+
+    ``n_rows`` is the schedule's row count when the caller holds it
+    (the engine does, from its schedule-metadata collect); it sizes the
+    decode fan-out. Unknown (None) means the full fan-out.
 
     The scheduled side is tiny relative to the corpus (≤ K rows), so it
     is broadcast and the corpus is never shuffled. Spark cannot
@@ -140,12 +147,14 @@ def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame) -> DataFrame:
     )
     # AQE coalesces the join output toward 64MB partitions, which starves
     # the Arrow workers (decode is CPU-bound, ~0.5 ms/image, not
-    # IO-bound) — spread the batch across every core before the UDF
-    spark = scheduled.sparkSession
-    n_slots = spark.sparkContext.defaultParallelism * 2
+    # IO-bound) — spread the batch across the cores before the UDF, but
+    # only as far as the rows pay for the crossings (stages._fanout: a
+    # 40-image round decodes in one task, not 2 × cores)
+    dp = scheduled.sparkSession.sparkContext.defaultParallelism
+    n_tasks = 2 * dp if n_rows is None else stages._fanout("decode", n_rows, dp)
     checks = (
         hits.select("url", "bytes", "fmt", "caption_ok", "phash")
-        .repartition(n_slots)
+        .repartition(n_tasks)
         .mapInArrow(_decode_batches, StructType(DECODE_CHECK_FIELDS))
     )
     # join-back via shuffle-hash: both sides are ≤K rows, and a second

@@ -36,6 +36,28 @@ def _ord(df_or_prefix: str | None = None) -> list[Column]:
     return [F.col(c) for c in ORD_COLS]
 
 
+def _fanout(rule: str, n_rows: int, parallelism: int = 1) -> int:
+    """Partition count of a shuffle whose row count the driver already
+    holds: one task per ``rows_per_task`` rows, at least 1, at most the
+    rule's cap. A fixed fan-out costs a task per partition whatever the
+    data, so every shuffle on the bootstrap and fetch path whose input
+    size the driver knows is sized here:
+
+    - ``adds``: the round's adds-delta layout shuffle (25k rows a
+      task, at most 64 — the adds table's historical fixed width);
+    - ``bootstrap``: the snapshot-0 frontier layout shuffle (25k rows
+      a task, at most 256 — reached from 6.4M seeds, design scale);
+    - ``decode``: the Arrow decode crossing (512 images a task, at most
+      2 × ``parallelism`` — decode is CPU-bound, and a crossing has to
+      carry enough rows to pay for itself)."""
+    rows_per_task, cap = {
+        "adds": (25_000, 64),
+        "bootstrap": (25_000, 256),
+        "decode": (512, 2 * parallelism),
+    }[rule]
+    return min(cap, max(1, -(-n_rows // rows_per_task)))
+
+
 # --------------------------------------------------------------- O6: normalize
 def normalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Replace ``url_col`` with its canonical form via the batch
@@ -234,8 +256,12 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
     B) ≪ K, so it broadcasts. Group sizes are ~|hosts scheduled at
     that slot| / B — naturally balanced, no hot key.
     """
+    # both branches end in this select: the prefix-sum's join would
+    # otherwise move the SEQ_GROUP columns to the front, so the two
+    # regimes would emit the same columns in different orders
+    out_cols = [*scheduled.columns, "seq", "round"]
     if small_budget:
-        w_all = Window.partitionBy(F.lit(0)).orderBy(*SEQ_KEY)
+        w_all = Window.orderBy(*SEQ_KEY)
         return (
             scheduled.withColumn(
                 "seq",
@@ -243,19 +269,20 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
                 .cast("long"),
             )
             .withColumn("round", F.lit(round_no))
+            .select(*out_cols)
         )
     counts = scheduled.groupBy(*SEQ_GROUP).count()
     # single-partition window — intentional: its input is the AGGREGATED
     # counts side, |distinct (slot_ms, host_bucket)| ≤ per_host_k ×
     # |distinct crawl_delay values| × B rows (≈ 64k worst case at bench
-    # conf), never the K scheduled rows. partitionBy(lit(0)) is
-    # plan-identical (hashpartitioning on a constant = one partition,
-    # by construction) but keeps WindowExec's "No Partition Defined"
-    # WARN wall out of the official bench artifact (VERDICT r7 #5). If
-    # per-host crawl_delay overrides ever multiply distinct slot values
-    # past ~10^6, replace with a two-level prefix-sum (per-slot_ms
+    # conf), never the K scheduled rows. Both unpartitioned windows make
+    # WindowExec log a "No Partition Defined" WARN per plan (a
+    # partitionBy(lit(0)) does not stop it: the optimizer drops the
+    # constant key); cli.build_session raises that one logger to ERROR.
+    # If per-host crawl_delay overrides ever multiply distinct slot
+    # values past ~10^6, replace with a two-level prefix-sum (per-slot_ms
     # partial sums, then a slot_ms-level scan).
-    w_off = Window.partitionBy(F.lit(0)).orderBy(*SEQ_GROUP).rowsBetween(
+    w_off = Window.orderBy(*SEQ_GROUP).rowsBetween(
         Window.unboundedPreceding, -1
     )
     offsets = counts.select(
@@ -270,8 +297,8 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
             (F.row_number().over(w) - 1 + F.col("_goff") + F.lit(seq_offset))
             .cast("long"),
         )
-        .drop("_goff")
         .withColumn("round", F.lit(round_no))
+        .select(*out_cols)
     )
 
 

@@ -84,3 +84,13 @@ def test_small_budget_branch_identical(sched_df):
     diff = a.join(b, on="url").filter(F.col("seq") != F.col("seq_b")).count()
     assert diff == 0
     assert a.count() == b.count()
+
+
+def test_branches_emit_same_columns(sched_df):
+    """Both regimes end in the same select: a consumer that writes or
+    unions the sequenced frame sees one schema whichever regime the
+    round budget picked."""
+    big = stages.with_fetch_sequence(sched_df, 1, 0)
+    small = stages.with_fetch_sequence(sched_df, 1, 0, small_budget=True)
+    assert big.columns == small.columns
+    assert big.columns == [*sched_df.columns, "seq", "round"]

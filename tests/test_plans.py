@@ -129,10 +129,10 @@ def test_bootstrap_dedup_rides_layout_exchange(spark):
     """Bootstrap keep-one dedup must not add a second exchange: the
     layout repartition keys (host_bucket, umod(url_hash, 8)) are
     functions of the url, so the per-url window is satisfied by the
-    existing hash partitioning (engine.bootstrap relies on this)."""
-    from pyspark.sql import Window
-
-    from ccrawler_spark.functions.spark_exprs import umod_long
+    existing hash partitioning (engine.bootstrap relies on this) — at
+    the 1-partition layout of a small seed list and at the 256-partition
+    design-scale layout alike."""
+    from ccrawler_spark.scheduler.engine import layout_dedup
 
     df = spark.range(100).select(
         F.concat(F.lit("http://h"), (F.col("id") % 7).cast("string"),
@@ -140,13 +140,6 @@ def test_bootstrap_dedup_rides_layout_exchange(spark):
     ).withColumn("url_hash", F.xxhash64("url")).withColumn(
         "host_bucket", F.pmod(F.col("url_hash"), F.lit(64)).cast("int")
     )
-    keys = [F.col("host_bucket"), umod_long(F.col("url_hash"), 8)]
-    w = Window.partitionBy(*keys, "url").orderBy("url")
-    out = (
-        df.repartition(256, *keys)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    plan = plan_of(out, mode="simple")
-    assert plan.count("Exchange") == 1, plan
+    for n_parts in (1, 256):
+        plan = plan_of(layout_dedup(df, n_parts), mode="simple")
+        assert plan.count("Exchange") == 1, (n_parts, plan)

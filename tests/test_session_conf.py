@@ -1,6 +1,6 @@
 """Pin the perf-critical session configs set by build_session.
 
-Three of these are measured-performance load-bearing and would fail
+Four of these are measured-performance load-bearing and would fail
 silently if dropped in a refactor:
 
 - ``canChangeCachedPlanOutputPartitioning`` — the round-7 cached-plan
@@ -13,6 +13,13 @@ silently if dropped in a refactor:
   layout pruning would quietly stop skipping row groups).
 - ``spark.sql.shuffle.partitions`` — the scaling comparison requires
   the same initial plan at every parallelism level.
+- ``parallelPartitionDiscovery.threshold`` — at Spark's default of
+  32, every read of a 64-bucket store table lists its directories in
+  a Spark job (3 jobs and 165 tasks a round on a tiny crawl).
+
+The WindowExec logger is pinned at ERROR too: the fetch sequence's
+single-partition windows are deliberate, and their WARN otherwise
+repeats on every round.
 
 ``build_session`` ends in ``getOrCreate``, so asserting through the
 suite's shared session would test conftest, not the builder — a fresh
@@ -36,8 +43,13 @@ keys = [
     "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled",
     "spark.sql.files.maxPartitionBytes",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold",
 ]
-print("CONF=" + json.dumps({k: s.conf.get(k) for k in keys}))
+conf = {k: s.conf.get(k) for k in keys}
+jvm = s.sparkContext._jvm
+conf["WindowExec.level"] = jvm.org.apache.logging.log4j.LogManager.getLogger(
+    "org.apache.spark.sql.execution.window.WindowExec").getLevel().toString()
+print("CONF=" + json.dumps(conf))
 s.stop()
 """
 
@@ -56,3 +68,5 @@ def test_build_session_pins_perf_critical_configs():
     assert conf["spark.sql.shuffle.partitions"] == "256"
     assert conf["spark.sql.adaptive.enabled"] == "true"
     assert conf["spark.sql.files.maxPartitionBytes"] == "33554432"
+    assert conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] == "4096"
+    assert conf["WindowExec.level"] == "ERROR"

@@ -46,6 +46,20 @@ def test_crashed_round_invisible_and_gc(spark, tmp_path):
     assert store.read_frontier(0).count() == 1
 
 
+def test_write_parquet_restores_caller_job_description(spark, tmp_path):
+    """write_parquet labels its own job, then puts the caller's label
+    back rather than clearing it."""
+    sc = spark.sparkContext
+    store = SnapshotStore(spark, tmp_path, TINY)
+    df = spark.createDataFrame([(1, "a")], "url_hash long, url string")
+    sc.setJobDescription("caller: round 7")
+    try:
+        store.write_parquet(df, "frontier", "base-r0")
+        assert sc.getLocalProperty("spark.job.description") == "caller: round 7"
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_commit_is_atomic_rename(spark, tmp_path):
     store = SnapshotStore(spark, tmp_path, TINY)
     store.commit(0, {"round": 0,
