@@ -135,13 +135,14 @@ def rowgroup_histogram(layout: str, hosts: set[str] | None,
     return touched, total
 
 
-def time_fetch(spark, scheduled, corpus, reps: int = 2) -> list[float]:
+def time_fetch(spark, scheduled, corpus, n_rows: int,
+               reps: int = 2) -> list[float]:
     from ccrawler_spark.scheduler.fetch import fetch_and_decode
 
     walls = []
     for _ in range(reps):
         t0 = time.time()
-        fetch_and_decode(scheduled, corpus).count()
+        fetch_and_decode(scheduled, corpus, n_rows).count()
         walls.append(round(time.time() - t0, 2))
     return walls
 
@@ -218,8 +219,8 @@ def main():
                 else None,
                 ids=ids,
             )
-        flat_walls = time_fetch(spark, sched, flat)
-        layout_walls = time_fetch(spark, sched, pruned)
+        flat_walls = time_fetch(spark, sched, flat, n)
+        layout_walls = time_fetch(spark, sched, pruned, n)
         touched, total = rowgroup_histogram(layout, hosts, wide, wide_ids)
         if regime == "sparse":
             # r6 set-based scan (io/arrow_scan): the engine's actual
@@ -234,7 +235,7 @@ def main():
             for r in pairs:
                 h_ids.setdefault(r["host"], set()).add(r["image_id"])
             arrow = pruned_corpus_arrow(spark, layout, host_ids=h_ids)
-            arrow_walls = time_fetch(spark, sched, arrow)
+            arrow_walls = time_fetch(spark, sched, arrow, n)
             t_a, tot_a = rowgroup_histogram(layout, None, host_ids=h_ids)
             out["sparse_arrow"] = {
                 "scheduled_rows": n,

@@ -152,7 +152,7 @@ def worker(cores: int, json_path: str, fixture_dir: str | None,
         from ccrawler_spark.scheduler.fetch import fetch_and_decode
 
         sample = engine.store.read_frontier(0).limit(30_000)
-        fetch_and_decode(sample, corpus).count()
+        fetch_and_decode(sample, corpus, min(30_000, frontier_rows)).count()
         warmup_s = time.time() - t0
         rounds = []
         for r in range(1, TIMED_ROUNDS + 1):

@@ -155,8 +155,9 @@ class CrawlEngine:
         conf = self.conf
         # the seed count (an upper bound on frontier rows) sizes the
         # layout shuffle below, so a small seed list is not spread over
-        # 256 near-empty tasks for each of the snapshot-0 outputs
-        layout_parts = stages._fanout("bootstrap", seeds.count())
+        # 256 near-empty tasks for each of the snapshot-0 outputs: 25k
+        # seeds a task, up to the 256-way layout (from 6.4M seeds)
+        layout_parts = stages.fanout(seeds.count(), 25_000, 256)
         # seed sources are often single-file/single-partition; spread
         # them before the (CPU-bound) normalization UDF
         seeds = seeds.select("url").repartition(
@@ -553,13 +554,13 @@ class CrawlEngine:
             )
         if n_fresh or recrawl is not None:
             # adds-delta layout shuffle, sized from the counts now in
-            # hand (stages._fanout): same (host_bucket, umod8)
-            # co-location keys, so a compacted hot bucket still spans
-            # multiple files, but a metadata-sized round writes 1 task
-            # instead of 64
+            # hand (25k rows a task, at most 64): same (host_bucket,
+            # umod8) co-location keys, so a compacted hot bucket still
+            # spans multiple files, but a metadata-sized round writes 1
+            # task instead of 64
             n_adds = n_fresh + (n_fetched if recrawl is not None else 0)
             additions = additions.repartition(
-                stages._fanout("adds", n_adds), F.col("host_bucket"),
+                stages.fanout(n_adds, 25_000, 64), F.col("host_bucket"),
                 umod_long(F.col("url_hash"), 8),
             )
             jobs["adds"] = pool.submit(

@@ -122,12 +122,11 @@ def _decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
 
 
 def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame,
-                     n_rows: int | None = None) -> DataFrame:
+                     n_rows: int) -> DataFrame:
     """Join scheduled URLs (≤ K rows) to the corpus and decode.
 
-    ``n_rows`` is the schedule's row count when the caller holds it
-    (the engine does, from its schedule-metadata collect); it sizes the
-    decode fan-out. Unknown (None) means the full fan-out.
+    ``n_rows`` is the schedule's row count (the engine holds it from its
+    schedule-metadata collect); it sizes the decode fan-out.
 
     The scheduled side is tiny relative to the corpus (≤ K rows), so it
     is broadcast and the corpus is never shuffled. Spark cannot
@@ -148,13 +147,14 @@ def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame,
     # AQE coalesces the join output toward 64MB partitions, which starves
     # the Arrow workers (decode is CPU-bound, ~0.5 ms/image, not
     # IO-bound) — spread the batch across the cores before the UDF, but
-    # only as far as the rows pay for the crossings (stages._fanout: a
-    # 40-image round decodes in one task, not 2 × cores)
+    # only as far as the rows pay for the crossings: 512 images a task,
+    # at most 2 × cores. On 4 cores, schedules of 40 to 2,000 images
+    # ran faster than at a fixed 2 × cores in every rep
+    # (bench/bench_decode_fanout.py); wider boxes are not measured
     dp = scheduled.sparkSession.sparkContext.defaultParallelism
-    n_tasks = 2 * dp if n_rows is None else stages._fanout("decode", n_rows, dp)
     checks = (
         hits.select("url", "bytes", "fmt", "caption_ok", "phash")
-        .repartition(n_tasks)
+        .repartition(stages.fanout(n_rows, 512, 2 * dp))
         .mapInArrow(_decode_batches, StructType(DECODE_CHECK_FIELDS))
     )
     # join-back via shuffle-hash: both sides are ≤K rows, and a second

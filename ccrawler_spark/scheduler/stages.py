@@ -36,25 +36,12 @@ def _ord(df_or_prefix: str | None = None) -> list[Column]:
     return [F.col(c) for c in ORD_COLS]
 
 
-def _fanout(rule: str, n_rows: int, parallelism: int = 1) -> int:
+def fanout(n_rows: int, rows_per_task: int, cap: int) -> int:
     """Partition count of a shuffle whose row count the driver already
-    holds: one task per ``rows_per_task`` rows, at least 1, at most the
-    rule's cap. A fixed fan-out costs a task per partition whatever the
+    holds: one task per ``rows_per_task`` rows, at least 1, at most
+    ``cap``. A fixed fan-out costs a task per partition whatever the
     data, so every shuffle on the bootstrap and fetch path whose input
-    size the driver knows is sized here:
-
-    - ``adds``: the round's adds-delta layout shuffle (25k rows a
-      task, at most 64 — the adds table's historical fixed width);
-    - ``bootstrap``: the snapshot-0 frontier layout shuffle (25k rows
-      a task, at most 256 — reached from 6.4M seeds, design scale);
-    - ``decode``: the Arrow decode crossing (512 images a task, at most
-      2 × ``parallelism`` — decode is CPU-bound, and a crossing has to
-      carry enough rows to pay for itself)."""
-    rows_per_task, cap = {
-        "adds": (25_000, 64),
-        "bootstrap": (25_000, 256),
-        "decode": (512, 2 * parallelism),
-    }[rule]
+    size the driver knows is sized here."""
     return min(cap, max(1, -(-n_rows // rows_per_task)))
 
 

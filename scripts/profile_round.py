@@ -50,8 +50,8 @@ allowed = gated.filter(F.col("allowed"))
 scheduled = stages.with_fetch_sequence(
     stages.dequeue(allowed, conf), r, 0
 ).cache()
-T("dequeue+seq", lambda: scheduled.count())
-fetched = fetch_and_decode(scheduled, engine.corpus)
+n_scheduled = T("dequeue+seq", lambda: scheduled.count())
+fetched = fetch_and_decode(scheduled, engine.corpus, n_scheduled)
 log_cols = ["seq", "url", "host", "host_bucket", "slot_ms", "priority",
             "discover_ts", "depth", "fetch_ok", "pixels_ok", "caption_ok",
             "phash_ok", "psnr_db"]

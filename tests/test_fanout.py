@@ -1,6 +1,6 @@
-"""Row-count-sized fan-out (stages._fanout): every count-sized shuffle on
-the bootstrap and fetch path takes its task count from one rule table,
-and a small bootstrap no longer spreads snapshot 0 over 256 tasks."""
+"""Row-count-sized fan-out (stages.fanout): every count-sized shuffle on
+the bootstrap and fetch path takes its task count from one rule, and a
+small bootstrap no longer spreads snapshot 0 over 256 tasks."""
 
 import pathlib
 
@@ -11,22 +11,22 @@ from ccrawler_spark.scheduler.engine import CrawlEngine
 
 
 def test_fanout_rules():
-    f = stages._fanout
-    # bootstrap layout: 25k seeds a task, capped at the 256-way layout
-    assert f("bootstrap", 300) == 1
-    assert f("bootstrap", 25_000) == 1
-    assert f("bootstrap", 25_001) == 2
-    assert f("bootstrap", 10_000_000) == 256
-    # adds delta: same rows per task, capped at 64
-    assert f("adds", 0) == 1
-    assert f("adds", 58) == 1
-    assert f("adds", 100_000) == 4
-    assert f("adds", 10_000_000) == 64
-    # decode: 512 images a task, capped at 2 × parallelism
-    assert f("decode", 40, 4) == 1
-    assert f("decode", 1_500, 4) == 3
-    assert f("decode", 11_629, 4) == 8
-    assert f("decode", 11_629, 32) == 23
+    f = stages.fanout
+    # bootstrap layout (engine.bootstrap): 25k seeds a task, cap 256
+    assert f(300, 25_000, 256) == 1
+    assert f(25_000, 25_000, 256) == 1
+    assert f(25_001, 25_000, 256) == 2
+    assert f(10_000_000, 25_000, 256) == 256
+    # adds delta (engine.run_round): same rows per task, capped at 64
+    assert f(0, 25_000, 64) == 1
+    assert f(58, 25_000, 64) == 1
+    assert f(100_000, 25_000, 64) == 4
+    assert f(10_000_000, 25_000, 64) == 64
+    # decode (fetch.fetch_and_decode): 512 images a task, cap 2 × dp
+    assert f(40, 512, 8) == 1
+    assert f(1_500, 512, 8) == 3
+    assert f(11_629, 512, 8) == 8
+    assert f(11_629, 512, 64) == 23
 
 
 def test_tiny_bootstrap_one_file_per_bucket(spark, tiny_fixtures, tmp_path):

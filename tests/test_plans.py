@@ -42,7 +42,7 @@ def test_fetch_prunes_corpus_columns(spark, tiny_fixtures):
         [("u", "i", "h", 1, 0)],
         "url string, image_id string, host string, url_hash long, slot_ms int",
     )
-    plan = plan_of(fetch_and_decode(sched, corpus))
+    plan = plan_of(fetch_and_decode(sched, corpus, 1))
     read_schemas = [l for l in plan.splitlines() if "ReadSchema" in l and "bytes" in l]
     assert read_schemas, plan[:500]
     # w/h are never projected ("h:" alone would false-positive on phash:)
