@@ -606,7 +606,7 @@ def _plane_sql(plane: list[float]) -> str:
 
 
 def _srp_bucket_sql(dim: int, n_planes: int, table: int) -> str:
-    """Same bucket id as similarity.lsh_bucket_col for one table."""
+    """Same bucket id as similarity.srp_buckets for one table."""
     from ccrawler_spark.textops.similarity import _hyperplanes
 
     planes = _hyperplanes(dim, n_planes, table)

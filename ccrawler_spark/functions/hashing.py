@@ -14,7 +14,6 @@ is empty (SURVEY.md §0.1).
 
 from __future__ import annotations
 
-import numpy as np
 
 _MASK64 = 0xFFFFFFFFFFFFFFFF
 
@@ -116,15 +115,3 @@ def ushift(signed_h: int, bits: int) -> int:
     ``F.shiftrightunsigned``.  Result is a non-negative Python int."""
     return (signed_h & _MASK64) >> bits
 
-
-def xxh64_np(arr: np.ndarray, seed: int = SPARK_SEED) -> np.ndarray:
-    """Vectorized-ish XXH64 over an object array of bytes/str.
-
-    Python-loop fallback used only in fixture generation and the oracle
-    (driver-side, small scale); the engine uses JVM ``F.xxhash64``.
-    """
-    out = np.empty(len(arr), dtype=np.int64)
-    for idx, v in enumerate(arr):
-        b = v.encode("utf-8") if isinstance(v, str) else v
-        out[idx] = to_signed64(xxh64(b, seed))
-    return out

@@ -20,11 +20,10 @@ that structure physical:
 - **clustered** (sorted within files) **by (host_key, image_id)**
   where host_key is the bucket-prefixed numeric key (CLUSTER_KEYS
   comment) — parquet row-group min/max statistics on ``host_key``
-  become tight disjoint ranges, so a pushed-down ``host_key IN
-  (scheduled keys)`` filter skips every row group of unscheduled
-  hosts; within a big host's run the ``image_id`` stats are sorted
-  ranges too, so a pushed ``image_id IN (...)`` additionally skips
-  cold id ranges when the fetch batch is small;
+  become tight disjoint ranges, so the pruned reader skips every row
+  group of unscheduled hosts; within a big host's run the
+  ``image_id`` stats are sorted ranges too, so it additionally skips
+  id ranges holding none of that host's scheduled ids;
 - **small-ish row groups** (``row_group_bytes``) — the skipping
   granularity; at design scale with ~100 KB images the default 128 MB
   row group holds ~10^3 rows, which is already fine — the knob matters
@@ -32,15 +31,18 @@ that structure physical:
 
 Writing the layout is a one-time (or periodic, post-compaction) Spark
 job — exactly the kind of table-maintenance job an Iceberg warehouse
-runs anyway (rewrite_data_files with a sort order); the pruned read
-path is plain ``spark.read.parquet`` + pushable filters, nothing
-custom, so Catalyst/Parquet do the skipping.
+runs anyway (rewrite_data_files with a sort order). The pruned read is
+the set-based Arrow scan in io/arrow_scan; a Spark parquet ``IN``
+pushdown of the same keys becomes an ``Or`` tree that overflows the
+JVM stack (docs/SCALING.md rounds 5-6 and "One pruned corpus reader").
 
 Dense-schedule regime (the bench conf fetches ~20% of the corpus per
-round, touching every host): the filters select everything, parquet
-keeps every row group, and the scan cost equals the flat layout's —
-the pruning is never a regression. Measured numbers + the row-group
-touch histogram live in docs/SCALING.md (finding 8, updated r4).
+round, touching every host): the schedule is past the Arrow scan's
+cap, the engine reads the layout pruned to the scheduled
+``host_bucket`` partitions, every row group is kept, and the scan cost
+equals the flat layout's — the pruning is never a regression. Measured
+numbers + the row-group touch histogram live in docs/SCALING.md
+(finding 8, updated r4).
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ from __future__ import annotations
 import json
 import pathlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ccrawler_spark.functions.spark_exprs import host_bucket
@@ -77,13 +79,6 @@ META_FILE = "_layout_meta.json"
 # lexicographic order IS its numeric order — within a host's sorted run
 # the id stats are tight.
 CLUSTER_KEYS = ["host_bucket", "host_key.bp2", "image_id"]
-
-# pushdown caps (physical planning only — results are identical with or
-# without pruning, so these are module constants, not CrawlConf fields):
-# above these cardinalities the IN-literal lists stop paying for their
-# plan-side cost and the engine falls back to bucket-only pruning
-HOST_PUSHDOWN_CAP = 1024
-ID_PUSHDOWN_CAP = 4096
 
 # sandbox default: bench corpus rows are ~400 B, so 2 MiB row groups
 # ≈ 5k rows — fine enough for host-level skipping to show. At design
@@ -163,95 +158,7 @@ def write_corpus_layout(
         for f in df.schema.fields if f.name != "host_bucket"
     ])
     write_layout_meta(path, buckets, row_group_bytes,
-                      wide_host_keys_from_footers(path),
                       data_schema=_json.loads(data_schema.json()))
-
-
-WIDE_MIN_GROUPS = 8  # a host whose sorted run spans ≥ this many row
-# groups is "wide": its groups' host_key stats are [k, k] and only an
-# image_id filter can skip inside the run. The layout records wide
-# hosts' keys in the metadata sidecar (bounded: ≤ total_groups / 8
-# entries, i.e. only the Zipf head) so the reader can plan a two-scan
-# split — narrow hosts host-pruned, wide hosts host+id-pruned — when
-# the full schedule's id set exceeds ID_PUSHDOWN_CAP but the wide
-# hosts' share fits.
-
-
-def wide_host_keys_from_footers(path: str) -> list[int]:
-    """Wide-host keys from the layout's parquet footers: keys that are
-    both min and max of ≥ WIDE_MIN_GROUPS row groups (single-host
-    groups — the inside of a sorted run). Driver-side pyarrow pass
-    here (≈0.5 s per 10⁴ groups); at warehouse scale this is a
-    distributed metadata job over the manifest, run by the same
-    maintenance job that writes the layout."""
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-
-    runs: Counter = Counter()
-    for pf in pathlib.Path(path).glob("host_bucket=*/*.parquet"):
-        md = pq.ParquetFile(pf).metadata
-        if md.num_row_groups == 0:
-            continue  # zero-row-group file (empty write): nothing to scan
-        ki = next(
-            i for i in range(md.row_group(0).num_columns)
-            if md.row_group(0).column(i).path_in_schema == "host_key"
-        )
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ki).statistics
-            # absent stats (writer with stats disabled) degrade to "no
-            # wide hosts seen here", never a crash (ADVICE r5)
-            if st is None or st.min is None or st.max is None:
-                continue
-            if st.min == st.max:
-                runs[st.min] += 1
-    return sorted(k for k, c in runs.items() if c >= WIDE_MIN_GROUPS)
-
-
-def split_hosts_by_width(meta: dict, hosts) -> tuple[set, set]:
-    """(narrow, wide) partition of scheduled hosts against the layout
-    metadata's wide-host key list."""
-    wide_keys = set(meta.get("wide_host_keys", []))
-    b = int(meta["buckets"])
-    wide = {h for h in hosts if host_key_py(h, b) in wide_keys}
-    return set(hosts) - wide, wide
-
-
-def pruned_corpus_split(
-    spark: SparkSession,
-    path: str,
-    narrow_hosts,
-    wide_hosts,
-    wide_ids,
-    buckets_of,
-) -> DataFrame:
-    """Two-scan split pruning (r5): narrow hosts read with host_key
-    pruning only; wide hosts additionally push their scheduled
-    image_ids (a bounded set — ≤ |wide| × per_host_k), skipping row
-    groups INSIDE their sorted runs via the tight per-group id stats.
-
-    Soundness: the scans partition the scheduled hosts, so their union
-    covers every scheduled corpus row; a wide-host row with an
-    unscheduled id is dropped, and it can only have been needed if two
-    different URLs collided in the 64-bit image_id — the same
-    collision assumption the fetch join itself already makes.
-    ``buckets_of(host)`` maps a host to its partition value (pure,
-    driver-side)."""
-    a = pruned_corpus(
-        spark, path,
-        buckets=sorted({buckets_of(h) for h in narrow_hosts}),
-        hosts=narrow_hosts,
-    ) if narrow_hosts else None
-    b = pruned_corpus(
-        spark, path,
-        buckets=sorted({buckets_of(h) for h in wide_hosts}),
-        hosts=wide_hosts, ids=wide_ids,
-    ) if wide_hosts else None
-    if a is None:
-        return b
-    if b is None:
-        return a
-    return a.unionByName(b)
 
 
 def host_key_py(host: str, buckets: int) -> int:
@@ -268,16 +175,15 @@ def host_key_py(host: str, buckets: int) -> int:
 
 def write_layout_meta(path: str, buckets: int,
                       row_group_bytes: int | None,
-                      wide_host_keys: list[int] | None = None,
                       data_schema: dict | None = None) -> None:
     """``data_schema`` (Spark StructType JSON of the data columns, i.e.
     everything but the ``host_bucket`` partition column) lets the arrow
     reader build its output schema without a per-call driver-side
     parquet footer read (VERDICT r6 #4); layouts written before this
-    field fall back to the footer."""
+    field fall back to the footer. Readers ignore keys they do not
+    know, such as the ``wide_host_keys`` list older layouts carry."""
     meta = {"buckets": int(buckets), "cluster_keys": CLUSTER_KEYS,
-            "row_group_bytes": row_group_bytes,
-            "wide_host_keys": [int(k) for k in (wide_host_keys or [])]}
+            "row_group_bytes": row_group_bytes}
     if data_schema is not None:
         meta["data_schema"] = data_schema
     (pathlib.Path(path) / META_FILE).write_text(json.dumps(meta))
@@ -293,10 +199,11 @@ def read_layout_meta(path: str) -> dict | None:
 
 def assert_layout_compatible(path: str, host_buckets: int) -> None:
     """Fail loudly before any round runs if the layout's bucketing does
-    not match the engine conf: a mismatched ``host_bucket`` partition
-    filter in :func:`pruned_corpus` would silently drop scheduled corpus
-    rows — fetches come back ``fetch_ok=false`` and look like legitimate
-    misses (ADVICE r4, medium)."""
+    not match the engine conf: a dense round reads the layout filtered
+    to the ``host_bucket`` values the conf assigned its schedule, so a
+    mismatch would silently drop scheduled corpus rows — fetches come
+    back ``fetch_ok=false`` and look like legitimate misses (ADVICE r4,
+    medium)."""
     meta = read_layout_meta(path)
     if meta is None:
         raise ValueError(
@@ -316,48 +223,8 @@ def assert_layout_compatible(path: str, host_buckets: int) -> None:
     if meta.get("cluster_keys") != CLUSTER_KEYS:
         raise ValueError(
             f"corpus layout at {path} is clustered on "
-            f"{meta.get('cluster_keys')} but this reader pushes filters "
-            f"against {CLUSTER_KEYS}: rewrite the layout (the host_key "
-            "pushdown column would be missing or unsorted)."
+            f"{meta.get('cluster_keys')} but the pruned reader skips row "
+            f"groups by {CLUSTER_KEYS}: rewrite the layout (the host_key "
+            "column would be missing or unsorted)."
         )
 
-
-def pruned_corpus(
-    spark: SparkSession,
-    path: str,
-    buckets=None,
-    hosts=None,
-    ids=None,
-) -> DataFrame:
-    """Layout scan with whatever schedule structure the caller has:
-    bucket partition pruning + pushed-down host / image_id IN filters
-    (row-group skipping via the layout's sorted min/max stats). All
-    three prunings are sound for the fetch join — a corpus row outside
-    the scheduled (bucket, host, id) sets cannot match any scheduled
-    row — so results are identical to the flat scan."""
-    df = spark.read.parquet(path)
-    if buckets is not None:
-        df = df.filter(F.col("host_bucket").isin([int(b) for b in buckets]))
-    if hosts is not None:
-        # push against the bucket-prefixed numeric cluster key (see
-        # CLUSTER_KEYS); host_key_py is bit-identical to the writer's
-        # JVM expression (xxhash64 twin pinned by tests/test_hashing).
-        # A hash collision can only ADMIT extra rows (the fetch join
-        # still keys on image_id), never drop one — pruning stays
-        # sound. The bucket count comes from the layout's own metadata
-        # sidecar, so a conf mismatch cannot silently compute wrong
-        # keys (the engine separately asserts it equals its conf).
-        meta = read_layout_meta(path)
-        if meta is None:
-            raise ValueError(
-                f"corpus layout at {path} has no {META_FILE}: cannot "
-                "compute host_key pushdown values without the bucket "
-                "count it was written with"
-            )
-        b = int(meta["buckets"])
-        df = df.filter(F.col("host_key").isin(
-            sorted(host_key_py(h, b) for h in hosts)
-        ))
-    if ids is not None:
-        df = df.filter(F.col("image_id").isin(sorted(ids)))
-    return df

@@ -24,7 +24,6 @@ from pyspark.sql.types import (
 from ccrawler_spark.bloom import filter as bf
 from ccrawler_spark.conf import CrawlConf
 from ccrawler_spark.functions.spark_exprs import umod_long
-from ccrawler_spark.io.corpus_layout import ID_PUSHDOWN_CAP
 from ccrawler_spark.io.snapshot import SnapshotStore
 from ccrawler_spark.scheduler import stages
 from ccrawler_spark.scheduler.fetch import fetch_and_decode
@@ -45,12 +44,13 @@ BLOOM_SCHEMA = StructType([
     StructField("bits", BinaryType()),
 ])
 
-# below this many candidates (proxied by the previous round's enqueued
-# count) the bloom pre-filter's fixed cogroup + Arrow-crossing cost
-# exceeds what it saves the exact anti-join — skip the probe (results
-# identical; see run_round). It is the small-schedule regime bound: the
-# same "metadata-sized round" cutoff used elsewhere.
-BLOOM_PROBE_MIN_PREV_ENQUEUED = ID_PUSHDOWN_CAP
+# the small-round regime bound, shared by two physical choices (results
+# identical either way; see run_round): a round_budget at most this
+# large ranks the fetch sequence in one window, and below this many
+# candidates (proxied by the previous round's enqueued count) the bloom
+# pre-filter's fixed cogroup + Arrow-crossing cost exceeds what it saves
+# the exact anti-join, so the probe is skipped
+SMALL_ROUND_ROWS = 4096
 
 
 def layout_dedup(rows: DataFrame, n_parts: int) -> DataFrame:
@@ -114,9 +114,10 @@ class CrawlEngine:
         self._round_bcs: list = []
         # optional bucket-partitioned / (host, image_id)-clustered corpus
         # (io/corpus_layout): the fetch join prunes its scan to the
-        # scheduled buckets + (when the schedule is host-sparse) pushed
-        # host/id filters, instead of scanning the whole payload column
-        # every round. Purely physical — fetch results are identical.
+        # scheduled rows' row groups (io/arrow_scan) when the schedule
+        # is sparse, else to the scheduled buckets, instead of scanning
+        # the whole payload column every round. Purely physical — fetch
+        # results are identical.
         # Fail loudly up front if the layout's bucketing doesn't match
         # conf.host_buckets: a mismatched partition filter would silently
         # drop scheduled rows (ADVICE r4, medium).
@@ -127,12 +128,6 @@ class CrawlEngine:
 
             assert_layout_compatible(corpus_layout, conf.host_buckets)
         self.corpus_layout = corpus_layout
-        # set-based pushdown bound (io/arrow_scan) — an engine attribute
-        # (not CrawlConf: physical planning only, results identical) so
-        # tests can pin a regime; 0 disables the arrow scan entirely
-        from ccrawler_spark.io.arrow_scan import ARROW_PUSHDOWN_CAP
-
-        self.arrow_pushdown_cap = ARROW_PUSHDOWN_CAP
         self.hosts = hosts
         self.H = hosts.count()
         self.robots_active = stages.robots_active(robots, conf.robots_version).cache()
@@ -359,16 +354,16 @@ class CrawlEngine:
             else:
                 denied = sched0.select(*FRONTIER_COLS).limit(0)
         # 5. fetch sequence (cumulative seq across rounds). Small-budget
-        # regime (same static bound as the metadata collect): identical
-        # seq from one single-partition window instead of the 3-stage
-        # group prefix-sum — see stages.with_fetch_sequence.
+        # regime (round_budget ≤ SMALL_ROUND_ROWS): identical seq from
+        # one single-partition window instead of the 3-stage group
+        # prefix-sum — see stages.with_fetch_sequence.
         seq_offset = prev["counters"]["fetched_total"]
         scheduled = stages.with_fetch_sequence(
             sched0, r, seq_offset,
-            small_budget=conf.round_budget <= ID_PUSHDOWN_CAP,
+            small_budget=conf.round_budget <= SMALL_ROUND_ROWS,
         ).cache()
 
-        # schedule-metadata collect (lineage counts + layout pushdown
+        # schedule-metadata collect (lineage counts + Arrow-scan
         # keys, one job — see _sched_metadata) on a pool thread: its
         # first action materializes the scheduled cache while the MAIN
         # thread builds the round's remaining plans. Plan construction
@@ -412,7 +407,7 @@ class CrawlEngine:
         # count is the same driver-side volume proxy the zero/nonzero
         # skip already used; exactness is unaffected either way (the
         # anti-join is the gate, the bloom a prefilter).
-        use_bloom = prev_enqueued > BLOOM_PROBE_MIN_PREV_ENQUEUED
+        use_bloom = prev_enqueued > SMALL_ROUND_ROWS
         fresh = seen_dedup(
             candidates, seen, conf, bloom if use_bloom else None
         )
@@ -448,16 +443,16 @@ class CrawlEngine:
         ).groupBy("_side", "host_bucket").count()
 
         # 6. fetch join + decode invariants (Arrow crossing), needing
-        # the schedule metadata (pruned-corpus pushdown plan) — joined
+        # the schedule metadata (the corpus side's plan) — joined
         # here, after the main thread finished the discovery plans
-        sched_counts, push = sched_meta.result()
+        sched_counts, host_ids = sched_meta.result()
         n_fetched = sum(sched_counts.values())
         # submit the fused counts job only now that the scheduled cache
         # is materialized: the discovery path scans `scheduled`, and an
         # earlier submission would race the metadata job into computing
         # the whole dequeue pipeline twice
         tagged_job = pool.submit(tagged.collect)
-        corpus_side = self._corpus_side(sched_counts, push)
+        corpus_side = self._corpus_side(sched_counts, host_ids)
         fetched = fetch_and_decode(scheduled, corpus_side, n_fetched)
         fetch_log = fetched.select(
             "seq", "url", "host", "host_bucket", "slot_ms", "priority",
@@ -669,163 +664,61 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- helpers
     def _sched_metadata(self, scheduled: DataFrame):
-        """One collect for everything the driver needs off the cached
-        scheduled frame: per-bucket lineage counts, plus the layout
-        pushdown keys (io/corpus_layout host / image_id IN filters)
-        when the schedule is sparse enough for them to pay.
+        """Everything the driver needs off the cached scheduled frame:
+        per-bucket lineage counts, plus the schedule's (host → its
+        image_ids) pairing for the Arrow corpus reader (io/arrow_scan)
+        when there is a layout and the schedule has at most
+        ``ARROW_PUSHDOWN_CAP`` rows.
 
-        Small-round regime (round_budget ≤ ID_PUSHDOWN_CAP): the
-        schedule is statically bounded at ≤ cap rows, so ONE collect of
-        (host_bucket, host, image_id) yields counts AND pushdown keys —
-        folding what used to be a groupBy-count job plus a separate
-        key collect into a single job (VERDICT r4 #6). Large-round
-        regime: groupBy-count first (counts are B ≤ 64 rows), then the
-        host pushdown gated by a free lower bound — each host
-        contributes ≤ per_host_k scheduled rows, so distinct hosts ≥
-        n / per_host_k; when that already exceeds the cap (the dense
-        regime, e.g. the bench conf) no extra job runs at all. All
-        collects here are schedule METADATA (≤ cap rows off the cached
-        frame) — same class as the intentional lineage collect, not
-        data movement.
+        A round_budget within the cap bounds the schedule statically,
+        so ONE collect of (host_bucket, host, image_id) yields counts
+        AND pairing — one job where a groupBy-count plus a key collect
+        would be two (VERDICT r4 #6). Larger budgets run the
+        groupBy-count first (B ≤ 64 rows) and collect the pairs only
+        when that count fits the cap. Every collect here is schedule
+        METADATA (≤ cap rows ≈ 2 MB off the cached frame), not data
+        movement.
 
-        When the full id set exceeds ID_PUSHDOWN_CAP but fits
-        ARROW_PUSHDOWN_CAP (128k — r6), the plan switches to the
-        SET-BASED ARROW SCAN (io/arrow_scan): bisect/hash-set
-        membership instead of the JVM's Or-tree filter, so host AND id
-        row-group skipping both survive far past the JVM cap — this
-        covers the design-scale sweet spot (K ≈ 10⁵). The id collect is
-        bounded by the arrow cap (≤ 128k rows ≈ 2 MB — still schedule
-        metadata, the documented bounded-collect class, just a larger
-        bound than the ≤ 4096-row JVM one).
-
-        Beyond the arrow cap, the layout metadata's wide-host list
-        enables a TWO-SCAN SPLIT (r5): narrow hosts keep host-only
-        pruning, and the wide (Zipf-head) hosts — whose sorted runs
-        span many row groups that a host filter alone cannot skip
-        inside — push their own scheduled ids, a set bounded by
-        |wide| × per_host_k (a free driver-side bound, checked before
-        the extra bounded collect runs).
-
-        Returns (sched_counts, push) where push is None (no layout /
-        no pushdown pays) or a dict:
-          {"hosts": set|None, "ids": set|None}              — one scan
-          {"hosts": set, "ids": set, "arrow": True}         — set-based
-          {"narrow": set, "wide": set, "wide_ids": set}     — split"""
+        Returns (sched_counts, host_ids) with host_ids None when the
+        round takes the flat corpus or the bucket-pruned layout read."""
         from collections import Counter
-        from math import ceil
 
-        from ccrawler_spark.io.corpus_layout import (
-            HOST_PUSHDOWN_CAP, read_layout_meta, split_hosts_by_width,
-        )
+        from ccrawler_spark.io import arrow_scan
 
-        if self.conf.round_budget <= ID_PUSHDOWN_CAP:
+        # read at call time, so a test can shrink the cap
+        cap = arrow_scan.ARROW_PUSHDOWN_CAP
+        if self.conf.round_budget <= cap:
             rows = scheduled.select("host_bucket", "host", "image_id").collect()
             counts = dict(Counter(int(r["host_bucket"]) for r in rows))
-            if self.corpus_layout is None or not rows:
-                return counts, None
-            hosts = {r["host"] for r in rows}
-            ids = {r["image_id"] for r in rows}
-            if len(hosts) > HOST_PUSHDOWN_CAP:
-                # too many distinct hosts for the JVM Or-tree filter;
-                # the set-based scan has no such limit. Gate on the ID
-                # count — the cap bounds the broadcast id-set size
-                # (ADVICE r6: len(hosts) only coincided with it while
-                # round_budget ≤ ID_PUSHDOWN_CAP implied ids ≤ 4096)
-                if len(ids) <= self.arrow_pushdown_cap:
-                    return counts, {"hosts": hosts, "ids": ids,
-                                    "host_ids": _pair_ids(rows),
-                                    "arrow": True}
-                hosts = None
-            return counts, {"hosts": hosts, "ids": ids}
+        else:
+            counts = self._bucket_counts(scheduled)
+            n = sum(counts.values())
+            rows = (
+                scheduled.select("host", "image_id").collect()
+                if self.corpus_layout is not None and 0 < n <= cap else None
+            )
+        if self.corpus_layout is None or not rows:
+            return counts, None
+        return counts, _pair_ids(rows)
 
-        counts = self._bucket_counts(scheduled)
-        if self.corpus_layout is None:
-            return counts, None
-        n = sum(counts.values())
-        if not n:
-            return counts, None
-        hosts = ids = None
-        if ceil(n / self.conf.per_host_k) <= HOST_PUSHDOWN_CAP:
-            if n <= ID_PUSHDOWN_CAP:
-                rows = scheduled.select("host", "image_id").collect()
-                hosts = {r["host"] for r in rows}
-                ids = {r["image_id"] for r in rows}
-            elif n > self.arrow_pushdown_cap:
-                rows = (
-                    scheduled.select("host").distinct()
-                    .limit(HOST_PUSHDOWN_CAP + 1).collect()
-                )
-                if len(rows) <= HOST_PUSHDOWN_CAP:
-                    hosts = {r["host"] for r in rows}
-            if hosts is not None and len(hosts) > HOST_PUSHDOWN_CAP:
-                hosts = None
-        if n > ID_PUSHDOWN_CAP and n <= self.arrow_pushdown_cap:
-            # set-based scan regime: collect the full (host, id)
-            # schedule metadata (bounded by the arrow cap) and push
-            # the HOST-SCOPED pairing through the bisect reader — the
-            # per-host id sets keep row-group skipping effective as
-            # the global id count grows (arrow_scan docstring, r6)
-            rows = scheduled.select("host", "image_id").collect()
-            return counts, {
-                "hosts": {r["host"] for r in rows},
-                "ids": {r["image_id"] for r in rows},
-                "host_ids": _pair_ids(rows),
-                "arrow": True,
-            }
-        if hosts is None:
-            return counts, None
-        if ids is not None:
-            return counts, {"hosts": hosts, "ids": ids}
-        # host-only pushdown: try the wide-host split. The id collect
-        # is gated by the free bound |wide| × per_host_k ≤ cap, so it
-        # never runs unbounded; it reads the cached scheduled frame
-        # (schedule metadata, not data movement).
-        meta = read_layout_meta(self.corpus_layout)
-        if meta and meta.get("wide_host_keys"):
-            narrow, wide = split_hosts_by_width(meta, hosts)
-            if wide and len(wide) * self.conf.per_host_k <= ID_PUSHDOWN_CAP:
-                rows = (
-                    scheduled.filter(F.col("host").isin(sorted(wide)))
-                    .select("image_id").collect()
-                )
-                return counts, {
-                    "narrow": narrow, "wide": wide,
-                    "wide_ids": {r["image_id"] for r in rows},
-                }
-        return counts, {"hosts": hosts, "ids": None}
-
-    def _corpus_side(self, sched_counts: dict[int, int], push):
-        """Fetch-join corpus frame for this round: the flat corpus, a
-        single pruned layout scan, or the two-scan wide-host split
-        (see _sched_metadata). Purely physical — identical results."""
+    def _corpus_side(self, sched_counts: dict[int, int], host_ids):
+        """Fetch-join corpus frame for this round: the flat corpus
+        without a layout; the Arrow set scan when the schedule's pairing
+        was collected (see _sched_metadata); otherwise — a dense round,
+        which touches most row groups of its buckets anyway — the layout
+        pruned to the scheduled host_bucket partitions. Purely physical:
+        identical results."""
         if self.corpus_layout is None:
             return self.corpus
-        from ccrawler_spark.functions.hashing import umod, xxhash64_str
-        from ccrawler_spark.io.arrow_scan import pruned_corpus_arrow
-        from ccrawler_spark.io.corpus_layout import (
-            pruned_corpus, pruned_corpus_split,
-        )
+        if host_ids is not None:
+            from ccrawler_spark.io.arrow_scan import pruned_corpus_arrow
 
-        if push is not None and push.get("arrow"):
             return pruned_corpus_arrow(
-                self.spark, self.corpus_layout,
-                host_ids=push["host_ids"],
+                self.spark, self.corpus_layout, host_ids,
                 track=self._round_bcs,
             )
-        if push is not None and "narrow" in push:
-            return pruned_corpus_split(
-                self.spark, self.corpus_layout,
-                narrow_hosts=push["narrow"], wide_hosts=push["wide"],
-                wide_ids=push["wide_ids"],
-                buckets_of=lambda h: umod(
-                    xxhash64_str(h), self.conf.host_buckets
-                ),
-            )
-        return pruned_corpus(
-            self.spark, self.corpus_layout,
-            buckets=sorted(sched_counts),
-            hosts=push["hosts"] if push else None,
-            ids=push["ids"] if push else None,
+        return self.spark.read.parquet(self.corpus_layout).filter(
+            F.col("host_bucket").isin(sorted(sched_counts))
         )
 
     def _bucket_counts(self, df: DataFrame) -> dict[int, int]:

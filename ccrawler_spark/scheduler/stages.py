@@ -223,8 +223,8 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
     branch ranks the whole schedule in a single-partition window over
     the SAME total key, producing identical seq values (row_number
     over a total order ≡ group prefix-sum over its prefix groups);
-    the engine gates it on conf.round_budget ≤ ID_PUSHDOWN_CAP, the
-    same static bound the schedule-metadata collect uses.
+    the engine gates it on conf.round_budget ≤ its SMALL_ROUND_ROWS
+    bound (4,096 rows).
 
     Distributed global ranking as a deterministic group prefix-sum:
     rows are grouped on (slot_ms, host_bucket) — a *prefix* of the

@@ -4,9 +4,9 @@ Opaque ``binary`` payloads + typed metadata, processed via
 ``mapInPandas``/``mapInArrow`` — the Spark-side plumbing (schema,
 batching, partitioning) is real and tested. Image decode/resize/
 feature-extraction are REAL here (the engine's own numpy codecs decode
-the corpus ``bytes`` column); audio decode and video frame-sampling
-are stubs behind clearly-marked NotImplementedError (no libsndfile/
-ffmpeg in this environment) with the batch plumbing in place.
+the corpus ``bytes`` column). Audio and video need decoders
+(libsndfile/ffmpeg) this package does not ship, so it has no audio or
+video operators.
 """
 
 from __future__ import annotations
@@ -105,33 +105,3 @@ def image_resize(corpus: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFra
 
     return corpus.select("image_id", "bytes", "fmt").mapInPandas(run, schema)
 
-
-def audio_features(audio: DataFrame) -> DataFrame:
-    """STUB: audio decode requires libsndfile/ffmpeg — absent in this
-    environment. The mapInPandas plumbing (schema, batch shape) is the
-    real contract; the decode raises until a codec is available."""
-    schema = "clip_id string, duration_s double, rms double"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError(
-            "audio decode needs libsndfile/ffmpeg (not in this container); "
-            "plug a decoder into textops/multimodal.py::audio_features"
-        )
-        yield  # pragma: no cover
-
-    return audio.select("clip_id", "bytes").mapInPandas(run, schema)
-
-
-def video_frame_sample(video: DataFrame, every_n: int = 30) -> DataFrame:
-    """STUB: video frame sampling requires ffmpeg — absent here. Schema
-    and batching are the real contract."""
-    schema = "video_id string, frame_no int, frame binary"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError(
-            "video decode needs ffmpeg (not in this container); "
-            "plug a demuxer into textops/multimodal.py::video_frame_sample"
-        )
-        yield  # pragma: no cover
-
-    return video.select("video_id", "bytes").mapInPandas(run, schema)

@@ -65,19 +65,6 @@ def _hyperplanes(dim: int, n_planes: int, table: int = 0) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket_col(vec_col, planes: list[list[float]]):
-    """Sign-random-projection bucket id: bit p = 1 iff v · plane_p > 0."""
-    bits = [
-        F.when(_dot(vec_col, F.array(*[F.lit(x) for x in plane])) > 0,
-               F.lit(1 << p)).otherwise(F.lit(0))
-        for p, plane in enumerate(planes)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("int")
-
-
 def ann_topk_lsh(embeddings: DataFrame, query_vec: list[float], k: int = 10,
                  n_planes: int = 8, id_col: str = "vec_id") -> DataFrame:
     """Approximate top-k: score only vectors whose SRP bucket is within
@@ -88,15 +75,16 @@ def ann_topk_lsh(embeddings: DataFrame, query_vec: list[float], k: int = 10,
     Round-8 shape (guide §4.2, the same migration as ``srp_buckets`` /
     ``assign_cells``): buckets come from one vectorized Arrow batch and
     the ring members join back as a broadcast id set — exactly
-    ``ann_topk_ivf``'s plan. The previous inline ``lsh_bucket_col``
-    filter was n_planes × dim interpreted HOF flops per row, and
-    because it was an inlinable scalar expression the filter pushed
-    down onto the (single-split at bench scale) parquet scan —
-    serializing the whole bucket computation onto one task. The Arrow
-    pass accumulates each plane dot in component order (sequential
-    left-to-right float64 sum — the ``srp_buckets`` bit-identity
-    argument), so the bucket bits, ring membership, and therefore the
-    result rows are identical; the value-hash gate pins it."""
+    ``ann_topk_ivf``'s plan. The previous plan filtered on an inline
+    bucket expression (one ``_dot`` per plane): n_planes × dim
+    interpreted HOF flops per row, and because it was an inlinable
+    scalar expression the filter pushed down onto the (single-split at
+    bench scale) parquet scan — serializing the whole bucket
+    computation onto one task. The Arrow pass accumulates each plane
+    dot in component order (sequential left-to-right float64 sum — the
+    ``srp_buckets`` bit-identity argument), so the bucket bits, ring
+    membership, and therefore the result rows are identical; the
+    value-hash gate pins it."""
     dim = len(query_vec)
     planes = _hyperplanes(dim, n_planes)
     qbits = 0
@@ -228,10 +216,13 @@ def ivf_centroids(dim: int, n_cells: int = 64) -> list[list[float]]:
     return cells
 
 
-def ivf_assign(embeddings: DataFrame, dim: int, n_cells: int = 64,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(id, cell): nearest coarse centroid by dot product (centroids are
-    unit-norm, so argmax dot = argmax cosine); ties → smallest cell id.
+def assign_cells(embeddings: DataFrame, centroids: list[list[float]],
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
+    """(id, cell): nearest centroid by dot product for an arbitrary
+    centroid table — the hash-derived ``ivf_centroids`` baseline or the
+    trained ``ivf_train_kmeans`` ones (centroids are unit-norm, so
+    argmax dot = argmax cosine); ties → smallest cell id.
 
     Vectorized Arrow path (``mapInPandas``): the previous dim-table
     plan (posexplode ⋈ broadcast centroid table ⋈ groupBy) pushed
@@ -252,18 +243,6 @@ def ivf_assign(embeddings: DataFrame, dim: int, n_cells: int = 64,
     DuckDB's ``list_position(dl, list_max(dl))`` ties-to-smallest-cell
     rule. The float32 input is cast to float64 BEFORE the multiply
     (DOUBLE[] twin semantics, see ``_dot``)."""
-    return assign_cells(
-        embeddings, ivf_centroids(dim, n_cells), id_col, vec_col
-    )
-
-
-def assign_cells(embeddings: DataFrame, centroids: list[list[float]],
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
-    """(id, cell) for an arbitrary centroid table — the shared
-    assignment core of ``ivf_assign`` (hash-derived baseline) and
-    ``ivf_train_kmeans`` (trained centroids). See ``ivf_assign`` for
-    the bit-identity argument."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     dim = len(centroids[0])

@@ -51,7 +51,6 @@ def build_logged_session(cores: int):
                 "true")
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
         .config("spark.driver.memory", "16g")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.eventLog.enabled", "true")

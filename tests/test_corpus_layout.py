@@ -1,8 +1,10 @@
-"""Fetch-path corpus layout (io/corpus_layout): engine parity with the
-flat corpus, plan-level pushdown proof, and metadata-level row-group
-skipping proof."""
+"""Fetch-path corpus layout (io/corpus_layout) and its one pruned
+reader (io/arrow_scan): engine parity with the flat corpus, plan-level
+partition-pruning proof, and metadata-level row-group skipping proof."""
 
 import pathlib
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -33,11 +35,33 @@ def _sorted_rows(df):
     return [tuple(r) for r in df.orderBy(*df.columns).collect()]
 
 
-def test_engine_parity_layout_on_off(spark, tiny_fixtures, layout_dir):
+@pytest.fixture
+def arrow_calls(monkeypatch):
+    """The layout path of each call of the Arrow corpus reader (the
+    engine imports the reader at call time, so patching the module
+    attribute reaches it)."""
+    from ccrawler_spark.io import arrow_scan
+
+    calls = []
+    real = arrow_scan.pruned_corpus_arrow
+
+    def counted(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(arrow_scan, "pruned_corpus_arrow", counted)
+    return calls
+
+
+def test_engine_parity_layout_on_off(spark, tiny_fixtures, layout_dir,
+                                     arrow_calls):
     """The pruned fetch path is purely physical: fetch_log and frontier
-    must be byte-identical with and without the layout."""
+    must be byte-identical with and without the layout — and with the
+    layout every round's corpus side is the Arrow reader."""
     s_flat = _run(spark, tiny_fixtures)
+    assert arrow_calls == []
     s_lay = _run(spark, tiny_fixtures, corpus_layout=layout_dir)
+    assert arrow_calls == [layout_dir] * 3
     n = s_flat.latest()
     assert s_lay.latest() == n
     assert _sorted_rows(s_flat.read_fetch_log(n)) == _sorted_rows(
@@ -48,49 +72,18 @@ def test_engine_parity_layout_on_off(spark, tiny_fixtures, layout_dir):
     )
 
 
-def test_pruned_scan_pushes_filters(spark, layout_dir):
-    """Plan proof: host_bucket hits PartitionFilters (whole directories
-    pruned), host_key/image_id IN lists hit PushedFilters (row-group
-    skipping via the sorted layout's min/max stats)."""
-    from ccrawler_spark.io.corpus_layout import pruned_corpus
+def test_pruned_scan_pushes_filters(spark, tiny_fixtures, layout_dir):
+    """Plan proof for a schedule above the Arrow scan's cap: the
+    engine reads the layout with the scheduled host_bucket values in
+    PartitionFilters, so unscheduled bucket directories are pruned."""
+    from ccrawler_spark.scheduler.cli import make_engine
 
-    spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
-    hosts = [f"h{i}.example" for i in range(12)]  # > default threshold 10
-    df = pruned_corpus(spark, layout_dir, buckets=[1, 2, 3], hosts=hosts)
+    out = tempfile.mkdtemp(prefix="layout-dense-")
+    engine, _ = make_engine(spark, str(tiny_fixtures), out, size="tiny",
+                            corpus_layout=layout_dir)
+    df = engine._corpus_side({1: 10, 2: 10, 3: 10}, None)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [host_bucket" in plan
-    assert "In(host_key" in plan.split("PushedFilters")[1]
-    # the id pushdown, on its own scan (the plan string truncates the
-    # filter list, so both INs are not visible in one dump)
-    ids = [f"{i:016x}" for i in range(12)]
-    df2 = pruned_corpus(spark, layout_dir, ids=ids)
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert "In(image_id" in plan2.split("PushedFilters")[1]
-
-
-def test_pruned_values_match_flat(spark, tiny_fixtures, layout_dir):
-    """Value proof: pruning by (bucket, host) returns exactly the flat
-    corpus rows of those hosts."""
-    from ccrawler_spark.functions.hashing import umod, xxhash64_str
-    from ccrawler_spark.fixtures.gen import universe_urls_df
-    from ccrawler_spark.io.corpus_layout import pruned_corpus
-
-    hosts = ["h0.example", "h7.example"]
-    buckets = {umod(xxhash64_str(h), 64) for h in hosts}
-    got = pruned_corpus(
-        spark, layout_dir, buckets=buckets, hosts=hosts
-    ).select("image_id", "fmt", "phash")
-    url_map = universe_urls_df(spark, str(tiny_fixtures))
-    from ccrawler_spark.functions.spark_exprs import image_id_of
-
-    want_ids = url_map.filter(F.col("host").isin(hosts)).select(
-        image_id_of(F.col("url")).alias("image_id")
-    )
-    flat = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
-    want = flat.join(want_ids, on="image_id").select(
-        "image_id", "fmt", "phash"
-    )
-    assert _sorted_rows(got) == _sorted_rows(want)
 
 
 def test_row_group_stats_enable_skipping(spark, tiny_fixtures):
@@ -171,9 +164,11 @@ def test_layout_bucket_mismatch_fails_loudly(spark, tiny_fixtures,
     )["cluster_keys"] == ["host_bucket", "host_key.bp2", "image_id"]
 
 
-def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir):
+def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir,
+                                      arrow_calls):
     """Recrawl mode re-schedules fetched URLs (due predicate); the
-    pruned fetch path must stay byte-neutral there too."""
+    pruned fetch path (the Arrow reader, every round) must stay
+    byte-neutral there too."""
     from ccrawler_spark.conf import CrawlConf
     from ccrawler_spark.scheduler.cli import make_engine
 
@@ -188,6 +183,7 @@ def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir):
         for r in range(1, 4):
             engine.run_round(r)
         stores.append(store)
+    assert arrow_calls == [layout_dir] * 3
     flat, lay = stores
     n = flat.latest()
     assert lay.latest() == n
@@ -199,231 +195,62 @@ def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir):
     )
 
 
-def test_wide_host_split_pruning(spark, tiny_fixtures):
-    """r5 two-scan split: the layout metadata records wide hosts (runs
-    spanning ≥ WIDE_MIN_GROUPS row groups); a schedule whose full id
-    set exceeds the pushdown cap can still push the wide hosts' ids on
-    a second scan. Values must equal the flat corpus rows of the
-    scheduled hosts (with the wide host restricted to scheduled ids)."""
-    from ccrawler_spark.fixtures.gen import universe_urls_df
-    from ccrawler_spark.functions.hashing import umod, xxhash64_str
-    from ccrawler_spark.functions.spark_exprs import image_id_of
-    from ccrawler_spark.io.corpus_layout import (
-        host_key_py, pruned_corpus_split, read_layout_meta,
-        split_hosts_by_width, write_corpus_layout,
-    )
-
-    out = tempfile.mkdtemp(prefix="layout-wide-") + "/layout"
-    corpus = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
-    url_map = universe_urls_df(spark, str(tiny_fixtures)).select(
-        image_id_of(F.col("url")).alias("image_id"), "host"
-    )
-    # tiny row groups -> the Zipf-head host h0 spans many groups
-    write_corpus_layout(corpus, url_map, out, row_group_bytes=8 * 1024)
-    meta = read_layout_meta(out)
-    assert meta["wide_host_keys"], "head host should be wide at 8KiB groups"
-    assert host_key_py("h0.example", 64) in meta["wide_host_keys"]
-
-    sched_hosts = {"h0.example", "h5.example", "h19.example"}
-    narrow, wide = split_hosts_by_width(meta, sched_hosts)
-    assert "h0.example" in wide and "h19.example" in narrow
-
-    # schedule: 5 specific ids of the wide host + all of the narrow ones
-    flat = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
-    hosted = flat.join(url_map, on="image_id")
-    wide_ids = {
-        r["image_id"]
-        for r in hosted.filter(F.col("host").isin(sorted(wide)))
-        .select("image_id").limit(5).collect()
-    }
-    got = pruned_corpus_split(
-        spark, out, narrow_hosts=narrow, wide_hosts=wide,
-        wide_ids=wide_ids,
-        buckets_of=lambda h: umod(xxhash64_str(h), 64),
-    ).select("image_id", "fmt", "phash")
-    want = hosted.filter(
-        F.col("host").isin(sorted(narrow))
-        | F.col("image_id").isin(sorted(wide_ids))
-    ).select("image_id", "fmt", "phash")
-    assert _sorted_rows(got) == _sorted_rows(want)
-    # and the wide scan's id filter actually restricted the wide host
-    n_wide_rows = got.join(
-        url_map.filter(F.col("host").isin(sorted(wide))), on="image_id"
-    ).count()
-    assert n_wide_rows == len(wide_ids)
-
-
-def test_sched_metadata_plans_wide_split(spark, tiny_fixtures, layout_dir):
-    """Engine-side split planning (_sched_metadata): with a large-round
-    conf (budget > ID_PUSHDOWN_CAP) and a host-only pushdown, wide
-    hosts from the layout metadata get their ids collected (free-bound
-    gated) and the plan comes back as the two-scan split dict."""
-    import json
-
-    from ccrawler_spark.conf import CrawlConf
-    from ccrawler_spark.io.corpus_layout import (
-        META_FILE, host_key_py, read_layout_meta,
-    )
-    from ccrawler_spark.scheduler.cli import make_engine
-
-    # force h0 to be "wide" in a copy of the layout's metadata
-    import shutil
-
-    lay = tempfile.mkdtemp(prefix="layout-splitplan-") + "/layout"
-    shutil.copytree(layout_dir, lay)
-    meta = read_layout_meta(lay)
-    meta["wide_host_keys"] = [host_key_py("h0.example", 64)]
-    (pathlib.Path(lay) / META_FILE).write_text(json.dumps(meta))
-
-    out = tempfile.mkdtemp(prefix="splitplan-")
-    conf = CrawlConf(round_budget=8192, per_host_k=64)
-    engine, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf,
-                            corpus_layout=lay)
-    # pin the JVM-split regime: with the set-based arrow scan enabled
-    # (r6 default) this schedule size would plan the arrow path instead
-    engine.arrow_pushdown_cap = 0
-    # > ID_PUSHDOWN_CAP total rows so the full id set cannot push, but
-    # the wide host's share can (free bound |wide| x per_host_k)
-    rows = [
-        (f"h{1 + i % 100}.example", f"{i:016x}", i % 64)
-        for i in range(4100)
-    ] + [("h0.example", f"aa{j:014x}", 7) for j in range(50)]
-    sched = spark.createDataFrame(
-        rows, "host string, image_id string, host_bucket int",
-    )
-    counts, push = engine._sched_metadata(sched)
-    assert sum(counts.values()) == 4150
-    assert "narrow" in push, f"expected split plan, got {push}"
-    assert push["wide"] == {"h0.example"}
-    assert len(push["wide_ids"]) == 50
-    assert "h1.example" in push["narrow"] and "h99.example" in push["narrow"]
-    # and the corpus side builds (plan only) without error
-    df = engine._corpus_side(counts, push)
-    assert "image_id" in df.columns
-
-    # free bound violated (too many wide hosts x per_host_k) -> no split
-    meta["wide_host_keys"] = [
-        host_key_py(f"h{i}.example", 64) for i in range(200)
-    ]
-    (pathlib.Path(lay) / META_FILE).write_text(json.dumps(meta))
-    big = spark.createDataFrame(
-        [(f"h{i % 200}.example", f"{i:016x}", i % 64) for i in range(4200)],
-        "host string, image_id string, host_bucket int",
-    )
-    conf2 = CrawlConf(round_budget=8192, per_host_k=64)
-    engine2, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf2,
-                             corpus_layout=lay)
-    engine2.arrow_pushdown_cap = 0
-    _, push2 = engine2._sched_metadata(big)
-    # host-only plan: 200 wide hosts x 64 = 12,800 ids breaks the bound
-    assert push2 is not None and "narrow" not in push2
-    assert push2["ids"] is None and len(push2["hosts"]) == 200
-
-
 def test_arrow_scan_matches_jvm_and_flat(spark, tiny_fixtures, layout_dir):
-    """r6 set-based reader (io/arrow_scan): for the same (hosts, ids)
-    predicates, pruned_corpus_arrow must return exactly the JVM pruned
-    scan's rows — and both must equal the flat corpus filtered by id —
-    in every mode (hosts+ids, hosts-only, ids-only)."""
+    """The Arrow reader's host-scoped mode (the engine's plan) returns
+    exactly the flat corpus rows of the scheduled (host → ids) pairing,
+    with the schema of a plain layout read. The JVM reader this was
+    once compared against is gone (its Or-tree filter overflowed)."""
     from ccrawler_spark.fixtures.gen import universe_urls_df
     from ccrawler_spark.functions.spark_exprs import image_id_of
     from ccrawler_spark.io.arrow_scan import pruned_corpus_arrow
-    from ccrawler_spark.io.corpus_layout import pruned_corpus
 
     url_map = universe_urls_df(spark, str(tiny_fixtures)).select(
         image_id_of(F.col("url")).alias("image_id"), "host"
     )
-    hosts = {"h0.example", "h5.example", "h19.example"}
-    ids = {
-        r["image_id"]
-        for r in url_map.filter(F.col("host").isin(sorted(hosts)))
-        .select("image_id").limit(40).collect()
-    }
-    cols = ["image_id", "fmt", "phash", "host_bucket"]
-    for kw in ({"hosts": hosts, "ids": ids}, {"hosts": hosts},
-               {"ids": ids}):
-        a = pruned_corpus_arrow(spark, layout_dir, **kw).select(*cols)
-        j = pruned_corpus(spark, layout_dir, **kw).select(*cols)
-        assert _sorted_rows(a) == _sorted_rows(j), f"mode {set(kw)}"
-    # host-scoped mode (the engine's arrow plan): the (host → ids)
-    # pairing must return exactly the global hosts+ids rows — scoping
-    # only sharpens row-group SKIPPING, never the row set
-    pair_rows = url_map.filter(
-        F.col("host").isin(sorted(hosts))
-        & F.col("image_id").isin(sorted(ids))
-    ).collect()
+    hosts = ["h0.example", "h5.example", "h19.example"]
     h_ids: dict[str, set] = {}
-    for r in pair_rows:
+    for r in (url_map.filter(F.col("host").isin(hosts))
+              .orderBy("image_id").limit(40).collect()):
         h_ids.setdefault(r["host"], set()).add(r["image_id"])
-    a = pruned_corpus_arrow(spark, layout_dir, host_ids=h_ids).select(*cols)
-    j = pruned_corpus(spark, layout_dir, hosts=hosts, ids=ids).select(*cols)
-    assert _sorted_rows(a) == _sorted_rows(j), "host-scoped mode"
-    # and the schema is interchangeable with the JVM layout scan
-    assert (
-        pruned_corpus_arrow(spark, layout_dir, hosts=hosts).schema
-        == spark.read.parquet(layout_dir).schema
-    )
-    # ids-only mode equals the flat corpus filtered by id (end-to-end
-    # value proof against the un-laid-out source of truth)
+    ids = sorted(i for v in h_ids.values() for i in v)
+    cols = ["image_id", "fmt", "phash"]
+    got = pruned_corpus_arrow(spark, layout_dir, host_ids=h_ids)
     flat = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
-    got = pruned_corpus_arrow(spark, layout_dir, ids=ids).select(
-        "image_id", "fmt", "phash"
-    )
-    want = flat.filter(F.col("image_id").isin(sorted(ids))).select(
-        "image_id", "fmt", "phash"
-    )
-    assert _sorted_rows(got) == _sorted_rows(want)
+    want = flat.filter(F.col("image_id").isin(ids))
+    assert _sorted_rows(got.select(*cols)) == _sorted_rows(want.select(*cols))
+    # the schema is interchangeable with the bucket-pruned layout read
+    assert got.schema == spark.read.parquet(layout_dir).schema
 
 
-def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir):
-    """Engine planning (r6): a schedule whose id set exceeds
-    ID_PUSHDOWN_CAP but fits the arrow cap plans the set-based scan —
-    full host AND id sets, no Or-tree, no split."""
-    from ccrawler_spark.conf import CrawlConf
+def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
+                                         monkeypatch):
+    """Engine planning: a schedule within ARROW_PUSHDOWN_CAP plans the
+    Arrow scan with its full (host → ids) pairing — from the one-collect
+    path of a TINY budget and from the count-first path of a budget
+    above the cap. Above the cap the plan is no pairing, i.e. the
+    bucket-pruned layout read."""
+    from ccrawler_spark.conf import TINY, CrawlConf
+    from ccrawler_spark.io import arrow_scan
     from ccrawler_spark.scheduler.cli import make_engine
 
-    out = tempfile.mkdtemp(prefix="arrowplan-")
-    conf = CrawlConf(round_budget=8192, per_host_k=64)
-    engine, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf,
-                            corpus_layout=layout_dir)
     sched = spark.createDataFrame(
         [(f"h{i % 100}.example", f"{i:016x}", i % 64) for i in range(4200)],
         "host string, image_id string, host_bucket int",
     )
-    counts, push = engine._sched_metadata(sched)
-    assert sum(counts.values()) == 4200
-    assert push is not None and push.get("arrow") is True
-    assert len(push["ids"]) == 4200 and len(push["hosts"]) == 100
-    # the host-scoped pairing rides along for admits_scoped
-    assert set(push["host_ids"]) == push["hosts"]
-    assert sum(len(v) for v in push["host_ids"].values()) == 4200
-    df = engine._corpus_side(counts, push)
+    for conf in (TINY, CrawlConf(round_budget=200_000, per_host_k=64)):
+        out = tempfile.mkdtemp(prefix="arrowplan-")
+        engine, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf,
+                                corpus_layout=layout_dir)
+        counts, host_ids = engine._sched_metadata(sched)
+        assert sum(counts.values()) == 4200
+        assert set(host_ids) == {f"h{i}.example" for i in range(100)}
+        assert sum(len(v) for v in host_ids.values()) == 4200
+    df = engine._corpus_side(counts, host_ids)
     assert "image_id" in df.columns and "host_bucket" in df.columns
-    # above the arrow cap the plan falls back to the JVM host-only path
-    engine.arrow_pushdown_cap = 4100
-    _, push2 = engine._sched_metadata(sched)
-    assert push2 is not None and not push2.get("arrow")
-
-
-def test_engine_parity_arrow_path(spark, tiny_fixtures, layout_dir,
-                                  monkeypatch):
-    """End-to-end byte equality through the arrow fetch path: shrink
-    ID_PUSHDOWN_CAP so every round's schedule overflows the JVM cap and
-    routes through pruned_corpus_arrow, then compare fetch_log and
-    frontier against the flat-corpus run."""
-    from ccrawler_spark.io import corpus_layout as cl
-
-    monkeypatch.setattr(cl, "ID_PUSHDOWN_CAP", 4)
-    s_flat = _run(spark, tiny_fixtures)
-    s_arrow = _run(spark, tiny_fixtures, corpus_layout=layout_dir)
-    n = s_flat.latest()
-    assert s_arrow.latest() == n
-    assert _sorted_rows(s_flat.read_fetch_log(n)) == _sorted_rows(
-        s_arrow.read_fetch_log(n)
-    )
-    assert _sorted_rows(s_flat.read_frontier(n)) == _sorted_rows(
-        s_arrow.read_frontier(n)
-    )
+    # above the cap: counts only, no pairing
+    monkeypatch.setattr(arrow_scan, "ARROW_PUSHDOWN_CAP", 4100)
+    counts2, host_ids2 = engine._sched_metadata(sched)
+    assert counts2 == counts and host_ids2 is None
 
 
 def test_arrow_scan_soundness_randomized(spark, tiny_fixtures, layout_dir):
@@ -536,3 +363,70 @@ def test_arrow_scan_statless_footers_admit_everything(spark, tmp_path):
     ).select("image_id", "fmt", "host_bucket").collect()
     assert sorted(r["image_id"] for r in got) == sorted(want)
     assert all(r["host_bucket"] == bk and r["fmt"] == "png" for r in got)
+
+
+_MANY_IDS_PROBE = """
+import tempfile
+
+from pyspark.sql import functions as F
+
+from ccrawler_spark.conf import CrawlConf
+from ccrawler_spark.fixtures.gen import (
+    ensure_corpus_layout, ensure_fixtures, universe_urls_df,
+)
+from ccrawler_spark.functions.spark_exprs import host_bucket, image_id_of
+from ccrawler_spark.scheduler.cli import build_session, make_engine
+
+spark = build_session(4, driver_mem="2g")
+fdir = str(ensure_fixtures("tiny"))
+layout = str(ensure_corpus_layout(spark, fdir))
+engine, _ = make_engine(
+    spark, fdir, tempfile.mkdtemp(prefix="many-ids-"),
+    conf=CrawlConf(round_budget=4096), corpus_layout=layout,
+)
+real = universe_urls_df(spark, fdir).select(
+    "host", image_id_of(F.col("url")).alias("image_id")
+)
+phantom = real.select(
+    "host",
+    F.substring(F.sha2(F.concat("image_id", F.lit("#phantom")), 256), 1, 16)
+    .alias("image_id"),
+)
+sched = real.unionByName(phantom).withColumn(
+    "host_bucket", host_bucket(F.col("host"), 64)
+)
+cols = ["image_id", "fmt", "phash"]
+got = sorted(
+    tuple(r) for r in engine._corpus_side(*engine._sched_metadata(sched))
+    .select(*cols).collect()
+)
+flat = spark.read.parquet(f"{fdir}/corpus.parquet")
+want = sorted(
+    tuple(r) for r in flat.join(sched.select("image_id").distinct(),
+                                "image_id").select(*cols).collect()
+)
+print(f"SCHED={sched.count()} GOT={len(got)} EQUAL={got == want}")
+spark.stop()
+"""
+
+
+def test_small_budget_corpus_side_many_ids_matches_flat(layout_dir):
+    """A small-budget round whose schedule carries ~2,000 (host,
+    image_id) rows — the tiny corpus's 1,000 ids plus as many phantom
+    ids on the same hosts — must read exactly the flat corpus rows of
+    those ids. A JVM parquet ``IN`` pushdown of that many ids builds an
+    ``Or`` tree that overflows the stack; the engine's session
+    (``build_session``) is the condition under test, so this runs in a
+    fresh subprocess (one JVM start)."""
+    out = subprocess.run(
+        [sys.executable, "-c", _MANY_IDS_PROBE],
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    line = [l for l in out.stdout.splitlines() if l.startswith("SCHED=")]
+    assert line, out.stdout[-2000:]
+    fields = dict(kv.split("=") for kv in line[0].split())
+    assert int(fields["SCHED"]) >= 2000
+    assert int(fields["GOT"]) >= 1000
+    assert fields["EQUAL"] == "True"

@@ -1,16 +1,12 @@
 """Pin the perf-critical session configs set by build_session.
 
-Four of these are measured-performance load-bearing and would fail
+Three of these are measured-performance load-bearing and would fail
 silently if dropped in a refactor:
 
 - ``canChangeCachedPlanOutputPartitioning`` — the round-7 cached-plan
   AQE knob (1.4-1.9x crawl_round, BENCH/aqe_cached_plan_ab.json);
   without it cached frames pin 256-partition layouts on every
   consumer stage.
-- ``parquet.pushdown.inFilterThreshold`` — below the pushed IN-set
-  sizes of the pruned fetch path, Spark silently degrades exact value
-  sets to [min,max] ranges, useless for hash-scattered keys (the
-  layout pruning would quietly stop skipping row groups).
 - ``spark.sql.shuffle.partitions`` — the scaling comparison requires
   the same initial plan at every parallelism level.
 - ``parallelPartitionDiscovery.threshold`` — at Spark's default of
@@ -39,7 +35,6 @@ from ccrawler_spark.scheduler.cli import build_session
 s = build_session(2)
 keys = [
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-    "spark.sql.parquet.pushdown.inFilterThreshold",
     "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled",
     "spark.sql.files.maxPartitionBytes",
@@ -64,7 +59,6 @@ def test_build_session_pins_perf_critical_configs():
     assert line, out.stdout[-2000:]
     conf = json.loads(line[0][len("CONF="):])
     assert conf["spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"] == "true"
-    assert conf["spark.sql.parquet.pushdown.inFilterThreshold"] == "4096"
     assert conf["spark.sql.shuffle.partitions"] == "256"
     assert conf["spark.sql.adaptive.enabled"] == "true"
     assert conf["spark.sql.files.maxPartitionBytes"] == "33554432"

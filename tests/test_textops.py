@@ -165,14 +165,6 @@ def test_image_resize_shape(spark, tiny_fixtures):
     assert all(len(r["pixels"]) == 16 * 16 * 3 for r in rows)
 
 
-def test_audio_video_stubs_raise(spark):
-    from ccrawler_spark.textops.multimodal import audio_features
-
-    df = spark.createDataFrame([("c1", b"xx")], "clip_id string, bytes binary")
-    with pytest.raises(Exception):  # NotImplementedError via PythonException
-        audio_features(df).collect()
-
-
 def test_ann_ivf_finds_planted_neighbors(spark):
     """IVF-flat probe (hash-derived coarse centroids) recovers the
     planted cluster that brute force finds."""
