@@ -500,9 +500,11 @@ def q_crawl_round_log(spark, sf_dir):
     from ccrawler_spark import testing as tt
     from ccrawler_spark.fixtures.gen import FIXTURE_ROOT
 
-    # fixed store path, recreated per call (ADVICE r7: the previous
-    # mkdtemp leaked a full 2-round engine store per gate invocation)
-    out = FIXTURE_ROOT / "gate-crawl-store"
+    # one store path per process, recreated per call (ADVICE r7: the
+    # previous mkdtemp leaked a full 2-round engine store per gate
+    # invocation); the pid keeps two concurrent gate runs from deleting
+    # each other's live store
+    out = FIXTURE_ROOT / f"gate-crawl-store-{os.getpid()}"
     shutil.rmtree(out, ignore_errors=True)
     _, store, _ = tt.engine_run(spark, "tiny", str(out), rounds=2)
     return store.read_fetch_log(2).select(
@@ -532,7 +534,7 @@ def _oracle_crawl_log_parquet(rounds: int = 2) -> str:
     })
     out = FIXTURE_ROOT / "oracle" / f"crawl_log_tiny_r{rounds}.parquet"
     out.parent.mkdir(parents=True, exist_ok=True)
-    tmp = out.with_suffix(".tmp.parquet")
+    tmp = out.with_suffix(f".tmp.{os.getpid()}.parquet")
     pq.write_table(tbl, tmp)
     tmp.replace(out)
     return str(out)

@@ -9,9 +9,11 @@ buckets it touches; at sandbox scale all segments broadcast together.
 The code path is the segmented one regardless — scale is config.
 
 Semantics: probe says False ⇒ the URL is definitely NOT seen (no false
-negatives — candidates skip the exact anti-join); True ⇒ maybe seen,
-verified by the exact (url_hash, url) anti-join (O12). Bloom therefore
-never affects correctness, only the size of the exact-join input.
+negatives); True ⇒ maybe seen. The engine merges each round's fresh
+URLs into their bucket's segment and records its version in the
+lineage, but does not probe it: seen dedup is the exact (url_hash,
+url) anti-join alone (O12, scheduler/seen.py), so the filter never
+affects which URLs are enqueued.
 
 Hash scheme: double hashing over the already-computed xxh64 url_hash —
 h1 = url_hash, h2 = splitmix64_fin(url_hash) | 1, position_i =

@@ -2,8 +2,9 @@
 
 One engine round is a single declarative DataFrame DAG over the
 snapshot-store tables; the only driver-side state is the manifest
-(small JSON) — bloom segments stay task-side (cogrouped per
-host_bucket), never collected or broadcast from the driver.
+(small JSON). Seen dedup is one exact anti-join (scheduler/seen.py);
+the per-bucket bloom segments are merged each round for lineage, task
+side (cogrouped per host_bucket), never collected or broadcast.
 Rounds are idempotent pure functions of (snapshot n-1, conf) — the
 virtual clock (SEMANTICS.md §6) and total-order keys make re-running a
 crashed round byte-identical, which is the resumability contract
@@ -44,12 +45,9 @@ BLOOM_SCHEMA = StructType([
     StructField("bits", BinaryType()),
 ])
 
-# the small-round regime bound, shared by two physical choices (results
-# identical either way; see run_round): a round_budget at most this
-# large ranks the fetch sequence in one window, and below this many
-# candidates (proxied by the previous round's enqueued count) the bloom
-# pre-filter's fixed cogroup + Arrow-crossing cost exceeds what it saves
-# the exact anti-join, so the probe is skipped
+# the fetch-sequence regime bound: a round_budget at most this large
+# ranks the fetch sequence in one window (stages.with_fetch_sequence;
+# results identical either way)
 SMALL_ROUND_ROWS = 4096
 
 
@@ -381,36 +379,11 @@ class CrawlEngine:
         candidates = stages.dedup_in_round(candidates)
         candidates = stages.as_frontier_rows(candidates, conf)
         seen = store.read_seen(r - 1)
-        # task-side bloom: B small segment rows, cached once per round —
-        # the probe and the delta build each cogroup on host_bucket, so
+        # the latest bloom segments (B small rows) feed only the delta
+        # build below, which cogroups them with fresh on host_bucket, so
         # a task holds only its buckets' segments (no driver collect)
-        bloom = store.read_bloom_latest(r - 1).cache()
-        # adaptive probe skip: the bloom is a NEGATIVE-membership fast
-        # path — it only pays when many candidates are new. After a
-        # round that enqueued 0 fresh URLs (saturated frontier: every
-        # discovery already seen, the bench steady state), virtually
-        # every probe answers "maybe seen" and the cogroup shuffle +
-        # Arrow crossing of the full candidate set buys nothing — go
-        # straight to the exact anti-join. Exactness is unaffected
-        # either way (the anti-join is the gate, the bloom a
-        # prefilter); if fresh URLs reappear, n_fresh > 0 flips the
-        # probe back on next round. Driver-side decision from the
-        # committed lineage — no extra job.
-        prev_enqueued = sum(
-            v.get("enqueued", 0) for v in prev["lineage"].values()
-        )
-        # volume gate (round 8): the probe's payoff scales with the
-        # candidate volume it can prune, but its cost (cogroup shuffle
-        # + one Arrow crossing of every candidate, ~3 scheduler jobs)
-        # is fixed — below a few thousand candidates the exact
-        # anti-join alone is strictly cheaper. prev round's enqueued
-        # count is the same driver-side volume proxy the zero/nonzero
-        # skip already used; exactness is unaffected either way (the
-        # anti-join is the gate, the bloom a prefilter).
-        use_bloom = prev_enqueued > SMALL_ROUND_ROWS
-        fresh = seen_dedup(
-            candidates, seen, conf, bloom if use_bloom else None
-        )
+        bloom = store.read_bloom_latest(r - 1)
+        fresh = seen_dedup(candidates, seen, conf)
         # cached WITHOUT the adds-layout repartition (round 8): the
         # layout shuffle only serves the adds-delta write, and its
         # partition count is now sized from n_fresh AFTER the counts
@@ -654,7 +627,6 @@ class CrawlEngine:
             "lineage": lineage,
         })
         queued_after = sum(v["frontier_offset"] for v in lineage.values())
-        bloom.unpersist()
         scheduled.unpersist()
         sched0.unpersist()
         if ranked is not None:

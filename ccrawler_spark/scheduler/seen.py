@@ -1,19 +1,12 @@
-"""O11 bloom pre-filter + O12 exact URL-seen anti-join.
+"""O12 exact URL-seen anti-join.
 
 The seen set is exact (BASELINE.json:6 "final URL-seen set exactly"):
-the bloom is only a negative-membership fast path. A candidate whose
-bloom probe says "definitely new" skips the exact join entirely; only
-"maybe seen" candidates are verified against the seen table, and the
-seen scan is partition-pruned to the ``seen_part`` values those
-candidates actually hit (SURVEY.md §4.2).
-
-The probe is task-side: candidates cogroup with the bloom-segment
-table on ``host_bucket``, so each task materializes only the segments
-of the buckets it processes — no driver collect, no O(B × segment)
-broadcast (at design scale B=4096 × 3 MB segments would be a 12.5 GB
-driver rebroadcast per round; SURVEY.md §4.3). The Python crossing is
-one Arrow-batched applyInPandas, same budget as the pandas_udf probe
-it replaces.
+every candidate is verified against the seen table by a left-anti join.
+This is the only seen-dedup path. The per-bucket bloom segments (O11,
+``bloom/filter.py``) are still merged every round for lineage, but
+nothing here probes them: a probe in front of the join cost a cogroup
+shuffle and an Arrow crossing over every candidate and never shrank the
+seen scan (docs/SCALING.md, "One seen-dedup path").
 
 Dedup equality is on the (url_hash, url) pair — hash as shuffle key,
 full string as equality confirmation (collision rule, SURVEY.md §5.5).
@@ -23,73 +16,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ccrawler_spark.conf import CrawlConf
 from ccrawler_spark.functions.spark_exprs import umod_long
 
 
-def bloom_probe(candidates: DataFrame, bloom: DataFrame,
-                num_hashes: int) -> DataFrame:
-    """Attach ``_maybe_seen`` by cogrouping candidates with the latest
-    bloom segments per host_bucket. A bucket with no segment row has
-    never enqueued a URL → everything in it is definitely new."""
-    out_schema = StructType(
-        list(candidates.schema.fields)
-        + [StructField("_maybe_seen", BooleanType())]
-    )
-
-    def probe_group(key, cand_pdf, bloom_pdf):
-        import numpy as np
-        import pandas as pd
-
-        from ccrawler_spark.bloom import filter as bf
-
-        if len(cand_pdf) == 0:
-            return cand_pdf.assign(_maybe_seen=pd.Series([], dtype=bool))
-        if len(bloom_pdf) == 0:
-            seg = None
-        else:
-            i = bloom_pdf["version"].idxmax()
-            seg = np.frombuffer(bloom_pdf.loc[i, "bits"], dtype=np.uint8)
-        maybe = bf.probe(
-            seg, cand_pdf["url_hash"].to_numpy(np.int64), num_hashes
-        )
-        return cand_pdf.assign(_maybe_seen=maybe)
-
-    return (
-        candidates.groupBy("host_bucket")
-        .cogroup(bloom.select("host_bucket", "version", "bits")
-                 .groupBy("host_bucket"))
-        .applyInPandas(probe_group, out_schema)
-    )
-
-
-def seen_dedup(
-    candidates: DataFrame,
-    seen: DataFrame,
-    conf: CrawlConf,
-    bloom: DataFrame | None,
-) -> DataFrame:
+def seen_dedup(candidates: DataFrame, seen: DataFrame,
+               conf: CrawlConf) -> DataFrame:
     """Return candidates not in the seen set (exact)."""
-    if bloom is not None:
-        candidates = bloom_probe(candidates, bloom, conf.bloom_num_hashes)
-        definitely_new = candidates.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        maybes = candidates.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    else:
-        definitely_new = None
-        maybes = candidates
-
-    maybes = maybes.withColumn(
+    # seen_part (the seen table's partition column) joins as a key, but
+    # Spark's dynamic partition pruning skips left-anti joins, so the
+    # whole seen table is scanned; a round's candidates hit every
+    # seen_part anyway
+    return candidates.withColumn(
         "_seen_part", umod_long(F.col("url_hash"), conf.seen_partitions).cast("int")
-    )
-    # partition-pruned exact verification: only seen partitions that can
-    # contain a maybe-candidate are scanned (Catalyst prunes seen_part dirs)
-    survivors = maybes.join(
+    ).join(
         seen.withColumnRenamed("seen_part", "_seen_part"),
         on=["_seen_part", "url_hash", "url"],
         how="left_anti",
     ).drop("_seen_part")
-    if definitely_new is not None:
-        return definitely_new.unionByName(survivors)
-    return survivors

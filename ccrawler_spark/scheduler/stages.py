@@ -2,8 +2,10 @@
 
 Each function is a declarative DataFrame→DataFrame transform; Catalyst
 fuses them into one plan per round (one action: the snapshot write).
-Python crossings are exactly: URL normalization tail (O6), bloom probe
-(O11), image decode (O41) — all Arrow-batched, never row-at-a-time
+A round's Python crossings are exactly: the Arrow corpus scan
+(io/arrow_scan, layout rounds only), image decode (O41) and the bloom
+segment merge (O11, the engine's delta write); bootstrap adds the URL
+normalization tail (O6). All are Arrow-batched, never row-at-a-time
 (BASELINE.json:15). Everything else is JVM-side whole-stage codegen.
 
 Determinism discipline (docs/SEMANTICS.md §8): every window/sort here

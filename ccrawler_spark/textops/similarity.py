@@ -381,23 +381,34 @@ def ivf_train_kmeans_cached(embeddings: DataFrame, cache_key: str,
     floats)."""
     import json
 
-    import os
-
     path = ivf_centroid_cache_path(cache_key, dim, n_cells, n_iters,
                                    id_col, vec_col)
     if path.exists():
         return json.loads(path.read_text())
-    cents = ivf_train_kmeans(embeddings, dim, n_cells, n_iters,
-                             id_col=id_col, vec_col=vec_col)
-    # unique tmp name (concurrent writers must not clobber each other's
-    # tmp) + re-read AFTER the atomic replace: under a cold-cache race
-    # with the numpy twin-loader the two trainers are not
-    # float-identical, so the PERSISTED file — not this trainer's
-    # in-memory result — is the single source of truth both parity
-    # sides must return (VERDICT r7 #6 / ADVICE r7)
+    return _publish_first(path, ivf_train_kmeans(
+        embeddings, dim, n_cells, n_iters, id_col=id_col, vec_col=vec_col))
+
+
+def _publish_first(path, payload) -> list:
+    """Persist ``payload`` as JSON at ``path`` unless another writer got
+    there first, and return what is on disk. Under a cold-cache race
+    the Spark trainer and the numpy twin-loader are not float-identical,
+    so the PERSISTED file — not this caller's in-memory result — is the
+    single source of truth both parity sides return (VERDICT r7 #6 /
+    ADVICE r7). ``os.link`` publishes the per-pid tmp atomically and
+    fails if ``path`` exists, so the first writer wins (a rename would
+    let the last one overwrite it)."""
+    import json
+    import os
+
     tmp = path.with_suffix(f".tmp.{os.getpid()}")
-    tmp.write_text(json.dumps(cents))
-    tmp.replace(path)  # atomic: concurrent trainers converge on one file
+    tmp.write_text(json.dumps(payload))
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        pass
+    finally:
+        tmp.unlink()
     return json.loads(path.read_text())
 
 
@@ -480,15 +491,7 @@ def ivf_trained_centroids_ensure(parquet_path: str, dim: int,
                 if n > 0:
                     new[c] = v / n
         cents = new
-    out = [[float(x) for x in c] for c in cents]
-    # unique tmp + post-replace re-read: first-writer-wins must hold
-    # even when this loader races ivf_train_kmeans_cached (see there)
-    import os
-
-    tmp = path.with_suffix(f".tmp.{os.getpid()}")
-    tmp.write_text(json.dumps(out))
-    tmp.replace(path)
-    return json.loads(path.read_text())
+    return _publish_first(path, [[float(x) for x in c] for c in cents])
 
 
 def ann_topk_ivf(embeddings: DataFrame, query_vec: list[float], k: int = 10,

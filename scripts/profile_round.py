@@ -62,9 +62,8 @@ candidates = stages.as_frontier_rows(
         stages.discover_links(scheduled, engine.hosts, conf, engine.H, round_ts)
     ), conf)
 seen = store.read_seen(0)
-bloom = T("load bloom", lambda: store.read_bloom_latest(0).cache())
 fresh = (
-    seen_dedup(candidates, seen, conf, bloom)
+    seen_dedup(candidates, seen, conf)
     .withColumn("status", F.lit("queued"))
     .withColumn("retry_count", F.lit(0))
     .select(*FRONTIER_COLS)
@@ -78,5 +77,6 @@ T("counts x3", lambda: (engine._bucket_counts(scheduled),
 T("removes write", lambda: store.write_parquet(
     scheduled.select("url_hash", "url").unionByName(
         denied.select("url_hash", "url")), "frontier", "removes-r1"))
+bloom = store.read_bloom_latest(0)
 T("bloom delta", lambda: engine._write_bloom_delta(fresh, bloom, 1))
 spark.stop()

@@ -104,36 +104,3 @@ def test_robots_asof_version(spark, tiny_fixtures):
     at2 = robots_active(both, 2).filter(F.col("host") == host).first()
     assert at1["version"] == 1 and at1["crawl_delay_ms"] != 9_999
     assert at2["version"] == 2 and at2["crawl_delay_ms"] == 9_999
-
-
-def test_bloom_probe_task_side_no_driver_collect(spark):
-    """O11 at design scale: the probe cogroups candidates with the
-    segment table per host_bucket — the engine holds no driver-side
-    segment dict and no broadcast (SURVEY.md §4.3). No false negatives
-    through the cogroup path; unknown buckets are definitely-new."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from ccrawler_spark.bloom import filter as bf
-    from ccrawler_spark.scheduler.engine import CrawlEngine
-    from ccrawler_spark.scheduler.seen import bloom_probe
-
-    assert not hasattr(CrawlEngine, "_load_bloom")
-
-    keys = np.arange(1000, dtype=np.int64) * 2654435761
-    seg = bf.add_keys(bf.empty_segment(TINY.bloom_segment_bits), keys,
-                      TINY.bloom_num_hashes)
-    bloom = spark.createDataFrame(
-        [(3, 1, bytes(seg))], "host_bucket int, version long, bits binary"
-    )
-    cands = spark.createDataFrame(
-        [(int(k), 3) for k in keys[:50]]         # seen keys, known bucket
-        + [(int(k), 9) for k in keys[50:80]],    # bucket with no segment
-        "url_hash long, host_bucket int",
-    )
-    rows = bloom_probe(cands, bloom, TINY.bloom_num_hashes).collect()
-    by_bucket = {}
-    for r in rows:
-        by_bucket.setdefault(r["host_bucket"], []).append(r["_maybe_seen"])
-    assert all(by_bucket[3])          # no false negatives, ever
-    assert not any(by_bucket[9])      # segment-less bucket = all new

@@ -332,3 +332,18 @@ def test_ivf_centroid_cache_shared_between_trainers(spark, tmp_path):
     assert cache.exists() and json.loads(cache.read_text()) == spark_cents
     assert S.ivf_trained_centroids_ensure(pq_path, **kw) == spark_cents
     cache.unlink()
+
+
+def test_centroid_publish_first_writer_wins(tmp_path):
+    """Two publishes of different centroids to one cache path: the first
+    payload stays on disk, both calls return it, and no tmp is left."""
+    import json
+
+    from ccrawler_spark.textops import similarity as S
+
+    path = tmp_path / "cents.json"
+    first, second = [[1.0, 0.0]], [[0.0, 1.0]]
+    assert S._publish_first(path, first) == first
+    assert S._publish_first(path, second) == first
+    assert json.loads(path.read_text()) == first
+    assert [p.name for p in tmp_path.iterdir()] == ["cents.json"]
