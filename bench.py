@@ -1,7 +1,8 @@
 """Driver bench harness: times the headline queries from
 ``__spark_entry__.queries()`` plus one full crawl scheduling round, at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``, and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on), and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": 0.1}
@@ -36,7 +37,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 # every driver-gate query is timed — untimed = unwatched for regression

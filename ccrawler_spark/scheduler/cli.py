@@ -17,11 +17,17 @@ import time
 
 
 def build_session(cores: int, shuffle_partitions: int | None = None,
-                  driver_mem: str = "16g"):
+                  driver_mem: str | None = None):
     import os
     import pathlib
 
     from pyspark.sql import SparkSession
+
+    if driver_mem is None:
+        # half the box's physical memory, at most 16g: a 16g heap on a
+        # 15 GB box grows past what the workers and page cache leave
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        driver_mem = f"{min(16 << 10, phys_mb // 2)}m"
 
     # workers must import ccrawler_spark (UDFs); in a real cluster this is
     # `spark-submit --py-files ccrawler_spark.zip` (BASELINE.json north_rule)
@@ -92,15 +98,6 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 "4096")
         .getOrCreate()
-    )
-    # the fetch sequence's unpartitioned windows (stages
-    # .with_fetch_sequence) are single-partition by design, over rows
-    # the round budget bounds; WindowExec warns about every such plan,
-    # which made a wall of identical WARN lines per round
-    jvm = spark.sparkContext._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        jvm.org.apache.logging.log4j.Level.ERROR,
     )
     return spark
 

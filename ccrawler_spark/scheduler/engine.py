@@ -45,12 +45,6 @@ BLOOM_SCHEMA = StructType([
     StructField("bits", BinaryType()),
 ])
 
-# the fetch-sequence regime bound: a round_budget at most this large
-# ranks the fetch sequence in one window (stages.with_fetch_sequence;
-# results identical either way)
-SMALL_ROUND_ROWS = 4096
-
-
 def layout_dedup(rows: DataFrame, n_parts: int) -> DataFrame:
     """Frontier rows → the (host_bucket, umod(url_hash, 8)) file layout
     in ``n_parts`` partitions, one row kept per url.
@@ -312,7 +306,8 @@ class CrawlEngine:
             gated = stages.robots_gate(frontier, self.robots_active, conf)
             allowed = gated.filter(F.col("allowed"))
             # 2-4. dequeue: per-host top-k → budget K → politeness slots;
-            # cached BEFORE the seq step (its offsets collect is an action)
+            # cached: the metadata collect materializes it for every
+            # later reader (discovery, fetch, removes, recrawl)
             sched0 = stages.dequeue(allowed, conf, n_hosts=self.H).cache()
 
         # `denied` comes from a separate tiny pass: the gate is static
@@ -351,30 +346,21 @@ class CrawlEngine:
                 )
             else:
                 denied = sched0.select(*FRONTIER_COLS).limit(0)
-        # 5. fetch sequence (cumulative seq across rounds). Small-budget
-        # regime (round_budget ≤ SMALL_ROUND_ROWS): identical seq from
-        # one single-partition window instead of the 3-stage group
-        # prefix-sum — see stages.with_fetch_sequence.
-        seq_offset = prev["counters"]["fetched_total"]
-        scheduled = stages.with_fetch_sequence(
-            sched0, r, seq_offset,
-            small_budget=conf.round_budget <= SMALL_ROUND_ROWS,
-        ).cache()
-
-        # schedule-metadata collect (lineage counts + Arrow-scan
-        # keys, one job — see _sched_metadata) on a pool thread: its
-        # first action materializes the scheduled cache while the MAIN
-        # thread builds the round's remaining plans. Plan construction
-        # is driver-side py4j chatter (hundreds of expression
-        # round-trips, ~2 s/round profiled at r5) that needs only the
-        # DataFrame objects, never the collect results — serializing it
-        # behind the collect was pure added wall. (`pool` is owned by
-        # run_round's try/finally — see its docstring.)
-        sched_meta = pool.submit(self._sched_metadata, scheduled)
+        # schedule-metadata collect (sequence group counts, lineage
+        # counts and Arrow-scan keys — see _sched_metadata) on a pool
+        # thread: its first action materializes the sched0 cache while
+        # the MAIN thread builds the round's remaining plans. Plan
+        # construction is driver-side py4j chatter (hundreds of
+        # expression round-trips, ~2 s/round profiled at r5) that needs
+        # only the DataFrame objects, never the collect results —
+        # serializing it behind the collect was pure added wall.
+        # (`pool` is owned by run_round's try/finally — see its
+        # docstring.)
+        sched_meta = pool.submit(self._sched_metadata, sched0)
 
         # 7-10. discovery → scope → in-round dedup → seen dedup
         candidates = stages.discover_links(
-            scheduled, self.hosts, conf, self.H, round_ts
+            sched0, self.hosts, conf, self.H, round_ts
         )
         candidates = stages.dedup_in_round(candidates)
         candidates = stages.as_frontier_rows(candidates, conf)
@@ -415,18 +401,26 @@ class CrawlEngine:
             )
         ).groupBy("_side", "host_bucket").count()
 
-        # 6. fetch join + decode invariants (Arrow crossing), needing
-        # the schedule metadata (the corpus side's plan) — joined
-        # here, after the main thread finished the discovery plans
-        sched_counts, host_ids = sched_meta.result()
+        # 5-6. fetch join + decode invariants (Arrow crossing) and the
+        # fetch sequence, needing the schedule metadata (the corpus
+        # side's plan, the group counts) — joined here, after the main
+        # thread finished the discovery plans
+        group_counts, sched_counts, host_ids = sched_meta.result()
         n_fetched = sum(sched_counts.values())
-        # submit the fused counts job only now that the scheduled cache
-        # is materialized: the discovery path scans `scheduled`, and an
-        # earlier submission would race the metadata job into computing
-        # the whole dequeue pipeline twice
+        # submit the fused counts job only now that the sched0 cache is
+        # materialized: the discovery path scans sched0, and an earlier
+        # submission would race the metadata job into computing the
+        # whole dequeue pipeline twice
         tagged_job = pool.submit(tagged.collect)
         corpus_side = self._corpus_side(sched_counts, host_ids)
-        fetched = fetch_and_decode(scheduled, corpus_side, n_fetched)
+        # seq (cumulative across rounds) is attached to the fetch
+        # output: fetch_and_decode reads its input twice, and a
+        # sequenced input would run the window in both reads
+        seq_offset = prev["counters"]["fetched_total"]
+        fetched = stages.with_fetch_sequence(
+            fetch_and_decode(sched0, corpus_side, n_fetched),
+            group_counts, r, seq_offset,
+        )
         fetch_log = fetched.select(
             "seq", "url", "host", "host_bucket", "slot_ms", "priority",
             "discover_ts", "depth", "fetch_ok", "pixels_ok", "caption_ok",
@@ -440,7 +434,7 @@ class CrawlEngine:
         # write overlaps the tagged-counts job instead of waiting in
         # the serial write phase. n_fetched == 0 defers to the write
         # phase, where n_denied decides.
-        removes = scheduled.select("url_hash", "url").unionByName(
+        removes = sched0.select("url_hash", "url").unionByName(
             denied.select("url_hash", "url")
         )
         removes_job = (
@@ -461,7 +455,7 @@ class CrawlEngine:
         # URL is already seen — re-enqueue is deliberate)
         recrawl = None
         if conf.recrawl_interval_micros > 0 and n_fetched:
-            recrawl = scheduled.select(
+            recrawl = sched0.select(
                 "url", "url_hash", "host", "host_bucket", "priority",
                 F.timestamp_micros(
                     F.lit(round_ts)
@@ -627,7 +621,6 @@ class CrawlEngine:
             "lineage": lineage,
         })
         queued_after = sum(v["frontier_offset"] for v in lineage.values())
-        scheduled.unpersist()
         sched0.unpersist()
         if ranked is not None:
             ranked.unpersist()
@@ -635,24 +628,28 @@ class CrawlEngine:
         return RoundStats(r, n_fetched, n_denied, n_fresh, queued_after)
 
     # ------------------------------------------------------------- helpers
-    def _sched_metadata(self, scheduled: DataFrame):
-        """Everything the driver needs off the cached scheduled frame:
-        per-bucket lineage counts, plus the schedule's (host → its
+    def _sched_metadata(self, sched0: DataFrame):
+        """Everything the driver needs off the cached schedule: the
+        per-(slot_ms, host_bucket) row counts that the fetch sequence's
+        group offsets are summed from (stages.with_fetch_sequence), the
+        per-bucket lineage counts, and the schedule's (host → its
         image_ids) pairing for the Arrow corpus reader (io/arrow_scan)
         when there is a layout and the schedule has at most
         ``ARROW_PUSHDOWN_CAP`` rows.
 
         A round_budget within the cap bounds the schedule statically,
-        so ONE collect of (host_bucket, host, image_id) yields counts
-        AND pairing — one job where a groupBy-count plus a key collect
-        would be two (VERDICT r4 #6). Larger budgets run the
-        groupBy-count first (B ≤ 64 rows) and collect the pairs only
-        when that count fits the cap. Every collect here is schedule
-        METADATA (≤ cap rows ≈ 2 MB off the cached frame), not data
-        movement.
+        so ONE collect of (slot_ms, host_bucket, host, image_id) yields
+        counts AND pairing — one job where a groupBy-count plus a key
+        collect would be two (VERDICT r4 #6). Larger budgets run the
+        groupBy-count first (≤ per_host_k × #crawl_delays × B rows) and
+        collect the pairs only when that count fits the cap. Every
+        collect here is schedule METADATA (≤ cap rows ≈ 2 MB off the
+        cached frame), not data movement. Bucket counts are summed from
+        the group counts on the driver.
 
-        Returns (sched_counts, host_ids) with host_ids None when the
-        round takes the flat corpus or the bucket-pruned layout read."""
+        Returns (group_counts, bucket_counts, host_ids) with host_ids
+        None when the round takes the flat corpus or the bucket-pruned
+        layout read."""
         from collections import Counter
 
         from ccrawler_spark.io import arrow_scan
@@ -660,18 +657,26 @@ class CrawlEngine:
         # read at call time, so a test can shrink the cap
         cap = arrow_scan.ARROW_PUSHDOWN_CAP
         if self.conf.round_budget <= cap:
-            rows = scheduled.select("host_bucket", "host", "image_id").collect()
-            counts = dict(Counter(int(r["host_bucket"]) for r in rows))
+            rows = sched0.select(*stages.SEQ_GROUP, "host", "image_id").collect()
+            groups = dict(Counter(
+                (int(r["slot_ms"]), int(r["host_bucket"])) for r in rows
+            ))
         else:
-            counts = self._bucket_counts(scheduled)
-            n = sum(counts.values())
+            groups = {
+                (int(r["slot_ms"]), int(r["host_bucket"])): int(r["count"])
+                for r in sched0.groupBy(*stages.SEQ_GROUP).count().collect()
+            }
+            n = sum(groups.values())
             rows = (
-                scheduled.select("host", "image_id").collect()
+                sched0.select("host", "image_id").collect()
                 if self.corpus_layout is not None and 0 < n <= cap else None
             )
+        counts: Counter = Counter()
+        for (_, b), c in groups.items():
+            counts[b] += c
         if self.corpus_layout is None or not rows:
-            return counts, None
-        return counts, _pair_ids(rows)
+            return groups, dict(counts), None
+        return groups, dict(counts), _pair_ids(rows)
 
     def _corpus_side(self, sched_counts: dict[int, int], host_ids):
         """Fetch-join corpus frame for this round: the flat corpus
@@ -694,8 +699,8 @@ class CrawlEngine:
         )
 
     def _bucket_counts(self, df: DataFrame) -> dict[int, int]:
-        # intentional collect: tiny side — B ≤ 64 aggregated rows, the
-        # only .collect() in the engine (lineage bookkeeping, not data)
+        # intentional collect: tiny side — B ≤ 64 aggregated rows
+        # (bootstrap's lineage bookkeeping, not data)
         rows = df.groupBy("host_bucket").count().collect()
         return {int(r["host_bucket"]): int(r["count"]) for r in rows}
 

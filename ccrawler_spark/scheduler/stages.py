@@ -7,9 +7,13 @@ A round's Python crossings are exactly: the Arrow corpus scan
 segment merge (O11, the engine's delta write); bootstrap adds the URL
 normalization tail (O6). All are Arrow-batched, never row-at-a-time
 (BASELINE.json:15). Everything else is JVM-side whole-stage codegen.
+Every window is partitioned: the fetch sequence's group offsets are
+summed on the driver from counts the engine already collects, so no
+stage ranks rows in a single partition.
 
 Determinism discipline (docs/SEMANTICS.md §8): every window/sort here
-orders by the total key ORD = (priority, discover_ts, url_hash, url).
+orders by a total key — ORD = (priority, discover_ts, url_hash, url),
+or SEQ_KEY for the fetch sequence.
 """
 
 from __future__ import annotations
@@ -212,82 +216,45 @@ SEQ_KEY = ["slot_ms", "host_bucket", "host", "url_hash", "url"]
 SEQ_GROUP = ["slot_ms", "host_bucket"]  # prefix of SEQ_KEY ⇒ order-compatible
 
 
-def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
-                        small_budget: bool = False) -> DataFrame:
+def with_fetch_sequence(scheduled: DataFrame,
+                        group_counts: dict[tuple[int, int], int],
+                        round_no: int, seq_offset: int) -> DataFrame:
     """O29: total fetch order (slot_ms, host_bucket, host, url_hash, url).
 
-    ``small_budget`` (round 8, guide §1.2 "remove unnecessary passes"):
-    when the caller's round budget statically bounds the schedule to a
-    few thousand rows, the group prefix-sum below spends three extra
-    plan stages (counts aggregate + offsets window + broadcast join —
-    with AQE, three serialized scheduler jobs per round) to
-    parallelize a sort that fits trivially in one task. The small
-    branch ranks the whole schedule in a single-partition window over
-    the SAME total key, producing identical seq values (row_number
-    over a total order ≡ group prefix-sum over its prefix groups);
-    the engine gates it on conf.round_budget ≤ its SMALL_ROUND_ROWS
-    bound (4,096 rows).
+    A deterministic group prefix-sum: rows are grouped on (slot_ms,
+    host_bucket) — a *prefix* of the total key, so every row of an
+    earlier group precedes every row of a later group — ranked within
+    the group by the key's remainder, and shifted by the cumulative
+    count of earlier groups. ``group_counts`` is {(slot_ms,
+    host_bucket): rows} of ``scheduled``, which the engine already
+    holds from its schedule-metadata collect; the driver sorts the
+    keys and takes the running sum from ``seq_offset``. Every boundary
+    is a pure function of data values: unlike ``repartitionByRange``
+    (whose sampled boundaries vary per job, so reading the partitioning
+    twice can mis-align offsets and ranks), this cannot produce
+    duplicate or gapped seq at any scale or parallelism (T4 guards
+    this).
 
-    Distributed global ranking as a deterministic group prefix-sum:
-    rows are grouped on (slot_ms, host_bucket) — a *prefix* of the
-    total key, so every row of an earlier group precedes every row of
-    a later group — ranked within the group by the key's remainder,
-    and shifted by the cumulative count of earlier groups. Every
-    boundary is a pure function of data values: unlike
-    ``repartitionByRange`` (whose sampled boundaries vary per job, so
-    reading the partitioning twice can mis-align offsets and ranks),
-    this cannot produce duplicate or gapped seq at any scale or
-    parallelism (T4 guards this).
-
-    Cost: one hash shuffle of ``scheduled`` on the group key; the
+    Cost: one hash shuffle of ``scheduled`` on the group key. The
     offsets side is |distinct (slot_ms, host_bucket)| rows — in a
     politeness-sloted schedule that is O(per_host_k × #crawl_delays ×
     B) ≪ K, so it broadcasts. Group sizes are ~|hosts scheduled at
     that slot| / B — naturally balanced, no hot key.
     """
-    # both branches end in this select: the prefix-sum's join would
-    # otherwise move the SEQ_GROUP columns to the front, so the two
-    # regimes would emit the same columns in different orders
-    out_cols = [*scheduled.columns, "seq", "round"]
-    if small_budget:
-        w_all = Window.orderBy(*SEQ_KEY)
-        return (
-            scheduled.withColumn(
-                "seq",
-                (F.row_number().over(w_all) - 1 + F.lit(seq_offset))
-                .cast("long"),
-            )
-            .withColumn("round", F.lit(round_no))
-            .select(*out_cols)
-        )
-    counts = scheduled.groupBy(*SEQ_GROUP).count()
-    # single-partition window — intentional: its input is the AGGREGATED
-    # counts side, |distinct (slot_ms, host_bucket)| ≤ per_host_k ×
-    # |distinct crawl_delay values| × B rows (≈ 64k worst case at bench
-    # conf), never the K scheduled rows. Both unpartitioned windows make
-    # WindowExec log a "No Partition Defined" WARN per plan (a
-    # partitionBy(lit(0)) does not stop it: the optimizer drops the
-    # constant key); cli.build_session raises that one logger to ERROR.
-    # If per-host crawl_delay overrides ever multiply distinct slot
-    # values past ~10^6, replace with a two-level prefix-sum (per-slot_ms
-    # partial sums, then a slot_ms-level scan).
-    w_off = Window.orderBy(*SEQ_GROUP).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        *SEQ_GROUP,
-        F.coalesce(F.sum("count").over(w_off), F.lit(0)).alias("_goff"),
+    rows, off = [], seq_offset
+    for key in sorted(group_counts):
+        rows.append((*key, off))
+        off += group_counts[key]
+    # explicit schema: an empty round (drained frontier) ships no rows
+    offsets = scheduled.sparkSession.createDataFrame(
+        rows, "slot_ms long, host_bucket int, _goff long"
     )
     w = Window.partitionBy(*SEQ_GROUP).orderBy("host", "url_hash", "url")
     return (
         scheduled.join(F.broadcast(offsets), on=SEQ_GROUP, how="inner")
-        .withColumn(
-            "seq",
-            (F.row_number().over(w) - 1 + F.col("_goff") + F.lit(seq_offset))
-            .cast("long"),
-        )
+        .withColumn("seq", (F.row_number().over(w) - 1 + F.col("_goff")).cast("long"))
         .withColumn("round", F.lit(round_no))
-        .select(*out_cols)
+        .select(*scheduled.columns, "seq", "round")
     )
 
 

@@ -1,13 +1,17 @@
-"""Stage-level timing of one bench round at a given core count.
+"""Stage-level timing of one round under the BENCH conf at a given
+core count, over a generated fixture (default ``bench``):
 
     python scripts/profile_round.py 32
+    python scripts/profile_round.py 4 tiny
 """
 
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -20,10 +24,10 @@ from ccrawler_spark.scheduler.seen import seen_dedup
 
 cores = int(sys.argv[1]) if len(sys.argv) > 1 else 32
 spark = build_session(cores)
-fdir = "/root/repo/.fixtures/bench"
+fdir = str(ROOT / ".fixtures" / (sys.argv[2] if len(sys.argv) > 2 else "bench"))
 out = tempfile.mkdtemp()
 engine, store = make_engine(spark, fdir, out, conf=BENCH)
-sys.path.insert(0, "/root/repo/bench")
+sys.path.insert(0, str(ROOT / "bench"))
 from run_bench import universe_seeds
 
 seeds = universe_seeds(spark, fdir)
@@ -47,11 +51,13 @@ frontier = store.read_frontier(0)
 gated = stages.robots_gate(frontier, engine.robots_active, conf).cache()
 denied = gated.filter(~F.col("allowed")).select(*FRONTIER_COLS)
 allowed = gated.filter(F.col("allowed"))
-scheduled = stages.with_fetch_sequence(
-    stages.dequeue(allowed, conf), r, 0
-).cache()
-n_scheduled = T("dequeue+seq", lambda: scheduled.count())
-fetched = fetch_and_decode(scheduled, engine.corpus, n_scheduled)
+sched0 = stages.dequeue(allowed, conf).cache()
+groups, counts, _ = T("dequeue+metadata",
+                      lambda: engine._sched_metadata(sched0))
+n_scheduled = sum(counts.values())
+fetched = stages.with_fetch_sequence(
+    fetch_and_decode(sched0, engine.corpus, n_scheduled), groups, r, 0
+)
 log_cols = ["seq", "url", "host", "host_bucket", "slot_ms", "priority",
             "discover_ts", "depth", "fetch_ok", "pixels_ok", "caption_ok",
             "phash_ok", "psnr_db"]
@@ -59,7 +65,7 @@ T("fetch+decode+log-write", lambda: store.write_parquet(
     fetched.select(*log_cols), "fetch_log", "round=1"))
 candidates = stages.as_frontier_rows(
     stages.dedup_in_round(
-        stages.discover_links(scheduled, engine.hosts, conf, engine.H, round_ts)
+        stages.discover_links(sched0, engine.hosts, conf, engine.H, round_ts)
     ), conf)
 seen = store.read_seen(0)
 fresh = (
@@ -71,11 +77,10 @@ fresh = (
     .cache()
 )
 T("discover+dedup+seen", lambda: fresh.count())
-T("counts x3", lambda: (engine._bucket_counts(scheduled),
-                        engine._bucket_counts(denied),
+T("counts x2", lambda: (engine._bucket_counts(denied),
                         engine._bucket_counts(fresh)))
 T("removes write", lambda: store.write_parquet(
-    scheduled.select("url_hash", "url").unionByName(
+    sched0.select("url_hash", "url").unionByName(
         denied.select("url_hash", "url")), "frontier", "removes-r1"))
 bloom = store.read_bloom_latest(0)
 T("bloom delta", lambda: engine._write_bloom_delta(fresh, bloom, 1))

@@ -227,30 +227,36 @@ def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
     """Engine planning: a schedule within ARROW_PUSHDOWN_CAP plans the
     Arrow scan with its full (host → ids) pairing — from the one-collect
     path of a TINY budget and from the count-first path of a budget
-    above the cap. Above the cap the plan is no pairing, i.e. the
+    above the cap, which agree on the sequence group counts and the
+    bucket counts. Above the cap the plan is no pairing, i.e. the
     bucket-pruned layout read."""
     from ccrawler_spark.conf import TINY, CrawlConf
     from ccrawler_spark.io import arrow_scan
     from ccrawler_spark.scheduler.cli import make_engine
 
     sched = spark.createDataFrame(
-        [(f"h{i % 100}.example", f"{i:016x}", i % 64) for i in range(4200)],
-        "host string, image_id string, host_bucket int",
+        [(f"h{i % 100}.example", f"{i:016x}", i % 64, (i % 7) * 1000)
+         for i in range(4200)],
+        "host string, image_id string, host_bucket int, slot_ms long",
     )
+    metas = []
     for conf in (TINY, CrawlConf(round_budget=200_000, per_host_k=64)):
         out = tempfile.mkdtemp(prefix="arrowplan-")
         engine, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf,
                                 corpus_layout=layout_dir)
-        counts, host_ids = engine._sched_metadata(sched)
+        groups, counts, host_ids = engine._sched_metadata(sched)
         assert sum(counts.values()) == 4200
         assert set(host_ids) == {f"h{i}.example" for i in range(100)}
         assert sum(len(v) for v in host_ids.values()) == 4200
+        metas.append((groups, counts))
+    assert metas[0] == metas[1]
+    assert len(metas[0][0]) == 7 * 64
     df = engine._corpus_side(counts, host_ids)
     assert "image_id" in df.columns and "host_bucket" in df.columns
     # above the cap: counts only, no pairing
     monkeypatch.setattr(arrow_scan, "ARROW_PUSHDOWN_CAP", 4100)
-    counts2, host_ids2 = engine._sched_metadata(sched)
-    assert counts2 == counts and host_ids2 is None
+    groups2, counts2, host_ids2 = engine._sched_metadata(sched)
+    assert (groups2, counts2) == metas[1] and host_ids2 is None
 
 
 def test_arrow_scan_soundness_randomized(spark, tiny_fixtures, layout_dir):
@@ -394,10 +400,11 @@ phantom = real.select(
 )
 sched = real.unionByName(phantom).withColumn(
     "host_bucket", host_bucket(F.col("host"), 64)
-)
+).withColumn("slot_ms", F.lit(0).cast("long"))
 cols = ["image_id", "fmt", "phash"]
+_, counts, host_ids = engine._sched_metadata(sched)
 got = sorted(
-    tuple(r) for r in engine._corpus_side(*engine._sched_metadata(sched))
+    tuple(r) for r in engine._corpus_side(counts, host_ids)
     .select(*cols).collect()
 )
 flat = spark.read.parquet(f"{fdir}/corpus.parquet")

@@ -2,7 +2,9 @@
 fire (ADVICE r1-high): 200k rows must get a dense, duplicate-free,
 order-respecting seq regardless of input partitioning — and the same
 seq when computed twice (the old repartitionByRange implementation
-re-sampled boundaries per job and produced ~5k duplicates here)."""
+re-sampled boundaries per job and produced ~5k duplicates here).
+The group counts come from a driver-side collect, as in the engine's
+schedule-metadata step."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,9 +29,19 @@ def sched_df(spark):
     return df.cache()
 
 
+def sequenced(df, round_no, seq_offset):
+    """``with_fetch_sequence`` fed its group counts the way the engine
+    feeds them: one driver collect of the (slot_ms, host_bucket) counts."""
+    counts = {
+        (r["slot_ms"], r["host_bucket"]): r["count"]
+        for r in df.groupBy(*stages.SEQ_GROUP).count().collect()
+    }
+    return stages.with_fetch_sequence(df, counts, round_no, seq_offset)
+
+
 def test_seq_dense_and_duplicate_free(sched_df):
     n = sched_df.count()
-    out = stages.with_fetch_sequence(sched_df, round_no=1, seq_offset=100).cache()
+    out = sequenced(sched_df, round_no=1, seq_offset=100).cache()
     agg = out.agg(
         F.count("*").alias("n"),
         F.countDistinct("seq").alias("d"),
@@ -43,7 +55,7 @@ def test_seq_dense_and_duplicate_free(sched_df):
 
 
 def test_seq_respects_total_order(sched_df):
-    out = stages.with_fetch_sequence(sched_df, round_no=1, seq_offset=0)
+    out = sequenced(sched_df, round_no=1, seq_offset=0)
     # seq ascending must equal the SEQ_KEY lexicographic order: compare
     # the rank of each row under both orderings on a deterministic sample
     sample = (
@@ -59,38 +71,39 @@ def test_seq_respects_total_order(sched_df):
 def test_seq_stable_across_recomputation(sched_df):
     """Two independent evaluations of the same plan assign identical
     seq to every row (no per-job sampling anywhere)."""
-    a = stages.with_fetch_sequence(sched_df, 1, 0).select("url", "seq")
-    b = stages.with_fetch_sequence(sched_df, 1, 0).select(
-        "url", F.col("seq").alias("seq_b")
-    )
+    a = sequenced(sched_df, 1, 0).select("url", "seq")
+    b = sequenced(sched_df, 1, 0).select("url", F.col("seq").alias("seq_b"))
     diff = a.join(b, on="url").filter(F.col("seq") != F.col("seq_b")).count()
     assert diff == 0
 
 
 def test_seq_is_long(sched_df):
-    out = stages.with_fetch_sequence(sched_df, 1, 0)
+    out = sequenced(sched_df, 1, 0)
     assert dict(out.dtypes)["seq"] == "bigint"
 
 
-def test_small_budget_branch_identical(sched_df):
-    """Round 8: the small_budget single-window plan must assign exactly
-    the seq the group prefix-sum assigns, row for row (the engine
-    switches plans on conf.round_budget, never values)."""
-    sub = sched_df.filter(F.pmod("url_hash", F.lit(79)) == 0)  # ~2.5k rows
-    a = stages.with_fetch_sequence(sub, 1, 7).select("url", "seq")
-    b = stages.with_fetch_sequence(sub, 1, 7, small_budget=True).select(
-        "url", F.col("seq").alias("seq_b")
-    )
-    diff = a.join(b, on="url").filter(F.col("seq") != F.col("seq_b")).count()
-    assert diff == 0
-    assert a.count() == b.count()
+def test_seq_equals_reference_rank(sched_df):
+    """Exact reference: on a ~2.5k-row subset, the row at position i of
+    the SEQ_KEY order (sorted in Python) gets seq = offset + i."""
+    sub = sched_df.filter(F.pmod("url_hash", F.lit(79)) == 0)
+    rows = sequenced(sub, 1, 7).collect()
+    assert len(rows) > 2000
+    by_key = sorted(rows, key=lambda r: tuple(r[c] for c in stages.SEQ_KEY))
+    assert [r["seq"] for r in by_key] == list(range(7, 7 + len(rows)))
+    assert all(r["round"] == 1 for r in rows)
 
 
-def test_branches_emit_same_columns(sched_df):
-    """Both regimes end in the same select: a consumer that writes or
-    unions the sequenced frame sees one schema whichever regime the
-    round budget picked."""
-    big = stages.with_fetch_sequence(sched_df, 1, 0)
-    small = stages.with_fetch_sequence(sched_df, 1, 0, small_budget=True)
-    assert big.columns == small.columns
-    assert big.columns == [*sched_df.columns, "seq", "round"]
+def test_seq_columns(sched_df):
+    """The input's columns in order, then seq and round: the group
+    join would otherwise move the SEQ_GROUP columns to the front."""
+    out = sequenced(sched_df, 1, 0)
+    assert out.columns == [*sched_df.columns, "seq", "round"]
+
+
+def test_empty_schedule(sched_df):
+    """A drained frontier schedules nothing: no group counts, no rows,
+    the same columns."""
+    empty = sched_df.limit(0)
+    out = stages.with_fetch_sequence(empty, {}, 3, 50)
+    assert out.count() == 0
+    assert out.columns == [*sched_df.columns, "seq", "round"]
