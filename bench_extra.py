@@ -16,7 +16,8 @@ barriers, candidate-pair joins, attach joins), the decomposition the
 round-8 optimizations were selected from.
 
 Uses $SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the scale the
-driver measured round 7 at) and $SPARK_GRAFT_CPUS.
+driver measured round 7 at) and $SPARK_GRAFT_CPUS (default: the CPUs
+this process may run on).
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def spin_ms() -> float:

@@ -18,7 +18,6 @@ class CrawlConf:
     """Pinned scheduling parameters (docs/SEMANTICS.md §6, FIXTURES.md §5)."""
 
     host_buckets: int = 64  # B — frontier/corpus partition key space
-    seen_partitions: int = 64  # S — seen-table partition key space
     per_host_k: int = 2  # k fetches per host per round
     round_budget: int = 50  # K global fetches per round
     max_depth: int = 6

@@ -99,7 +99,7 @@ def _load_removes(specs: tuple):
     accumulate across snapshots/stores (one per manifest version read),
     so an unbounded per-spec cache would leak one materialized remove
     set per snapshot ever scanned. The remove chain itself is small by
-    design (`small_removes`, bounded by compact_threshold rounds)."""
+    design (bounded by compact_threshold rounds)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

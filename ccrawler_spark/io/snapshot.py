@@ -17,7 +17,10 @@ Layout under ``root``:
     data/frontier/removes-r{n}/         per-round equality-deletes
                                         (url_hash, url) — Iceberg-v2
                                         merge-on-read style
-    data/seen/delta-r{n}/seen_part=S/   append-only seen set, partitioned
+    data/seen/base-r{n}/                seen base (url_hash, url), flat;
+                                        rewritten when the frontier
+                                        compacts (bootstrap's seen base
+                                        is frontier/base-r0)
     data/fetch_log/round={n}/           append-only ordered fetch log
     data/bloom/r{n}/                    bloom segment rows (delta)
     data/metrics/r{n}/                  per-partition lineage rows
@@ -25,6 +28,9 @@ Layout under ``root``:
 ``read_frontier(n)`` composes base ∪ adds − removes without rewriting
 the base — at design scale a round writes O(round) data, never O(10^10).
 Compaction (``compact_threshold``) bounds the delta chain length.
+``read_seen(n)`` is the seen base ∪ the same frontier adds: every URL
+that enters the seen set enters the frontier in the same round, so the
+adds delta is also the seen delta and no round writes the seen table.
 
 A crashed round leaves orphan data dirs but no manifest → invisible to
 ``latest()``; re-running the round is idempotent (SEMANTICS.md §6 step
@@ -98,9 +104,7 @@ class SnapshotStore:
     def read_frontier(self, n: int) -> DataFrame:
         """Merge-on-read composition of the frontier at snapshot n."""
         fr = self.read_manifest(n)["frontier"]
-        return self.read_frontier_from(
-            fr["base"], fr["adds"], fr["removes"], fr.get("small_removes", True)
-        )
+        return self.read_frontier_from(fr["base"], fr["adds"], fr["removes"])
 
     @staticmethod
     def _round_of(path: str) -> int:
@@ -114,7 +118,6 @@ class SnapshotStore:
         base: str,
         adds: list[str],
         removes: list[str],
-        small_removes: bool = True,
     ) -> DataFrame:
         """base ∪ adds − removes, sequence-aware merge-on-read.
 
@@ -145,11 +148,11 @@ class SnapshotStore:
                     for p in removes
                 ],
             )
+            # the removes chain is bounded by compact_threshold rounds
+            # of schedules, small beside the frontier it filters
             rm_latest = rm.groupBy("url_hash", "url").agg(
                 F.max("_rr").alias("_max_rr")
-            )
-            if small_removes:
-                rm_latest = rm_latest.hint("broadcast")
+            ).hint("broadcast")
             df = (
                 df.join(rm_latest, on=["url_hash", "url"], how="left")
                 .filter(F.col("_max_rr").isNull() | (F.col("_max_rr") <= F.col("_ar")))
@@ -158,37 +161,34 @@ class SnapshotStore:
         return df.drop("_ar")
 
     def read_seen(self, n: int) -> DataFrame:
-        """Union of append-only seen deltas (url_hash, url, seen_part).
+        """Seen set at snapshot n: (url_hash, url) of the seen base ∪
+        every frontier adds delta since the last frontier compaction.
 
-        Stored partitioned by ``seen_part`` so a probe restricted to a
-        few partitions prunes files via Catalyst partition discovery.
-        The chain length is bounded by ``compact_threshold``
-        (``compact_seen``) — without that, round 1,000 would union a
-        1,000-file chain on the anti-join's build side every round.
-        """
+        Each round's fresh URLs are in its adds delta, so the seen set
+        needs no chain of its own; the adds chain is bounded by
+        ``compact_threshold``. In recrawl mode the adds also carry
+        re-enqueued URLs, which are already seen: the duplicates leave
+        the seen anti-join's result unchanged."""
         m = self.read_manifest(n)
-        dfs = [
-            self.spark.read.parquet(self.data_path(p))
-            for p in m["seen"]["deltas"]
-        ]
-        return reduce(DataFrame.unionByName, dfs)
+        return self._seen_keys([m["seen"]["base"], *m["frontier"]["adds"]])
 
-    def compact_seen(self, deltas: list[str], r: int) -> str:
-        """Fold the seen delta chain into one partitioned base.
+    def _seen_keys(self, paths: list[str]) -> DataFrame:
+        return reduce(DataFrame.unionByName, [
+            self.spark.read.parquet(self.data_path(p)).select("url_hash", "url")
+            for p in paths
+        ])
 
-        The seen set is append-only and pre-deduplicated (candidates
-        pass the exact anti-join before entering), so compaction is a
-        plain union rewrite — no merge logic. Same amortized-O(1)
-        policy as the frontier: each key is rewritten at most once per
-        ``compact_threshold`` rounds, and per-round read cost stops
-        growing with crawl age."""
-        df = reduce(
-            DataFrame.unionByName,
-            [self.spark.read.parquet(self.data_path(p)) for p in deltas],
-        )
+    def compact_seen(self, paths: list[str], r: int) -> str:
+        """Fold the seen base and the adds chain into ``seen/base-r{r}``.
+
+        Runs when the frontier compacts, which drops the adds chain the
+        seen set reads. ``dropDuplicates`` removes the recrawl re-adds
+        (without recrawl every key is added once). The base is flat:
+        the seen anti-join reads all of it every round, so a partition
+        layout would prune nothing, and AQE's coalescing sets the file
+        count."""
         return self.write_parquet(
-            df.repartition("seen_part"), "seen", f"base-r{r}",
-            partition_by=["seen_part"],
+            self._seen_keys(paths).dropDuplicates(), "seen", f"base-r{r}"
         )
 
     def compact_bloom(self, deltas: list[str], r: int) -> str:
@@ -282,7 +282,7 @@ class SnapshotStore:
                 referenced.add(fr["head"]["path"])
             referenced.update(fr["adds"])
             referenced.update(fr["removes"])
-            referenced.update(m["seen"]["deltas"])
+            referenced.add(m["seen"]["base"])
             referenced.update(m["bloom"]["deltas"])
             referenced.update(m["metrics"]["paths"])
             referenced.add("fetch_log")

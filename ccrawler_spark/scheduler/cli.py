@@ -89,8 +89,8 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
         # store table crossed the default of 32 — 3 listing jobs and
         # 165 tasks a round for directories the driver lists in
         # milliseconds. 4096 covers every store table's partition
-        # directories (host_buckets / seen_partitions: 64 in the
-        # shipped confs, 4096 buckets at design scale). A 4,096-bucket
+        # directories (host_buckets: 64 in the shipped confs, 4096
+        # buckets at design scale). A 4,096-bucket
         # table opened in 0.54 s listed here against 14.2 s as a
         # 4,096-task listing job, on local disk and 4 cores
         # (bench/bench_store_listing.py); a remote filesystem, where

@@ -161,27 +161,15 @@ class CrawlEngine:
             .select(*FRONTIER_COLS),
             layout_parts,
         ).cache()
-        seen0 = frontier0.select(
-            "url_hash", "url",
-            umod_long(F.col("url_hash"), conf.seen_partitions)
-            .cast("int").alias("seen_part"),
-            # repartition by the write-partition key (same rationale as
-            # run_round's seen delta): without it each layout task
-            # writes a file into every seen_part dir — 16k small files
-            # at the 256-way design-scale layout, all of which every
-            # later round's anti-join has to list
-        ).repartition("seen_part")
-        # the four snapshot-0 outputs are independent given the cached
-        # frontier0 — overlap them like run_round's write phase
+        # the snapshot-0 outputs are independent given the cached
+        # frontier0 — overlap them like run_round's write phase. The
+        # seeds are the whole seen set, so the frontier base doubles as
+        # the seen base
         jobs = {}
-        with ThreadPoolExecutor(max_workers=4) as ex:
+        with ThreadPoolExecutor(max_workers=3) as ex:
             jobs["base"] = ex.submit(
                 self.store.write_parquet, frontier0, "frontier", "base-r0",
                 partition_by=["host_bucket"],
-            )
-            jobs["seen"] = ex.submit(
-                self.store.write_parquet, seen0, "seen", "delta-r0",
-                partition_by=["seen_part"],
             )
             jobs["bloom"] = ex.submit(
                 self._write_bloom_delta, frontier0,
@@ -198,7 +186,6 @@ class CrawlEngine:
                     self.store.write_parquet, head0, "frontier", "head-r0"
                 )
         base = jobs["base"].result()
-        seen_path = jobs["seen"].result()
         bloom_path = jobs["bloom"].result()
         head_entry = (
             {"path": jobs["head"].result(), "since_refill": 0}
@@ -213,9 +200,8 @@ class CrawlEngine:
         self.store.commit(0, {
             "round": 0,
             "frontier": {"base": base, "adds": [], "removes": [],
-                          "small_removes": True, "last_adds": base,
-                          "head": head_entry},
-            "seen": {"deltas": [seen_path]},
+                          "last_adds": base, "head": head_entry},
+            "seen": {"base": base},
             "bloom": {"deltas": [bloom_path]},
             "metrics": {"paths": [metrics_path]},
             "counters": {"fetched_total": 0, "denied_total": 0},
@@ -369,14 +355,14 @@ class CrawlEngine:
         # build below, which cogroups them with fresh on host_bucket, so
         # a task holds only its buckets' segments (no driver collect)
         bloom = store.read_bloom_latest(r - 1)
-        fresh = seen_dedup(candidates, seen, conf)
+        fresh = seen_dedup(candidates, seen)
         # cached WITHOUT the adds-layout repartition (round 8): the
         # layout shuffle only serves the adds-delta write, and its
         # partition count is now sized from n_fresh AFTER the counts
         # job (see `additions` below) — a tiny round no longer pays a
         # fixed 64-task shuffle+write for a handful of rows. The other
-        # consumers (counts, seen delta, bloom cogroup, head union)
-        # each re-key anyway.
+        # consumers (counts, bloom cogroup, head union) each re-key
+        # anyway.
         fresh = (
             fresh.withColumn("status", F.lit("queued"))
             .withColumn("retry_count", F.lit(0))
@@ -443,7 +429,7 @@ class CrawlEngine:
             if n_fetched else None
         )
 
-        # 11. frontier/seen/bloom update PLANS, built BEFORE joining the
+        # 11. frontier/bloom update PLANS, built BEFORE joining the
         # counts job so the py4j construction overlaps it — the counts
         # only pick which submissions happen (determinism is unaffected:
         # each write's content is a pure function of the cached inputs).
@@ -451,8 +437,9 @@ class CrawlEngine:
             int(b): v.get("bloom_version", 0) for b, v in prev["lineage"].items()
         }
         # O30: fetched rows re-enter the frontier at fetch_ts + interval;
-        # they ride the same adds delta but never touch seen/bloom (the
-        # URL is already seen — re-enqueue is deliberate)
+        # they ride the same adds delta but never touch bloom (the URL
+        # is already seen — re-enqueue is deliberate; the seen set reads
+        # them through the adds, a no-op for the anti-join)
         recrawl = None
         if conf.recrawl_interval_micros > 0 and n_fetched:
             recrawl = sched0.select(
@@ -490,14 +477,6 @@ class CrawlEngine:
                 self._head_m(), salted=True,
             ).drop("_rn").select(*HEAD_COLS)
         additions = fresh if recrawl is None else fresh.unionByName(recrawl)
-        # repartition by the write-partition key: otherwise each
-        # of the 64 host_bucket tasks writes a file into every
-        # seen_part dir (64×64 small files per round)
-        seen_delta = fresh.select(
-            "url_hash", "url",
-            umod_long(F.col("url_hash"), conf.seen_partitions)
-            .cast("int").alias("seen_part"),
-        ).repartition("seen_part")
 
         denied_counts: dict[int, int] = {}
         fresh_counts: dict[int, int] = {}
@@ -530,10 +509,6 @@ class CrawlEngine:
                 partition_by=["host_bucket"],
             )
         if n_fresh:
-            jobs["seen"] = pool.submit(
-                store.write_parquet, seen_delta, "seen", f"delta-r{r}",
-                partition_by=["seen_part"],
-            )
             jobs["bloom"] = pool.submit(
                 self._write_bloom_delta, fresh, bloom, r
             )
@@ -557,7 +532,6 @@ class CrawlEngine:
         )
         metrics_path = self._write_metrics(lineage, r)
         adds_path = jobs["adds"].result() if "adds" in jobs else None
-        seen_path = jobs["seen"].result() if "seen" in jobs else None
         bloom_path = jobs["bloom"].result() if "bloom" in jobs else None
         removes_path = (
             removes_job.result() if removes_job is not None
@@ -569,17 +543,19 @@ class CrawlEngine:
         )
         log_job.result()  # fetch_log must be durable before the commit
 
-        # delta-chain composition (+ compaction). All three chains are
-        # bounded by compact_threshold — without it per-round fixed cost
-        # grows linearly with crawl age (a round-1000 seen anti-join
-        # would union a 1000-file chain on its build side). The three
-        # compactions are independent of each other and overlap on
-        # driver threads like the delta writes above.
+        # delta-chain composition (+ compaction). The frontier and bloom
+        # chains are bounded by compact_threshold — without it per-round
+        # fixed cost grows linearly with crawl age (a round-1000 seen
+        # anti-join would union a 1000-file adds chain on its build
+        # side). The seen set reads the frontier adds chain, so it
+        # compacts exactly when the frontier does. The compactions are
+        # independent of each other and overlap on driver threads like
+        # the delta writes above.
         fr_prev = prev["frontier"]
         adds = fr_prev["adds"] + ([adds_path] if adds_path else [])
         removes_list = fr_prev["removes"] + ([removes_path] if removes_path else [])
         base = fr_prev["base"]
-        seen_deltas = prev["seen"]["deltas"] + ([seen_path] if seen_path else [])
+        seen_base = prev["seen"]["base"]
         bloom_deltas = prev["bloom"]["deltas"] + ([bloom_path] if bloom_path else [])
         cjobs = {}
         if len(adds) >= self.store.compact_threshold:
@@ -594,24 +570,23 @@ class CrawlEngine:
                 store.write_parquet, composed, "frontier", f"base-r{r}",
                 partition_by=["host_bucket"],
             )
-        if len(seen_deltas) >= self.store.compact_threshold:
-            cjobs["seen"] = pool.submit(store.compact_seen, seen_deltas, r)
+            cjobs["seen"] = pool.submit(
+                store.compact_seen, [seen_base, *adds], r
+            )
         if len(bloom_deltas) >= self.store.compact_threshold:
             cjobs["bloom"] = pool.submit(store.compact_bloom, bloom_deltas, r)
         if "frontier" in cjobs:
             base = cjobs["frontier"].result()
             adds, removes_list = [], []
-        if "seen" in cjobs:
-            seen_deltas = [cjobs["seen"].result()]
+            seen_base = cjobs["seen"].result()
         if "bloom" in cjobs:
             bloom_deltas = [cjobs["bloom"].result()]
 
         self.store.commit(r, {
             "round": r,
             "frontier": {"base": base, "adds": adds, "removes": removes_list,
-                          "small_removes": True, "last_adds": adds_path,
-                          "head": head_entry},
-            "seen": {"deltas": seen_deltas},
+                          "last_adds": adds_path, "head": head_entry},
+            "seen": {"base": seen_base},
             "bloom": {"deltas": bloom_deltas},
             "metrics": {"paths": prev["metrics"]["paths"] + [metrics_path]},
             "counters": {

@@ -15,23 +15,12 @@ full string as equality confirmation (collision rule, SURVEY.md §5.5).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ccrawler_spark.conf import CrawlConf
-from ccrawler_spark.functions.spark_exprs import umod_long
 
 
-def seen_dedup(candidates: DataFrame, seen: DataFrame,
-               conf: CrawlConf) -> DataFrame:
-    """Return candidates not in the seen set (exact)."""
-    # seen_part (the seen table's partition column) joins as a key, but
-    # Spark's dynamic partition pruning skips left-anti joins, so the
-    # whole seen table is scanned; a round's candidates hit every
-    # seen_part anyway
-    return candidates.withColumn(
-        "_seen_part", umod_long(F.col("url_hash"), conf.seen_partitions).cast("int")
-    ).join(
-        seen.withColumnRenamed("seen_part", "_seen_part"),
-        on=["_seen_part", "url_hash", "url"],
-        how="left_anti",
-    ).drop("_seen_part")
+def seen_dedup(candidates: DataFrame, seen: DataFrame) -> DataFrame:
+    """Return candidates not in the seen set (exact).
+
+    ``seen`` is the seen base ∪ the frontier adds chain
+    (``SnapshotStore.read_seen``); in recrawl mode the adds repeat
+    already-seen keys, which a left-anti join ignores."""
+    return candidates.join(seen, on=["url_hash", "url"], how="left_anti")

@@ -69,7 +69,7 @@ candidates = stages.as_frontier_rows(
     ), conf)
 seen = store.read_seen(0)
 fresh = (
-    seen_dedup(candidates, seen, conf)
+    seen_dedup(candidates, seen)
     .withColumn("status", F.lit("queued"))
     .withColumn("retry_count", F.lit(0))
     .select(*FRONTIER_COLS)

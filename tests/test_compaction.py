@@ -22,6 +22,12 @@ def test_compaction_preserves_parity(spark, tiny_fixtures, tmp_path):
     # threshold 2 ⇒ at least one compaction happened: chains were reset
     assert m["frontier"]["base"] != "frontier/base-r0"
     assert len(m["frontier"]["adds"]) < 3
+    # no round writes a seen delta: the seen table holds only the flat
+    # bases that frontier compaction rewrites
+    seen_dirs = list((tmp_path / "data" / "seen").iterdir())
+    assert seen_dirs and all(d.name.startswith("base-r") for d in seen_dirs)
+    assert not [p for d in seen_dirs for p in d.iterdir() if p.is_dir()]
+    assert tt.engine_seen(store, 3) == tt.oracle_run("tiny", rounds=3).seen
     # parity unchanged
     eng = tt.engine_fetch_sequence(store)
     orc = tt.oracle_fetch_sequence(tt.oracle_run("tiny", rounds=3))
@@ -56,11 +62,12 @@ def test_long_horizon_chains_bounded_and_wall_flat(spark, tiny_fixtures,
         walls.append(time.time() - t0)
         m = store.read_manifest(r)
         assert len(m["frontier"]["adds"]) < store.compact_threshold, r
-        assert len(m["seen"]["deltas"]) <= store.compact_threshold, r
+        # the seen set reads its base plus the frontier adds chain
+        assert 1 + len(m["frontier"]["adds"]) <= store.compact_threshold, r
         assert len(m["bloom"]["deltas"]) <= store.compact_threshold, r
     # compaction actually fired for each chain (paths renamed to base-r*)
     m = store.read_manifest(ROUNDS)
-    assert any(p.startswith("seen/base-r") for p in m["seen"]["deltas"])
+    assert m["seen"]["base"].startswith("seen/base-r")
     assert any(p.startswith("bloom/base-r") for p in m["bloom"]["deltas"])
     # wall flatness: late rounds must not cost materially more than the
     # post-warmup early rounds (chains bounded ⇒ no growth with age;

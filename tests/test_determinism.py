@@ -3,6 +3,9 @@ idempotence. Different local[N] masters need separate JVMs, so the
 engine runs as CLI subprocesses; stores are compared logically with
 DuckDB (parquet layout may differ, content must not)."""
 
+import json
+import os
+import pathlib
 import subprocess
 import sys
 
@@ -31,9 +34,16 @@ def fetch_rows(store: str):
 
 
 def seen_rows(store: str):
+    """Seen set of the latest snapshot: the seen base ∪ the frontier
+    adds chain its manifest names (SnapshotStore.read_seen)."""
+    latest = sorted(pathlib.Path(store, "manifests").glob("manifest-*.json"))[-1]
+    m = json.loads(latest.read_text())
+    globs = [f"{store}/data/{p}/**/*.parquet"
+             for p in [m["seen"]["base"], *m["frontier"]["adds"]]]
     con = duckdb.connect()
     rows = con.execute(
-        f"SELECT url FROM '{store}/data/seen/*/*/*.parquet' ORDER BY url"
+        "SELECT url FROM read_parquet(?, union_by_name=true) ORDER BY url",
+        [globs],
     ).fetchall()
     con.close()
     return rows
@@ -41,10 +51,14 @@ def seen_rows(store: str):
 
 @pytest.mark.slow
 def test_parallelism_independence(tiny_fixtures, tmp_path):
-    """local[8] and local[32] must produce identical fetch_log + seen."""
+    """local[n] and local[4n] must produce identical fetch_log + seen.
+    n is a quarter of the CPUs this process may run on (at least 1), so
+    neither JVM oversubscribes the box by more than 4×."""
+    n = max(1, len(os.sched_getaffinity(0)) // 4)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    run_cli(["--size", "tiny", "--rounds", "3", "--out", a, "--cores", "8"])
-    run_cli(["--size", "tiny", "--rounds", "3", "--out", b, "--cores", "32"])
+    run_cli(["--size", "tiny", "--rounds", "3", "--out", a, "--cores", str(n)])
+    run_cli(["--size", "tiny", "--rounds", "3", "--out", b,
+             "--cores", str(4 * n)])
     assert fetch_rows(a) == fetch_rows(b)
     assert seen_rows(a) == seen_rows(b)
 
@@ -89,10 +103,10 @@ def test_mid_round_write_failure_then_retry_is_clean(spark, tiny_fixtures,
     orig = store_b.write_parquet
 
     def flaky_write(df, *parts, **kw):
-        # the seen delta is one of several write-phase pool jobs
+        # the bloom delta is one of several write-phase pool jobs
         # submitted together — failing it leaves siblings in flight
-        if parts and parts[0] == "seen":
-            raise RuntimeError("injected seen-delta write failure")
+        if parts and parts[0] == "bloom":
+            raise RuntimeError("injected bloom-delta write failure")
         return orig(df, *parts, **kw)
 
     store_b.write_parquet = flaky_write

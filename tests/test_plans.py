@@ -50,23 +50,6 @@ def test_fetch_prunes_corpus_columns(spark, tiny_fixtures):
                for l in read_schemas), read_schemas
 
 
-def test_seen_read_partition_pruning(spark, tiny_fixtures, tmp_path):
-    """The seen table's seen_part dirs must prune via PartitionFilters."""
-    from ccrawler_spark.conf import TINY
-    from ccrawler_spark.functions.spark_exprs import umod_long
-
-    df = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(1000)], "url_hash long, url string"
-    ).withColumn("seen_part", umod_long(F.col("url_hash"), 64).cast("int"))
-    df.write.partitionBy("seen_part").parquet(str(tmp_path / "seen"))
-    seen = spark.read.parquet(str(tmp_path / "seen"))
-    plan = plan_of(seen.filter(F.col("seen_part").isin([1, 2, 3])))
-    # the partition predicate must land in PartitionFilters (dir-level
-    # pruning), not PushedFilters/post-scan Filter
-    pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf_lines and any("seen_part" in l for l in pf_lines), plan[:800]
-
-
 def test_textops_scalar_zero_shuffle(spark):
     """token/quality/lang-id: exactly ONE Arrow crossing (the integer
     token-count pass — round 8 migration off the interpreted-HOF

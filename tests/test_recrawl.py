@@ -77,3 +77,9 @@ def test_recrawl_under_compaction(spark, tiny_fixtures, tmp_path_factory):
     assert tt.engine_frontier_urls(store, ROUNDS) == {
         row.url for row in oracle.frontier_after[ROUNDS]
     }
+    assert tt.engine_seen(store, ROUNDS) == oracle.seen
+    # the compacted seen base folds the recrawl re-adds: one row per key
+    base = store.read_manifest(ROUNDS)["seen"]["base"]
+    assert base.startswith("seen/base-r"), base
+    keys = spark.read.parquet(store.data_path(base))
+    assert keys.count() == keys.dropDuplicates(["url_hash", "url"]).count()

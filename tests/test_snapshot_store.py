@@ -15,7 +15,7 @@ def test_conf_fingerprint_mismatch_refuses_resume(spark, tmp_path):
     store = SnapshotStore(spark, tmp_path, TINY)
     store.commit(0, {"round": 0,
                      "frontier": {"base": "x", "adds": [], "removes": []},
-                     "seen": {"deltas": []}, "bloom": {"deltas": []},
+                     "seen": {"base": "frontier/base-r0"}, "bloom": {"deltas": []},
                      "metrics": {"paths": []},
                      "counters": {"fetched_total": 0, "denied_total": 0},
                      "lineage": {}})
@@ -33,7 +33,7 @@ def test_crashed_round_invisible_and_gc(spark, tmp_path):
     store.commit(0, {"round": 0,
                      "frontier": {"base": "frontier/base-r0", "adds": [],
                                   "removes": []},
-                     "seen": {"deltas": []}, "bloom": {"deltas": []},
+                     "seen": {"base": "frontier/base-r0"}, "bloom": {"deltas": []},
                      "metrics": {"paths": []},
                      "counters": {"fetched_total": 0, "denied_total": 0},
                      "lineage": {}})
@@ -64,7 +64,7 @@ def test_commit_is_atomic_rename(spark, tmp_path):
     store = SnapshotStore(spark, tmp_path, TINY)
     store.commit(0, {"round": 0,
                      "frontier": {"base": "x", "adds": [], "removes": []},
-                     "seen": {"deltas": []}, "bloom": {"deltas": []},
+                     "seen": {"base": "frontier/base-r0"}, "bloom": {"deltas": []},
                      "metrics": {"paths": []},
                      "counters": {"fetched_total": 0, "denied_total": 0},
                      "lineage": {}})
