@@ -481,6 +481,23 @@ def q_pruned_corpus_read(spark, sf_dir):
     )
 
 
+def _sweep_dead_gate_stores(root) -> None:
+    """Remove every ``gate-crawl-store-<pid>`` under ``root`` whose
+    process has exited. A gate run cannot remove its own store (the
+    frame it returns reads it lazily), so the next run sweeps it; a
+    live run's store is never touched."""
+    import pathlib
+    import shutil
+
+    for d in pathlib.Path(root).glob("gate-crawl-store-*"):
+        try:
+            os.kill(int(d.name.rsplit("-", 1)[1]), 0)
+        except ProcessLookupError:
+            shutil.rmtree(d, ignore_errors=True)
+        except (ValueError, PermissionError):
+            pass  # not a pid suffix, or another user's live process
+
+
 def q_crawl_round_log(spark, sf_dir):
     """30th gate (VERDICT r6 optional #8): TWO full crawl-scheduler
     rounds of the REAL engine — bootstrap, dequeue, robots gate,
@@ -503,7 +520,8 @@ def q_crawl_round_log(spark, sf_dir):
     # one store path per process, recreated per call (ADVICE r7: the
     # previous mkdtemp leaked a full 2-round engine store per gate
     # invocation); the pid keeps two concurrent gate runs from deleting
-    # each other's live store
+    # each other's live store, and the stores of exited runs are swept
+    _sweep_dead_gate_stores(FIXTURE_ROOT)
     out = FIXTURE_ROOT / f"gate-crawl-store-{os.getpid()}"
     shutil.rmtree(out, ignore_errors=True)
     _, store, _ = tt.engine_run(spark, "tiny", str(out), rounds=2)

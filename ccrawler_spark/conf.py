@@ -35,8 +35,9 @@ class CrawlConf:
     # head_multiple - 1 rounds. Exact (docs/SEMANTICS.md §6b): a round
     # consumes ≤ per_host_k rows per host, so between refills the head
     # always retains ≥ per_host_k rows that outrank everything outside
-    # it. 0 disables; ignored (full scan every round) in recrawl mode,
-    # where due-time eligibility breaks static rank containment.
+    # it. 0 or 1: no head (1 would refill every round); ignored (full
+    # scan every round) in recrawl mode, where due-time eligibility
+    # breaks static rank containment.
     head_multiple: int = 4
     # O30 recrawl: 0 disables. When > 0, a fetched URL re-enters the
     # frontier with discover_ts = fetch virtual time + interval, and a

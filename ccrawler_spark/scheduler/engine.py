@@ -128,8 +128,9 @@ class CrawlEngine:
     def _use_head(self) -> bool:
         """Head cache (SEMANTICS.md §6b) serves dequeues in non-recrawl
         mode; recrawl's due predicate changes per-round eligibility, so
-        static rank containment does not hold there."""
-        return self.conf.head_multiple > 0 and self.conf.recrawl_interval_micros == 0
+        static rank containment does not hold there. head_multiple = 1
+        would refill every round, which is the plain path."""
+        return self.conf.head_multiple > 1 and self.conf.recrawl_interval_micros == 0
 
     def _head_m(self) -> int:
         return self.conf.head_multiple * self.conf.per_host_k
@@ -247,39 +248,20 @@ class CrawlEngine:
         prev = store.read_manifest(r - 1)
         round_ts = conf.t0_micros + r * conf.round_period_micros
 
-        # 1. dequeue source. Head mode (non-recrawl, SEMANTICS.md §6b):
-        # serve from the persisted per-host top-m head cache — no
+        # 1-4. dequeue: per-host top-k → budget K → politeness slots,
+        # one rank_per_host + split_ranked pass. Head mode (non-recrawl,
+        # head_multiple > 1, SEMANTICS.md §6b) ranks m = head_multiple ×
+        # k rows per host and serves from the persisted head — no
         # full-frontier scan, no gate join (crawl_delay_ms rides the
         # head rows; the gate is static per conf) — refilling from the
-        # composed frontier every head_multiple - 1 rounds. Otherwise:
-        # robots gate (broadcast join, Catalyst longest-prefix) fused
-        # into the frontier scan — no 10M-row cache materialization.
+        # composed frontier every head_multiple - 1 rounds. Otherwise
+        # (m = k) the source is the robots-gated frontier (broadcast
+        # join, Catalyst longest-prefix) fused into the frontier scan.
         h_prev = prev["frontier"].get("head")
         use_head = self._use_head() and h_prev is not None
-        ranked = None
-        survivors = None
-        head_since = 0
-        if use_head:
-            refill = h_prev["since_refill"] >= conf.head_multiple - 1
-            if refill:
-                frontier = store.read_frontier(r - 1)
-                source = stages.robots_gate(
-                    frontier, self.robots_active, conf
-                ).filter(F.col("allowed"))
-            else:
-                source = self.spark.read.parquet(
-                    self.store.data_path(h_prev["path"])
-                )
-                head_since = h_prev["since_refill"] + 1
-            # cached: the ranked frame feeds BOTH the schedule and the
-            # next head (on refill rounds recomputing it would repeat
-            # the full frontier scan + windows)
-            ranked = stages.rank_per_host(
-                source, conf, self._head_m(), salted=refill
-            ).cache()
-            sched0, survivors = stages.split_ranked(ranked, conf, self.H)
-            sched0 = sched0.cache()
-        else:
+        refill = not use_head or h_prev["since_refill"] >= conf.head_multiple - 1
+        head_since = 0 if refill else h_prev["since_refill"] + 1
+        if refill:
             frontier = store.read_frontier(r - 1)
             if conf.recrawl_interval_micros > 0:
                 # O30/O10 due predicate: only rows whose discover_ts
@@ -290,11 +272,24 @@ class CrawlEngine:
                     F.col("discover_ts") <= F.timestamp_micros(F.lit(round_ts))
                 )
             gated = stages.robots_gate(frontier, self.robots_active, conf)
-            allowed = gated.filter(F.col("allowed"))
-            # 2-4. dequeue: per-host top-k → budget K → politeness slots;
-            # cached: the metadata collect materializes it for every
-            # later reader (discovery, fetch, removes, recrawl)
-            sched0 = stages.dequeue(allowed, conf, n_hosts=self.H).cache()
+            source = gated.filter(F.col("allowed"))
+        else:
+            source = self.spark.read.parquet(self.store.data_path(h_prev["path"]))
+        # salted over the full frontier, where a hot host may hold
+        # millions of rows; the head holds at most m rows per host
+        ranked = stages.rank_per_host(
+            source, conf, self._head_m() if use_head else conf.per_host_k,
+            salted=refill,
+        )
+        if use_head:
+            # the ranked frame feeds BOTH the schedule and the next head
+            # (on refill rounds recomputing it would repeat the full
+            # frontier scan + windows)
+            ranked = ranked.cache()
+        sched0, survivors = stages.split_ranked(ranked, conf, self.H)
+        # cached: the metadata collect materializes it for every later
+        # reader (discovery, fetch, removes, recrawl)
+        sched0 = sched0.cache()
 
         # `denied` comes from a separate tiny pass: the gate is static
         # (robots_active is fixed per conf.robots_version), so any row
@@ -557,14 +552,18 @@ class CrawlEngine:
         base = fr_prev["base"]
         seen_base = prev["seen"]["base"]
         bloom_deltas = prev["bloom"]["deltas"] + ([bloom_path] if bloom_path else [])
+        queued_after = sum(v["frontier_offset"] for v in lineage.values())
         cjobs = {}
         if len(adds) >= self.store.compact_threshold:
             composed = store.read_frontier_from(base, adds, removes_list)
-            # same multi-file-per-bucket layout as bootstrap: a
-            # compacted hot bucket must not become a single-file
-            # scan straggler
+            # same multi-file-per-bucket layout as bootstrap, sized like
+            # it from the row count (the lineage's summed frontier
+            # offsets): a compacted hot bucket must not become a
+            # single-file scan straggler, and a small frontier is not
+            # spread over 256 near-empty tasks
             composed = composed.repartition(
-                256, F.col("host_bucket"), umod_long(F.col("url_hash"), 8)
+                stages.fanout(queued_after, 25_000, 256),
+                F.col("host_bucket"), umod_long(F.col("url_hash"), 8),
             )
             cjobs["frontier"] = pool.submit(
                 store.write_parquet, composed, "frontier", f"base-r{r}",
@@ -595,9 +594,8 @@ class CrawlEngine:
             },
             "lineage": lineage,
         })
-        queued_after = sum(v["frontier_offset"] for v in lineage.values())
         sched0.unpersist()
-        if ranked is not None:
+        if use_head:
             ranked.unpersist()
         fresh.unpersist()
         return RoundStats(r, n_fetched, n_denied, n_fresh, queued_after)

@@ -112,48 +112,6 @@ def robots_gate(frontier: DataFrame, active_rules: DataFrame, conf: CrawlConf) -
 
 
 # ------------------------------------------------- O24/O26/O27/O31: dequeue
-def dequeue(allowed: DataFrame, conf: CrawlConf,
-            n_hosts: int | None = None) -> DataFrame:
-    """Per-host top-k → global budget K → politeness slots.
-
-    Skew handling (O24, "hot-host skew via salted repartitioning",
-    B:6): a two-phase top-k — phase 1 ranks within (host, salt) where
-    salt = umod(url_hash, fanout), keeping k rows per salt; phase 2
-    ranks the ≤ k·fanout survivors per host. Exact because each salt
-    keeps ≥ k candidates, and the phase-2 ordering is the same total
-    ORD. A hot host's frontier rows are spread over ``fanout``
-    partitions instead of one straggler task (AQE can split skewed
-    *joins* but not skewed *windows* — SURVEY.md §4.1).
-    """
-    ord_cols = _ord()
-    if conf.salting_enabled and conf.salt_fanout > 1:
-        salt = umod_long(F.col("url_hash"), conf.salt_fanout)
-        w1 = Window.partitionBy("host", salt).orderBy(*ord_cols)
-        allowed = (
-            allowed.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= conf.per_host_k)
-            .drop("_rn1")
-        )
-    w2 = Window.partitionBy("host").orderBy(*ord_cols)
-    topk = (
-        allowed.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= conf.per_host_k)
-        .drop("_rn")
-    )
-    # O31 global budget. When the per-host cap already bounds the round
-    # below K (n_hosts × k ≤ K), the limit is statically a no-op — skip
-    # it: for K in the millions Spark plans orderBy+limit as a
-    # single-partition GlobalLimit, a pure serial stage. The binding
-    # case keeps the sort+limit (exercised by the budget-binding parity
-    # test).
-    if n_hosts is not None and n_hosts * conf.per_host_k <= conf.round_budget:
-        budget = topk
-    else:
-        budget = topk.orderBy(*ord_cols).limit(conf.round_budget)
-    # O27 politeness slots: virtual time within the round, per host
-    return budget.withColumn("slot_ms", slots_col())
-
-
 def slots_col() -> Column:
     """O27 politeness slots: virtual time within the round, per host."""
     w3 = Window.partitionBy("host").orderBy(*_ord())
@@ -163,11 +121,19 @@ def slots_col() -> Column:
 def rank_per_host(allowed: DataFrame, conf: CrawlConf, m: int,
                   salted: bool) -> DataFrame:
     """Attach ``_rn`` = exact per-host rank (1-based, total order ORD),
-    keeping only rank ≤ m. ``salted`` uses the two-phase skew-safe form
-    (phase 1 keeps m rows per (host, salt) — exact because each salt
-    retains ≥ m candidates; see ``dequeue``): required over the full
-    frontier where a hot host may hold millions of rows; unnecessary
-    over the head cache, whose per-host size is capped at m."""
+    keeping only rank ≤ m.
+
+    Skew handling (O24, "hot-host skew via salted repartitioning",
+    B:6): ``salted`` uses a two-phase top-m — phase 1 ranks within
+    (host, salt) where salt = umod(url_hash, salt_fanout), keeping m
+    rows per salt; phase 2 ranks the ≤ m·fanout survivors per host.
+    Exact because each salt keeps ≥ m candidates and phase 2 orders
+    by the same total ORD. A hot host's rows are spread over
+    ``salt_fanout`` partitions instead of one straggler task (AQE can
+    split skewed *joins* but not skewed *windows* — SURVEY.md §4.1).
+    Required over the full frontier, where a hot host may hold
+    millions of rows; unnecessary over the head cache, whose per-host
+    size is capped at m."""
     ord_cols = _ord()
     if salted and conf.salting_enabled and conf.salt_fanout > 1:
         salt = umod_long(F.col("url_hash"), conf.salt_fanout)
@@ -186,17 +152,20 @@ def rank_per_host(allowed: DataFrame, conf: CrawlConf, m: int,
 
 def split_ranked(ranked: DataFrame, conf: CrawlConf,
                  n_hosts: int) -> tuple[DataFrame, DataFrame]:
-    """O26/O31/O27 dequeue over a ``rank_per_host`` frame that also
-    yields the next head cache (docs/SEMANTICS.md §6b): the one ranked
-    pass serves both the schedule (rank ≤ k, then the global budget)
-    and the head survivors (rank ≤ m minus the scheduled rows). The
-    scheduled set is bit-identical to ``dequeue``'s — phase-2 top-k of
-    a superset that still contains the true top-k is the same top-k.
-    Callers cache ``ranked``: both outputs consume it."""
+    """O26/O31/O27 dequeue over a ``rank_per_host`` frame: the
+    schedule is rank ≤ k per host, then the global budget K, then
+    politeness slots; the survivors (rank ≤ m minus the scheduled rows)
+    are the next head cache (docs/SEMANTICS.md §6b) when m > k, and
+    empty when m = k. The schedule is the same for any m ≥ k — phase-2
+    top-k of a superset that still contains the true top-k is the same
+    top-k. Callers that read both outputs cache ``ranked``."""
     topk = ranked.filter(F.col("_rn") <= conf.per_host_k)
     if n_hosts * conf.per_host_k <= conf.round_budget:
-        # statically non-binding budget (see dequeue): survivors are
-        # exactly the rank window (k, m]
+        # the per-host cap already bounds the round below K, so the
+        # limit is statically a no-op — skip it: for K in the millions
+        # Spark plans orderBy+limit as a single-partition GlobalLimit,
+        # a pure serial stage. Survivors are exactly the rank window
+        # (k, m]
         scheduled = topk.drop("_rn")
         survivors = ranked.filter(F.col("_rn") > conf.per_host_k).drop("_rn")
     else:

@@ -12,6 +12,8 @@ from ccrawler_spark.conf import TINY
 ROUNDS = 6  # head_multiple=4 → refill at round 4: the window crosses it
 
 NO_HEAD = dataclasses.replace(TINY, head_multiple=0)
+# head_multiple=1 would refill every round: it takes the plain path
+HEAD_ONE = dataclasses.replace(TINY, head_multiple=1)
 
 
 def _run(spark, out, conf):
@@ -21,14 +23,25 @@ def _run(spark, out, conf):
 
 
 def test_head_on_off_equivalence(spark, tiny_fixtures, tmp_path_factory):
-    s_on = _run(spark, tmp_path_factory.mktemp("head_on"), TINY)
     s_off = _run(spark, tmp_path_factory.mktemp("head_off"), NO_HEAD)
-    assert tt.engine_fetch_sequence(s_on) == tt.engine_fetch_sequence(s_off)
-    for r in range(ROUNDS + 1):
-        assert tt.engine_frontier_urls(s_on, r) == tt.engine_frontier_urls(
-            s_off, r
-        ), f"frontier mismatch after round {r}"
-    assert tt.engine_seen(s_on, ROUNDS) == tt.engine_seen(s_off, ROUNDS)
+    stores = {
+        name: _run(spark, tmp_path_factory.mktemp(name), conf)
+        for name, conf in (("head_on", TINY), ("head_one", HEAD_ONE))
+    }
+    for name, s in stores.items():
+        assert tt.engine_fetch_sequence(s) == tt.engine_fetch_sequence(
+            s_off
+        ), name
+        for r in range(ROUNDS + 1):
+            assert tt.engine_frontier_urls(s, r) == tt.engine_frontier_urls(
+                s_off, r
+            ), f"{name}: frontier mismatch after round {r}"
+        assert tt.engine_seen(s, ROUNDS) == tt.engine_seen(s_off, ROUNDS), name
+    # head_multiple=1 writes no head: every manifest records none
+    assert all(
+        stores["head_one"].read_manifest(r)["frontier"]["head"] is None
+        for r in range(ROUNDS + 1)
+    )
 
 
 def test_head_refill_cadence(spark, tiny_fixtures, tmp_path_factory):

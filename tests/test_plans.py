@@ -92,9 +92,10 @@ def test_dequeue_exchange_budget(spark):
     """The dequeue pipeline must not shuffle more than: salt window +
     host window + budget single-partition + slots reuse (≤ 4
     exchanges); the slots window must reuse the host-window
-    partitioning rather than add a fifth."""
+    partitioning rather than add a fifth. ``n_hosts`` makes the budget
+    bind, so the sort+limit plan is the one counted."""
     from ccrawler_spark.conf import TINY
-    from ccrawler_spark.scheduler.stages import dequeue
+    from ccrawler_spark.scheduler.stages import rank_per_host, split_ranked
 
     fr = spark.createDataFrame(
         [(f"http://h{i%3}.example/p/{i}", f"h{i%3}.example", i, 0)
@@ -103,7 +104,10 @@ def test_dequeue_exchange_budget(spark):
     ).withColumn("discover_ts", F.timestamp_micros(F.lit(0))).withColumn(
         "crawl_delay_ms", F.lit(1000).cast("long")
     )
-    plan = plan_of(dequeue(fr, TINY), mode="simple")
+    n_hosts = TINY.round_budget  # n_hosts × k > K
+    ranked = rank_per_host(fr, TINY, TINY.per_host_k, salted=True)
+    plan = plan_of(split_ranked(ranked, TINY, n_hosts)[0], mode="simple")
+    assert "TakeOrderedAndProject" in plan or "GlobalLimit" in plan, plan
     n_exchanges = plan.count("Exchange")
     assert n_exchanges <= 4, f"{n_exchanges} exchanges:\n{plan}"
 

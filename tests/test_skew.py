@@ -33,8 +33,13 @@ def test_salted_dequeue_exact_vs_unsalted(spark):
     salted = dataclasses.replace(base, salting_enabled=True, salt_fanout=8)
     unsalted = dataclasses.replace(base, salting_enabled=False)
     fr = _frontier(spark).cache()
-    a = stages.dequeue(fr, salted).select("url", "slot_ms")
-    b = stages.dequeue(fr, unsalted).select("url", "slot_ms")
+
+    def schedule(c):
+        # 5 hosts × k = 35 > K = 30: the budget binds
+        ranked = stages.rank_per_host(fr, c, c.per_host_k, salted=True)
+        return stages.split_ranked(ranked, c, 5)[0].select("url", "slot_ms")
+
+    a, b = schedule(salted), schedule(unsalted)
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb and len(ra) == 30
