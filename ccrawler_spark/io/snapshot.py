@@ -14,9 +14,9 @@ Layout under ``root``:
     data/frontier/base-r{n}/            full frontier rewrite (bootstrap
                                         + periodic compaction)
     data/frontier/adds-r{n}/            per-round enqueued rows
-    data/frontier/removes-r{n}/         per-round equality-deletes
-                                        (url_hash, url) — Iceberg-v2
-                                        merge-on-read style
+    data/frontier/denied-r{n}/          per-round robots-denied rows
+                                        (url_hash, url), written only
+                                        when a round denies any
     data/seen/base-r{n}/                seen base (url_hash, url), flat;
                                         rewritten when the frontier
                                         compacts (bootstrap's seen base
@@ -27,6 +27,9 @@ Layout under ``root``:
 
 ``read_frontier(n)`` composes base ∪ adds − removes without rewriting
 the base — at design scale a round writes O(round) data, never O(10^10).
+The manifest's ``frontier.removes`` chain lists each round's equality-
+deletes (Iceberg-v2 merge-on-read style), its ``fetch_log/round={n}`` and
+``frontier/denied-r{n}``; an older store's ``removes-r{n}`` files still read.
 Compaction (``compact_threshold``) bounds the delta chain length.
 ``read_seen(n)`` is the seen base ∪ the same frontier adds: every URL
 that enters the seen set enters the frontier in the same round, so the
@@ -42,6 +45,7 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import re
 import shutil
 from functools import reduce
 from typing import Any
@@ -108,10 +112,11 @@ class SnapshotStore:
 
     @staticmethod
     def _round_of(path: str) -> int:
-        """Data-file sequence number from the path name (base-r{n} /
-        adds-r{n} / removes-r{n}) — the Iceberg-v2 sequence-number
-        analogue that scopes equality-deletes."""
-        return int(str(path).rsplit("-r", 1)[1])
+        """Data-file sequence number from the path name — ``-r{n}``
+        (base, adds, denied and old removes files) or ``round={n}``
+        (fetch log) — the Iceberg-v2 sequence-number analogue that
+        scopes equality-deletes."""
+        return int(re.search(r"(?:-r|round=)(\d+)$", str(path)).group(1))
 
     def read_frontier_from(
         self,
@@ -121,10 +126,15 @@ class SnapshotStore:
     ) -> DataFrame:
         """base ∪ adds − removes, sequence-aware merge-on-read.
 
+        The delete files are each round's ``fetch_log/round={n}`` and
+        ``frontier/denied-r{n}`` (older stores: ``frontier/removes-r{n}``);
+        each is read by ``url``, with ``url_hash = xxhash64(url)``
+        recomputed, because the fetch log does not store the hash.
+
         An equality-delete from round n removes a key only from data
         files written in rounds < n (Iceberg-v2 sequence-number
         semantics). That makes the add→remove→re-add lifecycle of O30
-        recrawl correct: a URL fetched in round n (remove-r{n}) and
+        recrawl correct: a URL fetched in round n (its fetch log) and
         re-enqueued the same round (adds-r{n}) survives, while its
         older copy (added in some round < n) is deleted. Without
         recrawl every key is added at most once and removed strictly
@@ -142,8 +152,9 @@ class SnapshotStore:
             rm = reduce(
                 DataFrame.unionByName,
                 [
-                    self.spark.read.parquet(self.data_path(p)).withColumn(
-                        "_rr", F.lit(self._round_of(p))
+                    self.spark.read.parquet(self.data_path(p)).select(
+                        F.xxhash64("url").alias("url_hash"), "url",
+                        F.lit(self._round_of(p)).alias("_rr"),
                     )
                     for p in removes
                 ],

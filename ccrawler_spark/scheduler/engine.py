@@ -219,7 +219,7 @@ class CrawlEngine:
         The round's overlap pool lives exactly as long as this call:
         on ANY exit — including an exception between submissions — the
         finally drains in-flight writes (wait=True) and cancels queued
-        ones, so no round-r write (fetch_log, removes, ...) outlives
+        ones, so no round-r write (fetch_log, adds, ...) outlives
         the call to race a retry of the same round (ADVICE r5)."""
         from concurrent.futures import ThreadPoolExecutor
 
@@ -288,7 +288,7 @@ class CrawlEngine:
             ranked = ranked.cache()
         sched0, survivors = stages.split_ranked(ranked, conf, self.H)
         # cached: the metadata collect materializes it for every later
-        # reader (discovery, fetch, removes, recrawl)
+        # reader (discovery, fetch, recrawl)
         sched0 = sched0.cache()
 
         # `denied` comes from a separate tiny pass: the gate is static
@@ -327,6 +327,9 @@ class CrawlEngine:
                 )
             else:
                 denied = sched0.select(*FRONTIER_COLS).limit(0)
+        # cached: the fused counts collect materializes it, so the
+        # denied delta's write does not run the gate again
+        denied = denied.cache()
         # schedule-metadata collect (sequence group counts, lineage
         # counts and Arrow-scan keys — see _sched_metadata) on a pool
         # thread: its first action materializes the sched0 cache while
@@ -409,19 +412,6 @@ class CrawlEngine:
         )
         log_job = pool.submit(
             self.store.write_parquet, fetch_log, "fetch_log", f"round={r}"
-        )
-        # early removes submit: the delta is non-empty whenever
-        # n_fetched > 0 (known now, without the denied count), so the
-        # write overlaps the tagged-counts job instead of waiting in
-        # the serial write phase. n_fetched == 0 defers to the write
-        # phase, where n_denied decides.
-        removes = sched0.select("url_hash", "url").unionByName(
-            denied.select("url_hash", "url")
-        )
-        removes_job = (
-            pool.submit(self.store.write_parquet, removes,
-                        "frontier", f"removes-r{r}")
-            if n_fetched else None
         )
 
         # 11. frontier/bloom update PLANS, built BEFORE joining the
@@ -507,9 +497,10 @@ class CrawlEngine:
             jobs["bloom"] = pool.submit(
                 self._write_bloom_delta, fresh, bloom, r
             )
-        if removes_job is None and n_fetched + n_denied:
-            jobs["removes"] = pool.submit(
-                store.write_parquet, removes, "frontier", f"removes-r{r}"
+        if n_denied:
+            jobs["denied"] = pool.submit(
+                store.write_parquet, denied.select("url_hash", "url"),
+                "frontier", f"denied-r{r}",
             )
         # lineage + the metrics write are pure driver work off counts
         # already in hand — do them WHILE the delta writes run (r5 had
@@ -528,15 +519,18 @@ class CrawlEngine:
         metrics_path = self._write_metrics(lineage, r)
         adds_path = jobs["adds"].result() if "adds" in jobs else None
         bloom_path = jobs["bloom"].result() if "bloom" in jobs else None
-        removes_path = (
-            removes_job.result() if removes_job is not None
-            else jobs["removes"].result() if "removes" in jobs else None
-        )
         head_entry = (
             {"path": jobs["head"].result(), "since_refill": head_since}
             if use_head else None
         )
-        log_job.result()  # fetch_log must be durable before the commit
+        # fetch_log must be durable before the commit: it holds every
+        # scheduled url, so with the denied delta it is the round's
+        # frontier equality-deletes
+        log_path = log_job.result()
+        deletes = (
+            ([log_path] if n_fetched else [])
+            + ([jobs["denied"].result()] if n_denied else [])
+        )
 
         # delta-chain composition (+ compaction). The frontier and bloom
         # chains are bounded by compact_threshold — without it per-round
@@ -548,7 +542,7 @@ class CrawlEngine:
         # the delta writes above.
         fr_prev = prev["frontier"]
         adds = fr_prev["adds"] + ([adds_path] if adds_path else [])
-        removes_list = fr_prev["removes"] + ([removes_path] if removes_path else [])
+        removes_list = fr_prev["removes"] + deletes
         base = fr_prev["base"]
         seen_base = prev["seen"]["base"]
         bloom_deltas = prev["bloom"]["deltas"] + ([bloom_path] if bloom_path else [])
@@ -598,6 +592,7 @@ class CrawlEngine:
         if use_head:
             ranked.unpersist()
         fresh.unpersist()
+        denied.unpersist()
         return RoundStats(r, n_fetched, n_denied, n_fresh, queued_after)
 
     # ------------------------------------------------------------- helpers

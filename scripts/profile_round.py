@@ -3,6 +3,9 @@ core count, over a generated fixture (default ``bench``):
 
     python scripts/profile_round.py 32
     python scripts/profile_round.py 4 tiny
+
+The snapshot store lives in a temporary directory that is removed on
+exit.
 """
 
 import sys
@@ -25,8 +28,9 @@ from ccrawler_spark.scheduler.seen import seen_dedup
 cores = int(sys.argv[1]) if len(sys.argv) > 1 else 32
 spark = build_session(cores)
 fdir = str(ROOT / ".fixtures" / (sys.argv[2] if len(sys.argv) > 2 else "bench"))
-out = tempfile.mkdtemp()
-engine, store = make_engine(spark, fdir, out, conf=BENCH)
+# removed by its finalizer even when a step raises
+tmp = tempfile.TemporaryDirectory(prefix="profile-round-")
+engine, store = make_engine(spark, fdir, tmp.name, conf=BENCH)
 sys.path.insert(0, str(ROOT / "bench"))
 from run_bench import universe_seeds
 
@@ -83,9 +87,9 @@ fresh = (
 T("discover+dedup+seen", lambda: fresh.count())
 T("counts x2", lambda: (engine._bucket_counts(denied),
                         engine._bucket_counts(fresh)))
-T("removes write", lambda: store.write_parquet(
-    sched0.select("url_hash", "url").unionByName(
-        denied.select("url_hash", "url")), "frontier", "removes-r1"))
+T("denied write", lambda: store.write_parquet(
+    denied.select("url_hash", "url"), "frontier", "denied-r1"))
 bloom = store.read_bloom_latest(0)
 T("bloom delta", lambda: engine._write_bloom_delta(fresh, bloom, 1))
 spark.stop()
+tmp.cleanup()

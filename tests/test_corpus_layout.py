@@ -5,7 +5,6 @@ partition-pruning proof, and metadata-level row-group skipping proof."""
 import pathlib
 import subprocess
 import sys
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,12 +17,11 @@ def layout_dir(spark, tiny_fixtures):
     return str(ensure_corpus_layout(spark, tiny_fixtures))
 
 
-def _run(spark, fdir, rounds=3, corpus_layout=None):
+def _run(spark, fdir, out, rounds=3, corpus_layout=None):
     from ccrawler_spark.scheduler.cli import make_engine
 
-    out = tempfile.mkdtemp(prefix="layout-parity-")
     engine, store = make_engine(
-        spark, str(fdir), out, size="tiny", corpus_layout=corpus_layout
+        spark, str(fdir), str(out), size="tiny", corpus_layout=corpus_layout
     )
     engine.bootstrap(spark.read.parquet(f"{fdir}/seeds.parquet"))
     for r in range(1, rounds + 1):
@@ -54,13 +52,14 @@ def arrow_calls(monkeypatch):
 
 
 def test_engine_parity_layout_on_off(spark, tiny_fixtures, layout_dir,
-                                     arrow_calls):
+                                     arrow_calls, tmp_path):
     """The pruned fetch path is purely physical: fetch_log and frontier
     must be byte-identical with and without the layout — and with the
     layout every round's corpus side is the Arrow reader."""
-    s_flat = _run(spark, tiny_fixtures)
+    s_flat = _run(spark, tiny_fixtures, tmp_path / "flat")
     assert arrow_calls == []
-    s_lay = _run(spark, tiny_fixtures, corpus_layout=layout_dir)
+    s_lay = _run(spark, tiny_fixtures, tmp_path / "layout",
+                 corpus_layout=layout_dir)
     assert arrow_calls == [layout_dir] * 3
     n = s_flat.latest()
     assert s_lay.latest() == n
@@ -72,21 +71,21 @@ def test_engine_parity_layout_on_off(spark, tiny_fixtures, layout_dir,
     )
 
 
-def test_pruned_scan_pushes_filters(spark, tiny_fixtures, layout_dir):
+def test_pruned_scan_pushes_filters(spark, tiny_fixtures, layout_dir,
+                                    tmp_path):
     """Plan proof for a schedule above the Arrow scan's cap: the
     engine reads the layout with the scheduled host_bucket values in
     PartitionFilters, so unscheduled bucket directories are pruned."""
     from ccrawler_spark.scheduler.cli import make_engine
 
-    out = tempfile.mkdtemp(prefix="layout-dense-")
-    engine, _ = make_engine(spark, str(tiny_fixtures), out, size="tiny",
-                            corpus_layout=layout_dir)
+    engine, _ = make_engine(spark, str(tiny_fixtures), str(tmp_path),
+                            size="tiny", corpus_layout=layout_dir)
     df = engine._corpus_side({1: 10, 2: 10, 3: 10}, None)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [host_bucket" in plan
 
 
-def test_row_group_stats_enable_skipping(spark, tiny_fixtures):
+def test_row_group_stats_enable_skipping(spark, tiny_fixtures, tmp_path):
     """Metadata proof: with the clustered sort order, a single host's
     rows concentrate in few row groups — the [min,max] host_key stats
     of most groups exclude it, so a pushed host_key filter skips them.
@@ -99,7 +98,7 @@ def test_row_group_stats_enable_skipping(spark, tiny_fixtures):
         host_key_py, write_corpus_layout,
     )
 
-    out = tempfile.mkdtemp(prefix="layout-rg-") + "/layout"
+    out = str(tmp_path / "layout")
     corpus = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
     url_map = universe_urls_df(spark, str(tiny_fixtures)).select(
         image_id_of(F.col("url")).alias("image_id"), "host"
@@ -125,7 +124,7 @@ def test_row_group_stats_enable_skipping(spark, tiny_fixtures):
 
 
 def test_layout_bucket_mismatch_fails_loudly(spark, tiny_fixtures,
-                                             layout_dir):
+                                             layout_dir, tmp_path):
     """ADVICE r4 (medium): a layout written with a different bucket
     count than conf.host_buckets must be rejected at engine init —
     the mismatched partition filter would otherwise silently drop
@@ -141,7 +140,7 @@ def test_layout_bucket_mismatch_fails_loudly(spark, tiny_fixtures,
     assert meta is not None and meta["buckets"] == 64
 
     # engine conf with host_buckets != layout buckets → loud failure
-    out = tempfile.mkdtemp(prefix="layout-mismatch-")
+    out = str(tmp_path / "store")
     with pytest.raises(ValueError, match="host_buckets=32"):
         make_engine(
             spark, str(tiny_fixtures), out,
@@ -149,7 +148,7 @@ def test_layout_bucket_mismatch_fails_loudly(spark, tiny_fixtures,
         )
 
     # a layout with no metadata sidecar is unverifiable → also loud
-    legacy = tempfile.mkdtemp(prefix="layout-legacy-") + "/layout"
+    legacy = str(tmp_path / "legacy" / "layout")
     shutil.copytree(layout_dir, legacy)
     (pathlib.Path(legacy) / META_FILE).unlink()
     with pytest.raises(ValueError, match="no _layout_meta"):
@@ -165,7 +164,7 @@ def test_layout_bucket_mismatch_fails_loudly(spark, tiny_fixtures,
 
 
 def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir,
-                                      arrow_calls):
+                                      arrow_calls, tmp_path):
     """Recrawl mode re-schedules fetched URLs (due predicate); the
     pruned fetch path (the Arrow reader, every round) must stay
     byte-neutral there too."""
@@ -174,10 +173,10 @@ def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir,
 
     conf = CrawlConf(round_budget=50, recrawl_interval_micros=90_000_000)
     stores = []
-    for lay in (None, layout_dir):
-        out = tempfile.mkdtemp(prefix="layout-recrawl-")
+    for out, lay in ((tmp_path / "flat", None),
+                     (tmp_path / "layout", layout_dir)):
         engine, store = make_engine(
-            spark, str(tiny_fixtures), out, conf=conf, corpus_layout=lay
+            spark, str(tiny_fixtures), str(out), conf=conf, corpus_layout=lay
         )
         engine.bootstrap(spark.read.parquet(f"{tiny_fixtures}/seeds.parquet"))
         for r in range(1, 4):
@@ -223,7 +222,7 @@ def test_arrow_scan_matches_jvm_and_flat(spark, tiny_fixtures, layout_dir):
 
 
 def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
-                                         monkeypatch):
+                                         monkeypatch, tmp_path):
     """Engine planning: a schedule within ARROW_PUSHDOWN_CAP plans the
     Arrow scan with its full (host → ids) pairing — from the one-collect
     path of a TINY budget and from the count-first path of a budget
@@ -240,8 +239,9 @@ def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
         "host string, image_id string, host_bucket int, slot_ms long",
     )
     metas = []
-    for conf in (TINY, CrawlConf(round_budget=200_000, per_host_k=64)):
-        out = tempfile.mkdtemp(prefix="arrowplan-")
+    big = CrawlConf(round_budget=200_000, per_host_k=64)
+    for i, conf in enumerate((TINY, big)):
+        out = str(tmp_path / f"store{i}")
         engine, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf,
                                 corpus_layout=layout_dir)
         groups, counts, host_ids = engine._sched_metadata(sched)
@@ -372,7 +372,7 @@ def test_arrow_scan_statless_footers_admit_everything(spark, tmp_path):
 
 
 _MANY_IDS_PROBE = """
-import tempfile
+import sys
 
 from pyspark.sql import functions as F
 
@@ -387,7 +387,7 @@ spark = build_session(4, driver_mem="2g")
 fdir = str(ensure_fixtures("tiny"))
 layout = str(ensure_corpus_layout(spark, fdir))
 engine, _ = make_engine(
-    spark, fdir, tempfile.mkdtemp(prefix="many-ids-"),
+    spark, fdir, sys.argv[1],
     conf=CrawlConf(round_budget=4096), corpus_layout=layout,
 )
 real = universe_urls_df(spark, fdir).select(
@@ -417,7 +417,7 @@ spark.stop()
 """
 
 
-def test_small_budget_corpus_side_many_ids_matches_flat(layout_dir):
+def test_small_budget_corpus_side_many_ids_matches_flat(layout_dir, tmp_path):
     """A small-budget round whose schedule carries ~2,000 (host,
     image_id) rows — the tiny corpus's 1,000 ids plus as many phantom
     ids on the same hosts — must read exactly the flat corpus rows of
@@ -426,7 +426,7 @@ def test_small_budget_corpus_side_many_ids_matches_flat(layout_dir):
     (``build_session``) is the condition under test, so this runs in a
     fresh subprocess (one JVM start)."""
     out = subprocess.run(
-        [sys.executable, "-c", _MANY_IDS_PROBE],
+        [sys.executable, "-c", _MANY_IDS_PROBE, str(tmp_path)],
         cwd=pathlib.Path(__file__).resolve().parents[1],
         capture_output=True, text=True, timeout=600,
     )

@@ -46,6 +46,40 @@ def test_crashed_round_invisible_and_gc(spark, tmp_path):
     assert store.read_frontier(0).count() == 1
 
 
+def test_delete_files_are_sequence_scoped(spark, tmp_path):
+    """Every kind of delete file reads by url, and a delete from round
+    n drops a key only from files of rounds < n: an old-style
+    removes-r1 (url_hash, url), a fetch log (no url_hash) and a denied
+    delta. A same-round re-add (adds-r2) survives its fetch-log delete."""
+    from pyspark.sql import functions as F
+
+    store = SnapshotStore(spark, tmp_path, TINY)
+
+    def rows(urls, src):
+        return spark.createDataFrame([(u, src) for u in urls], "url string, src string")
+
+    def keyed(urls, src):
+        return rows(urls, src).withColumn("url_hash", F.xxhash64("url"))
+
+    base = store.write_parquet(keyed("abc", "base"), "frontier", "base-r0")
+    adds = store.write_parquet(keyed("b", "adds"), "frontier", "adds-r2")
+    old_removes = store.write_parquet(
+        keyed("a", "x").select("url_hash", "url"), "frontier", "removes-r1")
+    log = spark.createDataFrame(
+        [(0, "b", "h", 0, 0, 1, None, 0, True, True, True, True, 40.0)],
+        "seq long, url string, host string, host_bucket int, slot_ms long, "
+        "priority int, discover_ts timestamp, depth int, fetch_ok boolean, "
+        "pixels_ok boolean, caption_ok boolean, phash_ok boolean, psnr_db double",
+    )
+    fetch_log = store.write_parquet(log, "fetch_log", "round=2")
+    denied = store.write_parquet(
+        keyed("c", "x").select("url_hash", "url"), "frontier", "denied-r2")
+    assert fetch_log == "fetch_log/round=2"
+
+    got = store.read_frontier_from(base, [adds], [old_removes, fetch_log, denied])
+    assert [(r["url"], r["src"]) for r in got.collect()] == [("b", "adds")]
+
+
 def test_write_parquet_restores_caller_job_description(spark, tmp_path):
     """write_parquet labels its own job, then puts the caller's label
     back rather than clearing it."""
