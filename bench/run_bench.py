@@ -84,11 +84,9 @@ def cpu_probe_ms() -> dict:
     return {"single": round(single, 1), "multi8": round(multi, 1)}
 
 
-# 4 timed rounds = exactly one full head-cache cycle (head_multiple=4:
-# three head-served rounds + the refill round that pays the full
-# frontier composition) — the steady-state amortization, nothing hidden
-# outside the timed window. Warm-up is a corpus-touch + worker spawn,
-# not a round.
+# 4 timed rounds, each ranking the full composed frontier; kept at 4
+# so new samples compare with the committed BENCH/bench_local*.json.
+# Warm-up is a corpus-touch + worker spawn, not a round.
 TIMED_ROUNDS = 4
 
 
@@ -450,7 +448,7 @@ def write_baseline_md(results, pairs, lv, samples=None, bench_dir=None,
     md = ["# BENCH/BASELINE.md — measured crawl-engine throughput\n",
           "Protocol: BASELINE.md (M5). Seeded frontier = full bench universe;",
           f"cache/worker warm-up excluded; {TIMED_ROUNDS} timed rounds",
-          "(= one full head-cache cycle: three head rounds + the refill);",
+          "(each ranks the full composed frontier);",
           "URLs/sec = fetched-and-committed per second of run_round wall.",
           f"Headline numbers are per-level MEDIANS over "
           f"{n_gated if n_gated is not None else (len(samples) if samples else 1)}"

@@ -29,15 +29,10 @@ class CrawlConf:
     salt_threshold_factor: float = 4.0  # τ = factor × mean host queue length
     salt_fanout: int = 8
     robots_version: int = 1  # as-of version for robots rules (O14)
-    # Frontier head-cache (ready queue): keep the per-host top
-    # (head_multiple × per_host_k) allowed rows materialized and serve
-    # dequeues from it; refill from the full frontier every
-    # head_multiple - 1 rounds. Exact (docs/SEMANTICS.md §6b): a round
-    # consumes ≤ per_host_k rows per host, so between refills the head
-    # always retains ≥ per_host_k rows that outrank everything outside
-    # it. 0 or 1: no head (1 would refill every round); ignored (full
-    # scan every round) in recrawl mode, where due-time eligibility
-    # breaks static rank containment.
+    # Read nowhere: the frontier head cache it sized is gone and every
+    # round ranks the gated frontier. Kept because it is part of the
+    # fingerprint (removing it changes every store's) and of older
+    # manifests' confs, which from_json must still load.
     head_multiple: int = 4
     # O30 recrawl: 0 disables. When > 0, a fetched URL re-enters the
     # frontier with discover_ts = fetch virtual time + interval, and a

@@ -37,7 +37,8 @@ adds delta is also the seen delta and no round writes the seen table.
 
 A crashed round leaves orphan data dirs but no manifest → invisible to
 ``latest()``; re-running the round is idempotent (SEMANTICS.md §6 step
-12) and ``gc_orphans()`` removes the debris.
+12) and ``gc_orphans()`` removes the debris, as it does the head-cache
+dirs an older store's manifests name (no round reads them).
 """
 
 from __future__ import annotations
@@ -289,8 +290,6 @@ class SnapshotStore:
             referenced.add(fr["base"])
             if fr.get("last_adds"):
                 referenced.add(fr["last_adds"])
-            if fr.get("head"):
-                referenced.add(fr["head"]["path"])
             referenced.update(fr["adds"])
             referenced.update(fr["removes"])
             referenced.add(m["seen"]["base"])

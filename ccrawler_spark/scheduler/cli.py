@@ -64,7 +64,7 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # let AQE re-coalesce consumers of cached plans: .cache()d frames
-        # (dequeue head, round frontier) otherwise pin the full 256-
+        # (the round's schedule and fresh rows) otherwise pin the full 256-
         # partition layout on every downstream stage — a tiny round was
         # measured at 6,411 executed tasks across 14×256-task stages,
         # pure scheduler dispatch (BENCH/dispatch_floor.json: ~178 ms/job

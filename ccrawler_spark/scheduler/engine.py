@@ -35,10 +35,6 @@ FRONTIER_COLS = [
     "discover_ts", "depth", "image_id", "status", "retry_count",
 ]
 
-# head cache rows persist the robots gate's crawl_delay_ms so head
-# rounds skip the gate join entirely (the gate is static per conf)
-HEAD_COLS = FRONTIER_COLS + ["crawl_delay_ms"]
-
 BLOOM_SCHEMA = StructType([
     StructField("host_bucket", IntegerType()),
     StructField("version", LongType()),
@@ -125,16 +121,6 @@ class CrawlEngine:
         self.robots_active = stages.robots_active(robots, conf.robots_version).cache()
         self.conf = conf
 
-    def _use_head(self) -> bool:
-        """Head cache (SEMANTICS.md §6b) serves dequeues in non-recrawl
-        mode; recrawl's due predicate changes per-round eligibility, so
-        static rank containment does not hold there. head_multiple = 1
-        would refill every round, which is the plain path."""
-        return self.conf.head_multiple > 1 and self.conf.recrawl_interval_micros == 0
-
-    def _head_m(self) -> int:
-        return self.conf.head_multiple * self.conf.per_host_k
-
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame) -> RoundStats:
         """Seeds → snapshot 0 (SEMANTICS.md §6 bootstrap)."""
@@ -167,7 +153,7 @@ class CrawlEngine:
         # seeds are the whole seen set, so the frontier base doubles as
         # the seen base
         jobs = {}
-        with ThreadPoolExecutor(max_workers=3) as ex:
+        with ThreadPoolExecutor(max_workers=2) as ex:
             jobs["base"] = ex.submit(
                 self.store.write_parquet, frontier0, "frontier", "base-r0",
                 partition_by=["host_bucket"],
@@ -176,22 +162,8 @@ class CrawlEngine:
                 self._write_bloom_delta, frontier0,
                 self.spark.createDataFrame([], BLOOM_SCHEMA), 0,
             )
-            if self._use_head():
-                allowed0 = stages.robots_gate(
-                    frontier0, self.robots_active, conf
-                ).filter(F.col("allowed"))
-                head0 = stages.rank_per_host(
-                    allowed0, conf, self._head_m(), salted=True
-                ).drop("_rn").select(*HEAD_COLS)
-                jobs["head"] = ex.submit(
-                    self.store.write_parquet, head0, "frontier", "head-r0"
-                )
         base = jobs["base"].result()
         bloom_path = jobs["bloom"].result()
-        head_entry = (
-            {"path": jobs["head"].result(), "since_refill": 0}
-            if "head" in jobs else None
-        )
         seed_buckets = self._bucket_counts(frontier0)
         lineage = self._lineage_from_counts(
             prev={}, sched={}, denied={}, fresh=seed_buckets,
@@ -201,7 +173,7 @@ class CrawlEngine:
         self.store.commit(0, {
             "round": 0,
             "frontier": {"base": base, "adds": [], "removes": [],
-                          "last_adds": base, "head": head_entry},
+                          "last_adds": base},
             "seen": {"base": base},
             "bloom": {"deltas": [bloom_path]},
             "metrics": {"paths": [metrics_path]},
@@ -248,48 +220,26 @@ class CrawlEngine:
         prev = store.read_manifest(r - 1)
         round_ts = conf.t0_micros + r * conf.round_period_micros
 
-        # 1-4. dequeue: per-host top-k → budget K → politeness slots,
-        # one rank_per_host + split_ranked pass. Head mode (non-recrawl,
-        # head_multiple > 1, SEMANTICS.md §6b) ranks m = head_multiple ×
-        # k rows per host and serves from the persisted head — no
-        # full-frontier scan, no gate join (crawl_delay_ms rides the
-        # head rows; the gate is static per conf) — refilling from the
-        # composed frontier every head_multiple - 1 rounds. Otherwise
-        # (m = k) the source is the robots-gated frontier (broadcast
-        # join, Catalyst longest-prefix) fused into the frontier scan.
-        h_prev = prev["frontier"].get("head")
-        use_head = self._use_head() and h_prev is not None
-        refill = not use_head or h_prev["since_refill"] >= conf.head_multiple - 1
-        head_since = 0 if refill else h_prev["since_refill"] + 1
-        if refill:
-            frontier = store.read_frontier(r - 1)
-            if conf.recrawl_interval_micros > 0:
-                # O30/O10 due predicate: only rows whose discover_ts
-                # (= next due time for recrawl rows) has arrived compete
-                # this round; the rest stay queued untouched (no delta
-                # written for them)
-                frontier = frontier.filter(
-                    F.col("discover_ts") <= F.timestamp_micros(F.lit(round_ts))
-                )
-            gated = stages.robots_gate(frontier, self.robots_active, conf)
-            source = gated.filter(F.col("allowed"))
-        else:
-            source = self.spark.read.parquet(self.store.data_path(h_prev["path"]))
-        # salted over the full frontier, where a hot host may hold
-        # millions of rows; the head holds at most m rows per host
-        ranked = stages.rank_per_host(
-            source, conf, self._head_m() if use_head else conf.per_host_k,
-            salted=refill,
-        )
-        if use_head:
-            # the ranked frame feeds BOTH the schedule and the next head
-            # (on refill rounds recomputing it would repeat the full
-            # frontier scan + windows)
-            ranked = ranked.cache()
-        sched0, survivors = stages.split_ranked(ranked, conf, self.H)
+        # 1-4. dequeue: the composed frontier → (recrawl: due rows) →
+        # robots gate (broadcast join, Catalyst longest-prefix) → salted
+        # per-host top-k → budget K → politeness slots, one plan fused
+        # into the frontier scan
+        frontier = store.read_frontier(r - 1)
+        if conf.recrawl_interval_micros > 0:
+            # O30/O10 due predicate: only rows whose discover_ts
+            # (= next due time for recrawl rows) has arrived compete
+            # this round; the rest stay queued untouched (no delta
+            # written for them)
+            frontier = frontier.filter(
+                F.col("discover_ts") <= F.timestamp_micros(F.lit(round_ts))
+            )
+        gated = stages.robots_gate(frontier, self.robots_active, conf)
         # cached: the metadata collect materializes it for every later
         # reader (discovery, fetch, recrawl)
-        sched0 = sched0.cache()
+        sched0 = stages.split_ranked(
+            stages.rank_per_host(gated.filter(F.col("allowed")), conf),
+            conf, self.H,
+        ).cache()
 
         # `denied` comes from a separate tiny pass: the gate is static
         # (robots_active is fixed per conf.robots_version), so any row
@@ -359,8 +309,7 @@ class CrawlEngine:
         # partition count is now sized from n_fresh AFTER the counts
         # job (see `additions` below) — a tiny round no longer pays a
         # fixed 64-task shuffle+write for a handful of rows. The other
-        # consumers (counts, bloom cogroup, head union) each re-key
-        # anyway.
+        # consumers (counts, bloom cogroup) each re-key anyway.
         fresh = (
             fresh.withColumn("status", F.lit("queued"))
             .withColumn("retry_count", F.lit(0))
@@ -438,29 +387,6 @@ class CrawlEngine:
             ).withColumn("status", F.lit("queued")).withColumn(
                 "retry_count", F.lit(0)
             ).select(*FRONTIER_COLS)
-        new_head = head_with_fresh = None
-        if use_head:
-            # next head: survivors of this round's dequeue plus the
-            # gated fresh adds, capped at m per host (the fresh-union
-            # variant is used only when something was added — survivors
-            # alone are already ≤ m and ranked). Written every round;
-            # refill rebuilds it from the composed frontier instead.
-            new_head = survivors.select(*HEAD_COLS)
-            fresh_allowed = (
-                stages.robots_gate(fresh, self.robots_active, conf)
-                .filter(F.col("allowed"))
-                .select(*HEAD_COLS)
-            )
-            # salted: per-host input here is bounded (≤ m survivors
-            # + one round's discoveries), but a hot host can still
-            # receive the bulk of a round's adds in one window
-            # partition — the two-phase form is exact for any m
-            # (rank_per_host docstring), so salting costs nothing
-            # in correctness and removes the straggler task
-            head_with_fresh = stages.rank_per_host(
-                new_head.unionByName(fresh_allowed), conf,
-                self._head_m(), salted=True,
-            ).drop("_rn").select(*HEAD_COLS)
         additions = fresh if recrawl is None else fresh.unionByName(recrawl)
 
         denied_counts: dict[int, int] = {}
@@ -472,12 +398,6 @@ class CrawlEngine:
         n_fresh = sum(fresh_counts.values())
 
         jobs = {}
-        if use_head:
-            jobs["head"] = pool.submit(
-                store.write_parquet,
-                head_with_fresh if n_fresh else new_head,
-                "frontier", f"head-r{r}",
-            )
         if n_fresh or recrawl is not None:
             # adds-delta layout shuffle, sized from the counts now in
             # hand (25k rows a task, at most 64): same (host_bucket,
@@ -519,10 +439,6 @@ class CrawlEngine:
         metrics_path = self._write_metrics(lineage, r)
         adds_path = jobs["adds"].result() if "adds" in jobs else None
         bloom_path = jobs["bloom"].result() if "bloom" in jobs else None
-        head_entry = (
-            {"path": jobs["head"].result(), "since_refill": head_since}
-            if use_head else None
-        )
         # fetch_log must be durable before the commit: it holds every
         # scheduled url, so with the denied delta it is the round's
         # frontier equality-deletes
@@ -578,7 +494,7 @@ class CrawlEngine:
         self.store.commit(r, {
             "round": r,
             "frontier": {"base": base, "adds": adds, "removes": removes_list,
-                          "last_adds": adds_path, "head": head_entry},
+                          "last_adds": adds_path},
             "seen": {"base": seen_base},
             "bloom": {"deltas": bloom_deltas},
             "metrics": {"paths": prev["metrics"]["paths"] + [metrics_path]},
@@ -589,8 +505,6 @@ class CrawlEngine:
             "lineage": lineage,
         })
         sched0.unpersist()
-        if use_head:
-            ranked.unpersist()
         fresh.unpersist()
         denied.unpersist()
         return RoundStats(r, n_fetched, n_denied, n_fresh, queued_after)

@@ -118,65 +118,50 @@ def slots_col() -> Column:
     return ((F.row_number().over(w3) - F.lit(1)) * F.col("crawl_delay_ms")).cast("long")
 
 
-def rank_per_host(allowed: DataFrame, conf: CrawlConf, m: int,
-                  salted: bool) -> DataFrame:
+def rank_per_host(allowed: DataFrame, conf: CrawlConf) -> DataFrame:
     """Attach ``_rn`` = exact per-host rank (1-based, total order ORD),
-    keeping only rank ≤ m.
+    keeping only rank ≤ k = ``conf.per_host_k``.
 
     Skew handling (O24, "hot-host skew via salted repartitioning",
-    B:6): ``salted`` uses a two-phase top-m — phase 1 ranks within
-    (host, salt) where salt = umod(url_hash, salt_fanout), keeping m
-    rows per salt; phase 2 ranks the ≤ m·fanout survivors per host.
-    Exact because each salt keeps ≥ m candidates and phase 2 orders
-    by the same total ORD. A hot host's rows are spread over
-    ``salt_fanout`` partitions instead of one straggler task (AQE can
-    split skewed *joins* but not skewed *windows* — SURVEY.md §4.1).
-    Required over the full frontier, where a hot host may hold
-    millions of rows; unnecessary over the head cache, whose per-host
-    size is capped at m."""
+    B:6): when ``conf.salting_enabled`` and ``salt_fanout > 1``, a
+    two-phase top-k — phase 1 ranks within (host, salt) where salt =
+    umod(url_hash, salt_fanout), keeping k rows per salt; phase 2 ranks
+    the ≤ k·fanout survivors per host. Exact because each salt keeps
+    ≥ k candidates and phase 2 orders by the same total ORD. A hot
+    host's rows are spread over ``salt_fanout`` partitions instead of
+    one straggler task (AQE can split skewed *joins* but not skewed
+    *windows* — SURVEY.md §4.1); the frontier a round ranks may hold
+    millions of rows for one host."""
+    k = conf.per_host_k
     ord_cols = _ord()
-    if salted and conf.salting_enabled and conf.salt_fanout > 1:
+    if conf.salting_enabled and conf.salt_fanout > 1:
         salt = umod_long(F.col("url_hash"), conf.salt_fanout)
         w1 = Window.partitionBy("host", salt).orderBy(*ord_cols)
         allowed = (
             allowed.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= m)
+            .filter(F.col("_rn1") <= k)
             .drop("_rn1")
         )
     w2 = Window.partitionBy("host").orderBy(*ord_cols)
     return (
         allowed.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= m)
+        .filter(F.col("_rn") <= k)
     )
 
 
 def split_ranked(ranked: DataFrame, conf: CrawlConf,
-                 n_hosts: int) -> tuple[DataFrame, DataFrame]:
-    """O26/O31/O27 dequeue over a ``rank_per_host`` frame: the
-    schedule is rank ≤ k per host, then the global budget K, then
-    politeness slots; the survivors (rank ≤ m minus the scheduled rows)
-    are the next head cache (docs/SEMANTICS.md §6b) when m > k, and
-    empty when m = k. The schedule is the same for any m ≥ k — phase-2
-    top-k of a superset that still contains the true top-k is the same
-    top-k. Callers that read both outputs cache ``ranked``."""
-    topk = ranked.filter(F.col("_rn") <= conf.per_host_k)
-    if n_hosts * conf.per_host_k <= conf.round_budget:
-        # the per-host cap already bounds the round below K, so the
-        # limit is statically a no-op — skip it: for K in the millions
-        # Spark plans orderBy+limit as a single-partition GlobalLimit,
-        # a pure serial stage. Survivors are exactly the rank window
-        # (k, m]
-        scheduled = topk.drop("_rn")
-        survivors = ranked.filter(F.col("_rn") > conf.per_host_k).drop("_rn")
-    else:
-        scheduled = topk.drop("_rn").orderBy(*_ord()).limit(conf.round_budget)
-        # budget may skip arbitrary topk rows — recover survivors
-        # exactly as head ∖ scheduled (scheduled ≤ K rows, broadcast)
-        survivors = ranked.drop("_rn").join(
-            F.broadcast(scheduled.select("url_hash", "url")),
-            on=["url_hash", "url"], how="left_anti",
-        )
-    return scheduled.withColumn("slot_ms", slots_col()), survivors
+                 n_hosts: int) -> DataFrame:
+    """O26/O31/O27 dequeue over a ``rank_per_host`` frame: the per-host
+    top-k, then the global budget K, then politeness slots — the
+    round's schedule."""
+    scheduled = ranked.drop("_rn")
+    if n_hosts * conf.per_host_k > conf.round_budget:
+        # the budget binds. When the per-host cap already bounds the
+        # round below K the limit is statically a no-op and is skipped:
+        # for K in the millions Spark plans orderBy+limit as a
+        # single-partition GlobalLimit, a pure serial stage
+        scheduled = scheduled.orderBy(*_ord()).limit(conf.round_budget)
+    return scheduled.withColumn("slot_ms", slots_col())
 
 
 SEQ_KEY = ["slot_ms", "host_bucket", "host", "url_hash", "url"]

@@ -55,11 +55,9 @@ frontier = store.read_frontier(0)
 gated = stages.robots_gate(frontier, engine.robots_active, conf).cache()
 denied = gated.filter(~F.col("allowed")).select(*FRONTIER_COLS)
 allowed = gated.filter(F.col("allowed"))
-sched0, _ = stages.split_ranked(
-    stages.rank_per_host(allowed, conf, conf.per_host_k, salted=True),
-    conf, engine.H,
-)
-sched0 = sched0.cache()
+sched0 = stages.split_ranked(
+    stages.rank_per_host(allowed, conf), conf, engine.H
+).cache()
 groups, counts, _ = T("dequeue+metadata",
                       lambda: engine._sched_metadata(sched0))
 n_scheduled = sum(counts.values())

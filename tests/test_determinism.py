@@ -12,7 +12,7 @@ import sys
 import duckdb
 import pytest
 
-REPO = "/root/repo"
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 def run_cli(args: list[str]) -> str:
@@ -65,10 +65,32 @@ def test_parallelism_independence(tiny_fixtures, tmp_path):
 
 @pytest.mark.slow
 def test_resume_identical_to_uninterrupted(tiny_fixtures, tmp_path):
-    """Crash after round 2 + resume == uninterrupted 3 rounds (E3)."""
+    """Crash after round 2 + resume == uninterrupted 3 rounds (E3),
+    also when the resumed manifest names a stale frontier head cache,
+    as an older store's may: no round reads it."""
     full, part = str(tmp_path / "full"), str(tmp_path / "part")
     run_cli(["--size", "tiny", "--rounds", "3", "--out", full, "--cores", "8"])
     run_cli(["--size", "tiny", "--rounds", "2", "--out", part, "--cores", "8"])
+    # the stale head: the round-0 frontier, whose top rows rounds 1-2
+    # already fetched, in the old head layout (frontier columns plus
+    # crawl_delay_ms), marked as served by no round since its refill
+    manifests = pathlib.Path(part, "manifests")
+    base0 = json.loads((manifests / "manifest-000000.json").read_text())
+    stale = pathlib.Path(part, "data", "frontier", "head-stale")
+    stale.mkdir()
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT url, url_hash, host, host_bucket::INTEGER AS host_bucket,"
+        " priority, discover_ts, depth, image_id, status, retry_count,"
+        " 1000::BIGINT AS crawl_delay_ms FROM read_parquet("
+        f"'{part}/data/{base0['frontier']['base']}/**/*.parquet',"
+        f" hive_partitioning=true)) TO '{stale}/part-0.parquet' (FORMAT parquet)"
+    )
+    con.close()
+    m2_path = manifests / "manifest-000002.json"
+    m2 = json.loads(m2_path.read_text())
+    m2["frontier"]["head"] = {"path": "frontier/head-stale", "since_refill": 0}
+    m2_path.write_text(json.dumps(m2))
     run_cli(["--size", "tiny", "--rounds", "3", "--out", part, "--cores", "8",
              "--resume"])
     assert fetch_rows(full) == fetch_rows(part)

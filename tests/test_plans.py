@@ -105,8 +105,8 @@ def test_dequeue_exchange_budget(spark):
         "crawl_delay_ms", F.lit(1000).cast("long")
     )
     n_hosts = TINY.round_budget  # n_hosts × k > K
-    ranked = rank_per_host(fr, TINY, TINY.per_host_k, salted=True)
-    plan = plan_of(split_ranked(ranked, TINY, n_hosts)[0], mode="simple")
+    ranked = rank_per_host(fr, TINY)
+    plan = plan_of(split_ranked(ranked, TINY, n_hosts), mode="simple")
     assert "TakeOrderedAndProject" in plan or "GlobalLimit" in plan, plan
     n_exchanges = plan.count("Exchange")
     assert n_exchanges <= 4, f"{n_exchanges} exchanges:\n{plan}"

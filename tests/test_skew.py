@@ -36,8 +36,8 @@ def test_salted_dequeue_exact_vs_unsalted(spark):
 
     def schedule(c):
         # 5 hosts × k = 35 > K = 30: the budget binds
-        ranked = stages.rank_per_host(fr, c, c.per_host_k, salted=True)
-        return stages.split_ranked(ranked, c, 5)[0].select("url", "slot_ms")
+        ranked = stages.rank_per_host(fr, c)
+        return stages.split_ranked(ranked, c, 5).select("url", "slot_ms")
 
     a, b = schedule(salted), schedule(unsalted)
     ra = sorted(map(tuple, a.collect()))
