@@ -1,7 +1,10 @@
 """Time the decode crossing of fetch_and_decode at fixed task counts
 for schedules between the two perfbench workloads (40 and 11,629
 images), to check the decode rule of scheduler/fetch.py (512 images a
-task, at most 2 × defaultParallelism) where neither workload reaches.
+task, at most defaultParallelism) where neither workload reaches.
+This times the flat join + decode plan; the layout fetch
+(fetch_from_layout) sizes its decoding scan by the same rule, capped
+at the file count.
 
 The schedule and its corpus rows are cached first, so the wall covers
 the broadcast join, the decode shuffle, the Arrow crossing and the

@@ -6,9 +6,9 @@ row-group-touch histogram VERDICT r3 asked for.
 - **sparse** (the design-scale shape: frontier ≫ fetch batch, a round
   touches a small fraction of the host universe): ~1% of hosts
   scheduled at per_host_k=200. The schedule fits the Arrow scan's cap,
-  so the engine reads it with io/arrow_scan (host-scoped row-group
-  admission + exact ``is_in`` residual); the flat corpus must scan
-  everything.
+  so the engine fetches it with io/arrow_scan (host-scoped row-group
+  admission + exact ``is_in`` residual, decoding inside the scan:
+  fetch.fetch_from_layout); the flat corpus must scan everything.
 - **dense** (the sandbox bench conf: per_host_k=200 over ALL hosts,
   ~20% of the corpus fetched per round): past the cap, so the engine
   reads the layout pruned to the scheduled ``host_bucket`` partitions.
@@ -61,8 +61,7 @@ def scheduled_for_hosts(spark, fdir: str, step: int, k: int):
     )
 
 
-def rowgroup_histogram(layout: str,
-                       host_ids: dict[str, set[str]] | None):
+def rowgroup_histogram(layout: str, host_ids: dict | None):
     """(touched, total) row groups the engine's plan reads — the
     metadata-level skipping bound. ``host_ids=None`` is the dense
     bucket-pruned read of an all-hosts schedule (every group touched
@@ -111,14 +110,12 @@ def rowgroup_histogram(layout: str,
     return touched, total
 
 
-def time_fetch(spark, scheduled, corpus, n_rows: int,
-               reps: int = 2) -> list[float]:
-    from ccrawler_spark.scheduler.fetch import fetch_and_decode
-
+def time_fetch(fetched, reps: int = 2) -> list[float]:
+    """Walls of ``fetched().count()``: one fetch plan, built and run."""
     walls = []
     for _ in range(reps):
         t0 = time.time()
-        fetch_and_decode(scheduled, corpus, n_rows).count()
+        fetched().count()
         walls.append(round(time.time() - t0, 2))
     return walls
 
@@ -133,8 +130,11 @@ def main():
     from ccrawler_spark.fixtures.gen import (
         ensure_bench_fixtures, ensure_corpus_layout,
     )
-    from ccrawler_spark.io.arrow_scan import pruned_corpus_arrow
     from ccrawler_spark.scheduler.cli import build_session
+    from ccrawler_spark.scheduler.engine import _pair_ids
+    from ccrawler_spark.scheduler.fetch import (
+        fetch_and_decode, fetch_from_layout,
+    )
 
     # 48g: the one-time layout job shuffles the full 13 GB payload
     # column once (real warehouses run this as a normal batch job with
@@ -151,12 +151,13 @@ def main():
     for regime, step in (("sparse", 100), ("dense", 1)):
         sched = scheduled_for_hosts(spark, fdir, step=step, k=200).cache()
         n = sched.count()
-        # the engine's two layout plans (CrawlEngine._corpus_side)
+        # the engine's two layout plans (CrawlEngine._fetch)
         if regime == "sparse":
-            host_ids: dict[str, set] | None = {}
-            for r in sched.select("host", "image_id").collect():
-                host_ids.setdefault(r["host"], set()).add(r["image_id"])
-            pruned = pruned_corpus_arrow(spark, layout, host_ids)
+            host_ids = _pair_ids(
+                sched.select("host", "image_id", "url").collect()
+            )
+            layout_walls = time_fetch(lambda: fetch_from_layout(
+                sched, layout, host_ids, n))
         else:
             host_ids = None
             buckets = [
@@ -166,8 +167,9 @@ def main():
             pruned = spark.read.parquet(layout).filter(
                 F.col("host_bucket").isin(sorted(buckets))
             )
-        flat_walls = time_fetch(spark, sched, flat, n)
-        layout_walls = time_fetch(spark, sched, pruned, n)
+            layout_walls = time_fetch(
+                lambda: fetch_and_decode(sched, pruned, n))
+        flat_walls = time_fetch(lambda: fetch_and_decode(sched, flat, n))
         touched, total = rowgroup_histogram(layout, host_ids)
         out[regime] = {
             "plan": "arrow_scan" if host_ids is not None else "bucket_read",

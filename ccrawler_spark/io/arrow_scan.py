@@ -16,7 +16,7 @@ value vector — with no expression recursion, so its cap,
 the key sets (a few MB).
 
 Execution shape (all distributed, nothing driver-side but the file
-list):
+list, which ships as an Arrow table — a local scan, no Python stage):
 
 - **partition pruning** — the scheduled hosts' bucket-prefixed keys
   name their ``host_bucket=`` directories directly (top 7 bits), so
@@ -27,15 +27,17 @@ list):
   range (bisect over sorted lists, O(log n) per group);
 - **exact residual filter** — admitted groups are read via
   ``read_row_groups`` and filtered with vectorized ``pc.is_in``
-  (hash-set semijoin in Arrow C++), so the rows crossing into the JVM
-  are exactly the scheduled ones — at 100 TB the bytes moved track the
-  schedule, not the touch fraction;
-- the filtered Arrow batches stream to the JVM through ``mapInArrow``
-  (one boundary crossing, no pandas round-trip, payload column moved
-  zero-copy).
+  (hash-set semijoin in Arrow C++), so the rows that reach the
+  caller's ``emit`` are exactly the scheduled ones — at 100 TB the
+  bytes moved track the schedule, not the touch fraction;
+- **one crossing** — each file's filtered table goes through ``emit``
+  inside the same Python task. The engine's fetch path
+  (scheduler/fetch.fetch_from_layout) decodes there, so the payload
+  never returns to the JVM: the scan streams ``(url, caption, flags)``
+  rows, not bytes. ``pruned_corpus_arrow`` emits the rows as read.
 
-The result is identical to ``spark.read.parquet(layout)`` filtered to
-the scheduled (host, image_id) pairs — pinned by
+``pruned_corpus_arrow`` is identical to ``spark.read.parquet(layout)``
+filtered to the scheduled (host, image_id) pairs — pinned by
 tests/test_corpus_layout.py against the flat corpus and by the
 ``pruned_corpus_read`` gate query (DuckDB twin over the flat corpus).
 """
@@ -43,7 +45,9 @@ tests/test_corpus_layout.py against the flat corpus and by the
 from __future__ import annotations
 
 import pathlib
+from collections.abc import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -58,31 +62,63 @@ from ccrawler_spark.io.corpus_layout import (
 ARROW_PUSHDOWN_CAP = 131072
 
 
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame of ``schema`` from an empty Arrow table: a local
+    scan, where ``createDataFrame([], schema)`` runs a Python stage over
+    empty partitions."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table())
+
+
 def pruned_corpus_arrow(
     spark: SparkSession,
     path: str,
     host_ids: dict,
     track: list | None = None,
 ) -> DataFrame:
-    """Layout scan of the scheduled rows (module docstring): sound for
-    the fetch join (pruning can only drop rows that cannot match any
-    scheduled row), output schema identical to
+    """The scheduled corpus rows as read (``scan_layout`` with no
+    ``emit``): sound for the fetch join (pruning can only drop rows that
+    cannot match any scheduled row), output schema identical to
     ``spark.read.parquet(path)`` (data columns + the ``host_bucket``
-    partition column).
+    partition column), one task per file up to ``defaultParallelism``."""
+    return scan_layout(spark, path, host_ids,
+                       spark.sparkContext.defaultParallelism, track=track)
 
-    ``host_ids`` (dict host → iterable of its scheduled image_ids)
-    drives HOST-SCOPED id admission: a row group is kept only if some
-    scheduled host's key lands in its [min,max] AND one of *that
-    host's* ids lands in its id range. A global AND (host-set ∧
-    id-set) would admit a group whenever ANY of the K scheduled ids
-    falls in its id range — at K ≈ 10⁴⁺ nearly every range does, so
-    skipping decays to host-only touch (measured r6: 556 vs 286 groups
-    on the sparse bench schedule). Scoping the id test to the ≤
-    per_host_k ids of the group's own hosts keeps the admission
-    probability flat as K grows. Sound because a scheduled corpus row
-    (h, i) can only sit in a group whose host_key range covers key(h)
-    — so testing i against groups admitted via key(h) covers every row
-    the fetch join could match.
+
+def scan_layout(
+    spark: SparkSession,
+    path: str,
+    host_ids: dict,
+    tasks: int,
+    emit: Callable[[pa.Table], Iterator[pa.RecordBatch]] | None = None,
+    schema: StructType | None = None,
+    track: list | None = None,
+) -> DataFrame:
+    """Layout scan of the scheduled rows (module docstring), in at most
+    ``tasks`` tasks and never more than one per file.
+
+    Each file's admitted, residual-filtered rows — the data columns plus
+    ``host_bucket`` — go through ``emit(table)`` in the scan's Python
+    task, and the batches it yields, of ``schema``, are the output.
+    Without ``emit`` the rows themselves are the output, with the schema
+    of ``spark.read.parquet(path)``.
+
+    ``host_ids`` (dict host → iterable of its scheduled image_ids; a
+    dict keyed by image_id iterates as its ids) drives HOST-SCOPED id
+    admission: a row group is kept only if some scheduled host's key
+    lands in its [min,max] AND one of *that host's* ids lands in its id
+    range. A global AND (host-set ∧ id-set) would admit a group
+    whenever ANY of the K scheduled ids falls in its id range — at K ≈
+    10⁴⁺ nearly every range does, so skipping decays to host-only touch
+    (measured r6: 556 vs 286 groups on the sparse bench schedule).
+    Scoping the id test to the ≤ per_host_k ids of the group's own
+    hosts keeps the admission probability flat as K grows. Sound
+    because a scheduled corpus row (h, i) can only sit in a group whose
+    host_key range covers key(h) — so testing i against groups admitted
+    via key(h) covers every row the fetch join could match. The
+    residual filter is global (host_key in the key set AND image_id in
+    the id set), like the fetch join on image_id it feeds.
 
     ``track``: optional list the key-set broadcast is appended to, so
     the caller can ``unpersist()`` it once the round's actions complete
@@ -117,29 +153,34 @@ def pruned_corpus_arrow(
     # bucket partition pruning, driver-side from the directory names —
     # the bucket IS the key's top 7 bits, so no separate bucket list
     sel = {k >> 57 for k in keys}
-    files = []
+    paths, bks = [], []
     for bdir in sorted(root.glob("host_bucket=*")):
         bk = int(bdir.name.split("=", 1)[1])
         if bk not in sel:
             continue
-        files.extend((str(pf), bk) for pf in sorted(bdir.glob("*.parquet")))
+        for pf in sorted(bdir.glob("*.parquet")):
+            paths.append(str(pf))
+            bks.append(bk)
 
-    if meta.get("data_schema") is not None:
-        # layout-static schema from the metadata sidecar: no per-round
-        # driver-side footer read (VERDICT r6 #4)
-        base = StructType.fromJson(meta["data_schema"])
-    else:  # pre-r7 layout: fall back to one footer
-        any_file = files[0][0] if files else next(
-            iter(sorted(root.glob("host_bucket=*/*.parquet"))), None
+    if schema is None:
+        if meta.get("data_schema") is not None:
+            # layout-static schema from the metadata sidecar: no
+            # per-round driver-side footer read (VERDICT r6 #4)
+            base = StructType.fromJson(meta["data_schema"])
+        else:  # pre-r7 layout: fall back to one footer
+            any_file = paths[0] if paths else next(
+                iter(sorted(root.glob("host_bucket=*/*.parquet"))), None
+            )
+            if any_file is None:
+                raise ValueError(
+                    f"corpus layout at {path} has no parquet files"
+                )
+            base = from_arrow_schema(pq.read_schema(str(any_file)))
+        schema = StructType(
+            list(base.fields) + [StructField("host_bucket", IntegerType())]
         )
-        if any_file is None:
-            raise ValueError(f"corpus layout at {path} has no parquet files")
-        base = from_arrow_schema(pq.read_schema(str(any_file)))
-    out_schema = StructType(
-        list(base.fields) + [StructField("host_bucket", IntegerType())]
-    )
-    if not files:  # scheduled buckets have no files: statically empty
-        return spark.createDataFrame([], out_schema)
+    if not paths:  # scheduled buckets have no files: statically empty
+        return empty_frame(spark, schema)
 
     # ship the key sets once per executor (torrent broadcast), not once
     # per task closure — at the 128k cap they are ~2 MB pickled
@@ -185,9 +226,9 @@ def pruned_corpus_arrow(
             )
 
         for batch in batches:
-            paths = batch.column("path").to_pylist()
-            bks = batch.column("bucket").to_pylist()
-            for fp, bk in zip(paths, bks):
+            fps = batch.column("path").to_pylist()
+            fbks = batch.column("bucket").to_pylist()
+            for fp, bk in zip(fps, fbks):
                 f = pq.ParquetFile(fp)
                 md = f.metadata
                 if md.num_row_groups == 0:
@@ -213,10 +254,12 @@ def pruned_corpus_arrow(
                     "host_bucket",
                     pa.array(np.full(t.num_rows, bk, dtype=np.int32)),
                 )
-                yield from t.to_batches()
+                yield from (t.to_batches() if emit is None else emit(t))
 
-    files_df = spark.createDataFrame(files, "path string, bucket int")
-    n_parts = max(
-        1, min(len(files), spark.sparkContext.defaultParallelism)
+    files = spark.createDataFrame(pa.table({
+        "path": pa.array(paths, pa.string()),
+        "bucket": pa.array(bks, pa.int32()),
+    }))
+    return files.repartition(max(1, min(len(paths), tasks))).mapInArrow(
+        scan, schema
     )
-    return files_df.repartition(n_parts).mapInArrow(scan, out_schema)

@@ -25,9 +25,10 @@ from pyspark.sql.types import (
 from ccrawler_spark.bloom import filter as bf
 from ccrawler_spark.conf import CrawlConf
 from ccrawler_spark.functions.spark_exprs import umod_long
+from ccrawler_spark.io.arrow_scan import empty_frame
 from ccrawler_spark.io.snapshot import SnapshotStore
 from ccrawler_spark.scheduler import stages
-from ccrawler_spark.scheduler.fetch import fetch_and_decode
+from ccrawler_spark.scheduler.fetch import fetch_and_decode, fetch_from_layout
 from ccrawler_spark.scheduler.seen import seen_dedup
 
 FRONTIER_COLS = [
@@ -65,12 +66,17 @@ def layout_dedup(rows: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-def _pair_ids(rows) -> dict[str, set[str]]:
-    """(host, image_id) schedule rows → {host: its scheduled ids} for
-    the arrow reader's host-scoped row-group admission."""
-    out: dict[str, set[str]] = {}
+def _pair_ids(rows) -> dict[str, dict[str, list[str]]]:
+    """(host, image_id, url) schedule rows → {host: {image_id: [url,
+    …]}}: the hosts and ids drive the Arrow scan's host-scoped row-group
+    admission, and the urls name each matched corpus row's scheduled
+    rows (fetch.fetch_from_layout). A list keeps every url of an id, as
+    a join on image_id would."""
+    out: dict[str, dict[str, list[str]]] = {}
     for r in rows:
-        out.setdefault(r["host"], set()).add(r["image_id"])
+        out.setdefault(r["host"], {}).setdefault(r["image_id"], []).append(
+            r["url"]
+        )
     return out
 
 
@@ -97,15 +103,16 @@ class CrawlEngine:
         self.spark = spark
         self.store = store
         self.corpus = corpus
-        # arrow-scan key-set broadcasts created during the current
-        # round; run_round unpersists them in its finally (ADVICE r6)
+        # Arrow-scan broadcasts (key sets, urls) created during the
+        # current round; run_round unpersists them in its finally
+        # (ADVICE r6)
         self._round_bcs: list = []
         # optional bucket-partitioned / (host, image_id)-clustered corpus
-        # (io/corpus_layout): the fetch join prunes its scan to the
-        # scheduled rows' row groups (io/arrow_scan) when the schedule
-        # is sparse, else to the scheduled buckets, instead of scanning
-        # the whole payload column every round. Purely physical — fetch
-        # results are identical.
+        # (io/corpus_layout): the fetch prunes its scan to the
+        # scheduled rows' row groups (io/arrow_scan, decoding there)
+        # when the schedule is sparse, else to the scheduled buckets,
+        # instead of scanning the whole payload column every round.
+        # Purely physical — fetch results are identical.
         # Fail loudly up front if the layout's bucketing doesn't match
         # conf.host_buckets: a mismatched partition filter would silently
         # drop scheduled rows (ADVICE r4, medium).
@@ -160,7 +167,7 @@ class CrawlEngine:
             )
             jobs["bloom"] = ex.submit(
                 self._write_bloom_delta, frontier0,
-                self.spark.createDataFrame([], BLOOM_SCHEMA), 0,
+                empty_frame(self.spark, BLOOM_SCHEMA), 0,
             )
         base = jobs["base"].result()
         bloom_path = jobs["bloom"].result()
@@ -334,10 +341,10 @@ class CrawlEngine:
             )
         ).groupBy("_side", "host_bucket").count()
 
-        # 5-6. fetch join + decode invariants (Arrow crossing) and the
-        # fetch sequence, needing the schedule metadata (the corpus
-        # side's plan, the group counts) — joined here, after the main
-        # thread finished the discovery plans
+        # 5-6. fetch + decode invariants (one Arrow crossing per image)
+        # and the fetch sequence, needing the schedule metadata (the
+        # fetch plan's pairing, the group counts) — joined here, after
+        # the main thread finished the discovery plans
         group_counts, sched_counts, host_ids = sched_meta.result()
         n_fetched = sum(sched_counts.values())
         # submit the fused counts job only now that the sched0 cache is
@@ -345,13 +352,12 @@ class CrawlEngine:
         # submission would race the metadata job into computing the
         # whole dequeue pipeline twice
         tagged_job = pool.submit(tagged.collect)
-        corpus_side = self._corpus_side(sched_counts, host_ids)
         # seq (cumulative across rounds) is attached to the fetch
         # output: fetch_and_decode reads its input twice, and a
         # sequenced input would run the window in both reads
         seq_offset = prev["counters"]["fetched_total"]
         fetched = stages.with_fetch_sequence(
-            fetch_and_decode(sched0, corpus_side, n_fetched),
+            self._fetch(sched0, sched_counts, host_ids, n_fetched),
             group_counts, r, seq_offset,
         )
         fetch_log = fetched.select(
@@ -514,15 +520,15 @@ class CrawlEngine:
         """Everything the driver needs off the cached schedule: the
         per-(slot_ms, host_bucket) row counts that the fetch sequence's
         group offsets are summed from (stages.with_fetch_sequence), the
-        per-bucket lineage counts, and the schedule's (host → its
-        image_ids) pairing for the Arrow corpus reader (io/arrow_scan)
-        when there is a layout and the schedule has at most
-        ``ARROW_PUSHDOWN_CAP`` rows.
+        per-bucket lineage counts, and the schedule's (host → image_id
+        → urls) pairing (``_pair_ids``) for the fetch from the layout's
+        Arrow scan (fetch.fetch_from_layout) when there is a layout and
+        the schedule has at most ``ARROW_PUSHDOWN_CAP`` rows.
 
         A round_budget within the cap bounds the schedule statically,
-        so ONE collect of (slot_ms, host_bucket, host, image_id) yields
-        counts AND pairing — one job where a groupBy-count plus a key
-        collect would be two (VERDICT r4 #6). Larger budgets run the
+        so ONE collect of (slot_ms, host_bucket, host, image_id, url)
+        yields counts AND pairing — one job where a groupBy-count plus a
+        key collect would be two (VERDICT r4 #6). Larger budgets run the
         groupBy-count first (≤ per_host_k × #crawl_delays × B rows) and
         collect the pairs only when that count fits the cap. Every
         collect here is schedule METADATA (≤ cap rows ≈ 2 MB off the
@@ -539,7 +545,9 @@ class CrawlEngine:
         # read at call time, so a test can shrink the cap
         cap = arrow_scan.ARROW_PUSHDOWN_CAP
         if self.conf.round_budget <= cap:
-            rows = sched0.select(*stages.SEQ_GROUP, "host", "image_id").collect()
+            rows = sched0.select(
+                *stages.SEQ_GROUP, "host", "image_id", "url"
+            ).collect()
             groups = dict(Counter(
                 (int(r["slot_ms"]), int(r["host_bucket"])) for r in rows
             ))
@@ -550,7 +558,7 @@ class CrawlEngine:
             }
             n = sum(groups.values())
             rows = (
-                sched0.select("host", "image_id").collect()
+                sched0.select("host", "image_id", "url").collect()
                 if self.corpus_layout is not None and 0 < n <= cap else None
             )
         counts: Counter = Counter()
@@ -560,22 +568,29 @@ class CrawlEngine:
             return groups, dict(counts), None
         return groups, dict(counts), _pair_ids(rows)
 
-    def _corpus_side(self, sched_counts: dict[int, int], host_ids):
-        """Fetch-join corpus frame for this round: the flat corpus
-        without a layout; the Arrow set scan when the schedule's pairing
-        was collected (see _sched_metadata); otherwise — a dense round,
-        which touches most row groups of its buckets anyway — the layout
-        pruned to the scheduled host_bucket partitions. Purely physical:
-        identical results."""
-        if self.corpus_layout is None:
-            return self.corpus
+    def _fetch(self, sched0: DataFrame, sched_counts: dict[int, int],
+               host_ids, n_fetched: int) -> DataFrame:
+        """The round's schedule with its decode flags: decoded inside
+        the layout's Arrow scan when the schedule's pairing was
+        collected (see _sched_metadata), else joined to
+        ``_corpus_side`` and decoded. Purely physical: identical
+        results."""
         if host_ids is not None:
-            from ccrawler_spark.io.arrow_scan import pruned_corpus_arrow
-
-            return pruned_corpus_arrow(
-                self.spark, self.corpus_layout, host_ids,
+            return fetch_from_layout(
+                sched0, self.corpus_layout, host_ids, n_fetched,
                 track=self._round_bcs,
             )
+        return fetch_and_decode(
+            sched0, self._corpus_side(sched_counts), n_fetched
+        )
+
+    def _corpus_side(self, sched_counts: dict[int, int]) -> DataFrame:
+        """Fetch-join corpus frame of a round without the pairing: the
+        flat corpus without a layout; otherwise — a dense round, which
+        touches most row groups of its buckets anyway — the layout
+        pruned to the scheduled host_bucket partitions."""
+        if self.corpus_layout is None:
+            return self.corpus
         return self.spark.read.parquet(self.corpus_layout).filter(
             F.col("host_bucket").isin(sorted(sched_counts))
         )

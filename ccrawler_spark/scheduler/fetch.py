@@ -1,16 +1,28 @@
 """O17 fetch join + O41 vectorized decode & per-row invariants.
 
-"Fetching" a scheduled URL = joining it to its corpus row on image_id
+"Fetching" a scheduled URL = matching it to its corpus row on image_id
 (the corpus table replaces the live web, BASELINE.json:6) and decoding
 the image payload. Decode runs in ``mapInArrow`` — Arrow RecordBatches
 cross the JVM↔Python boundary once per batch, the numpy codecs operate
 per image (BASELINE.json:15: vectorized Arrow/pandas UDFs, never
-row-at-a-time Python ``F.udf``).
+row-at-a-time Python ``F.udf``). Two plans, one kernel
+(``_decode_batches``):
+
+- ``fetch_from_layout`` — the engine's plan when the schedule's
+  (host → image_id → urls) pairing is in hand: the Arrow layout scan
+  (io/arrow_scan) decodes each matched row in the task that read it,
+  so each image crosses into Python once and the scan streams
+  ``(url, caption, flags)`` back, never the payload bytes;
+- ``fetch_and_decode`` — any other corpus frame (the flat corpus, the
+  bucket-pruned layout read above ``ARROW_PUSHDOWN_CAP``): a broadcast
+  join on image_id, then the decode crossing.
 
 Per-row invariants (BASELINE.json:15), computed against the
 deterministic reference pixels (docs/SEMANTICS.md §3):
   pixels_ok  — exact equality for lossless fmts; PSNR ≥ 40 dB for dct8
-  caption_ok — byte-for-byte caption equality
+  caption_ok — byte-for-byte caption equality, checked JVM-side
+               (``expected_caption``: the JVM xxhash64 is the pinned
+               hash)
   phash_ok   — recomputed phash: equal (lossless) / Hamming ≤ 8 (dct8;
                mean-threshold bits near the global mean legitimately
                flip under PSNR≈40 quantization noise)
@@ -27,13 +39,13 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
 from ccrawler_spark.functions.spark_exprs import expected_caption
+from ccrawler_spark.io import arrow_scan
 from ccrawler_spark.scheduler import stages
 
 DECODE_CHECK_FIELDS = [
@@ -131,9 +143,9 @@ def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame,
     The scheduled side is tiny relative to the corpus (≤ K rows), so it
     is broadcast and the corpus is never shuffled. Spark cannot
     broadcast the left side of a left-outer join, so misses are
-    recovered with a small anti-join instead: hits = broadcast-inner,
-    misses = scheduled ∖ hits (fetch_ok=false rows — they still occupy
-    their politeness slot, SEMANTICS.md §6 step 6).
+    recovered by the join-back (``_join_flags``): scheduled rows with
+    no corpus hit get fetch_ok=false (they still occupy their
+    politeness slot, SEMANTICS.md §6 step 6).
     """
     hits = corpus.select("image_id", "bytes", "fmt", "caption", "phash").join(
         scheduled.select("image_id", "url").hint("broadcast"),
@@ -146,17 +158,91 @@ def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame,
     )
     # AQE coalesces the join output toward 64MB partitions, which starves
     # the Arrow workers (decode is CPU-bound, ~0.5 ms/image, not
-    # IO-bound) — spread the batch across the cores before the UDF, but
-    # only as far as the rows pay for the crossings: 512 images a task,
-    # at most 2 × cores. On 4 cores, schedules of 40 to 2,000 images
-    # ran faster than at a fixed 2 × cores in every rep
-    # (bench/bench_decode_fanout.py); wider boxes are not measured
-    dp = scheduled.sparkSession.sparkContext.defaultParallelism
+    # IO-bound) — spread the batch across the cores before the UDF
+    # (_decode_tasks)
     checks = (
         hits.select("url", "bytes", "fmt", "caption_ok", "phash")
-        .repartition(stages.fanout(n_rows, 512, 2 * dp))
+        .repartition(_decode_tasks(scheduled, n_rows))
         .mapInArrow(_decode_batches, StructType(DECODE_CHECK_FIELDS))
     )
+    return _join_flags(scheduled, checks)
+
+
+def fetch_from_layout(scheduled: DataFrame, layout: str, host_urls: dict,
+                      n_rows: int, track: list | None = None) -> DataFrame:
+    """Fetch ``scheduled`` from the corpus layout at ``layout`` in one
+    Python crossing per image: the Arrow layout scan decodes each
+    matched row where it reads it (module docstring).
+
+    ``host_urls`` is the schedule's pairing, {host: {image_id: [url,
+    …]}} (engine._pair_ids): its hosts and ids drive the scan's
+    admission, and its urls name each matched corpus row's scheduled
+    rows — every url with that image_id, as the join on image_id in
+    ``fetch_and_decode`` pairs them. ``n_rows`` sizes the scan like
+    that plan's decode, capped at the file count by the scan. ``track``
+    collects the round's broadcasts (io/arrow_scan.scan_layout).
+    """
+    spark = scheduled.sparkSession
+    urls_by_id: dict[str, list[str]] = {}
+    for ids in host_urls.values():
+        for image_id, urls in ids.items():
+            urls_by_id.setdefault(image_id, []).extend(urls)
+    bc = spark.sparkContext.broadcast(urls_by_id)
+    if track is not None:
+        track.append(bc)
+
+    def emit(t: pa.Table) -> Iterator[pa.RecordBatch]:
+        import numpy as np
+
+        by_id = bc.value
+        rows, urls = [], []
+        for i, image_id in enumerate(t.column("image_id").to_pylist()):
+            for u in by_id.get(image_id, ()):
+                rows.append(i)
+                urls.append(u)
+        t = t.take(pa.array(rows, pa.int64()))
+        batches = pa.table({
+            "url": pa.array(urls, pa.string()),
+            "bytes": t.column("bytes"),
+            "fmt": t.column("fmt"),
+            # checked JVM-side on the scan's output (fetch_from_layout)
+            "caption_ok": pa.array(np.ones(t.num_rows, dtype=bool)),
+            "phash": t.column("phash"),
+            "caption": t.column("caption"),
+        }).to_batches()
+        for b, out in zip(batches, _decode_batches(iter(batches))):
+            yield out.append_column("caption", b.column("caption"))
+
+    checks = arrow_scan.scan_layout(
+        spark, layout, host_urls, _decode_tasks(scheduled, n_rows),
+        emit=emit,
+        schema=StructType(
+            DECODE_CHECK_FIELDS + [StructField("caption", StringType())]
+        ),
+        track=track,
+    ).withColumn(
+        # the O41 caption invariant on the scan's small output, with
+        # the pinned JVM xxhash64 (see fetch_and_decode)
+        "caption_ok", F.col("caption_ok")
+        & (expected_caption(F.col("url")) == F.col("caption")),
+    ).drop("caption")
+    return _join_flags(scheduled, checks)
+
+
+def _decode_tasks(scheduled: DataFrame, n_rows: int) -> int:
+    """Decode task count: only as many tasks as the rows pay for, 512
+    images a task, and at most one per core. On 4 cores, 4,000 images
+    decoded faster in 4 tasks than in 8 (bench/bench_decode_fanout.py),
+    and the crawl-growth round (11,629 images) ran faster with its
+    layout scan in 4 tasks than in 8, 16 or 24 (docs/SCALING.md, "One
+    Python crossing per image"); wider boxes are not measured."""
+    dp = scheduled.sparkSession.sparkContext.defaultParallelism
+    return stages.fanout(n_rows, 512, dp)
+
+
+def _join_flags(scheduled: DataFrame, checks: DataFrame) -> DataFrame:
+    """``scheduled`` with its decode flags; a url without a corpus hit
+    gets fetch_ok=false and every flag false."""
     # join-back via shuffle-hash: both sides are ≤K rows, and a second
     # driver-built broadcast would serialize on the driver thread
     out = scheduled.join(checks.hint("shuffle_hash"), on="url", how="left")

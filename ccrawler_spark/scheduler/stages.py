@@ -2,10 +2,10 @@
 
 Each function is a declarative DataFrame→DataFrame transform; Catalyst
 fuses them into one plan per round (one action: the snapshot write).
-A round's Python crossings are exactly: the Arrow corpus scan
-(io/arrow_scan, layout rounds only), image decode (O41) and the bloom
-segment merge (O11, the engine's delta write); bootstrap adds the URL
-normalization tail (O6). All are Arrow-batched, never row-at-a-time
+A round's Python crossings are exactly: image decode (O41) — inside
+the Arrow corpus scan on a layout round (io/arrow_scan), after the
+fetch join otherwise — and the bloom segment merge (O11, the engine's
+delta write); bootstrap adds the URL normalization tail (O6). All are Arrow-batched, never row-at-a-time
 (BASELINE.json:15). Everything else is JVM-side whole-stage codegen.
 Every window is partitioned: the fetch sequence's group offsets are
 summed on the driver from counts the engine already collects, so no
@@ -18,9 +18,9 @@ or SEQ_KEY for the fetch sequence.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StringType
 
 from ccrawler_spark.conf import CrawlConf
 from ccrawler_spark.functions.spark_exprs import (
@@ -195,14 +195,18 @@ def with_fetch_sequence(scheduled: DataFrame,
     B) ≪ K, so it broadcasts. Group sizes are ~|hosts scheduled at
     that slot| / B — naturally balanced, no hot key.
     """
-    rows, off = [], seq_offset
-    for key in sorted(group_counts):
-        rows.append((*key, off))
+    keys = sorted(group_counts)
+    offs, off = [], seq_offset
+    for key in keys:
+        offs.append(off)
         off += group_counts[key]
-    # explicit schema: an empty round (drained frontier) ships no rows
-    offsets = scheduled.sparkSession.createDataFrame(
-        rows, "slot_ms long, host_bucket int, _goff long"
-    )
+    # an Arrow table with explicit types: a local scan with no Python
+    # stage, and an empty round (drained frontier) keeps the schema
+    offsets = scheduled.sparkSession.createDataFrame(pa.table({
+        "slot_ms": pa.array([k[0] for k in keys], pa.int64()),
+        "host_bucket": pa.array([k[1] for k in keys], pa.int32()),
+        "_goff": pa.array(offs, pa.int64()),
+    }))
     w = Window.partitionBy(*SEQ_GROUP).orderBy("host", "url_hash", "url")
     return (
         scheduled.join(F.broadcast(offsets), on=SEQ_GROUP, how="inner")

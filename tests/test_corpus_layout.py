@@ -35,19 +35,19 @@ def _sorted_rows(df):
 
 @pytest.fixture
 def arrow_calls(monkeypatch):
-    """The layout path of each call of the Arrow corpus reader (the
-    engine imports the reader at call time, so patching the module
-    attribute reaches it)."""
+    """The layout path of each call of the Arrow layout scan (the fetch
+    path looks the scan up on its module at call time, so patching the
+    module attribute reaches it)."""
     from ccrawler_spark.io import arrow_scan
 
     calls = []
-    real = arrow_scan.pruned_corpus_arrow
+    real = arrow_scan.scan_layout
 
     def counted(*args, **kwargs):
         calls.append(args[1])
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(arrow_scan, "pruned_corpus_arrow", counted)
+    monkeypatch.setattr(arrow_scan, "scan_layout", counted)
     return calls
 
 
@@ -55,7 +55,7 @@ def test_engine_parity_layout_on_off(spark, tiny_fixtures, layout_dir,
                                      arrow_calls, tmp_path):
     """The pruned fetch path is purely physical: fetch_log and frontier
     must be byte-identical with and without the layout — and with the
-    layout every round's corpus side is the Arrow reader."""
+    layout every round fetches through the Arrow scan."""
     s_flat = _run(spark, tiny_fixtures, tmp_path / "flat")
     assert arrow_calls == []
     s_lay = _run(spark, tiny_fixtures, tmp_path / "layout",
@@ -80,7 +80,7 @@ def test_pruned_scan_pushes_filters(spark, tiny_fixtures, layout_dir,
 
     engine, _ = make_engine(spark, str(tiny_fixtures), str(tmp_path),
                             size="tiny", corpus_layout=layout_dir)
-    df = engine._corpus_side({1: 10, 2: 10, 3: 10}, None)
+    df = engine._corpus_side({1: 10, 2: 10, 3: 10})
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [host_bucket" in plan
 
@@ -224,19 +224,21 @@ def test_arrow_scan_matches_jvm_and_flat(spark, tiny_fixtures, layout_dir):
 def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
                                          monkeypatch, tmp_path):
     """Engine planning: a schedule within ARROW_PUSHDOWN_CAP plans the
-    Arrow scan with its full (host → ids) pairing — from the one-collect
-    path of a TINY budget and from the count-first path of a budget
-    above the cap, which agree on the sequence group counts and the
-    bucket counts. Above the cap the plan is no pairing, i.e. the
-    bucket-pruned layout read."""
+    Arrow scan with its full (host → id → urls) pairing — from the
+    one-collect path of a TINY budget and from the count-first path of
+    a budget above the cap, which agree on the sequence group counts
+    and the bucket counts. Above the cap the plan is no pairing, i.e.
+    the bucket-pruned layout read."""
     from ccrawler_spark.conf import TINY, CrawlConf
     from ccrawler_spark.io import arrow_scan
     from ccrawler_spark.scheduler.cli import make_engine
 
     sched = spark.createDataFrame(
-        [(f"h{i % 100}.example", f"{i:016x}", i % 64, (i % 7) * 1000)
+        [(f"h{i % 100}.example", f"{i:016x}", i % 64, (i % 7) * 1000,
+          f"http://h{i % 100}.example/p/{i}")
          for i in range(4200)],
-        "host string, image_id string, host_bucket int, slot_ms long",
+        "host string, image_id string, host_bucket int, slot_ms long, "
+        "url string",
     )
     metas = []
     big = CrawlConf(round_budget=200_000, per_host_k=64)
@@ -248,11 +250,15 @@ def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
         assert sum(counts.values()) == 4200
         assert set(host_ids) == {f"h{i}.example" for i in range(100)}
         assert sum(len(v) for v in host_ids.values()) == 4200
+        assert host_ids["h7.example"]["0000000000000007"] == [
+            "http://h7.example/p/7"
+        ]
         metas.append((groups, counts))
     assert metas[0] == metas[1]
     assert len(metas[0][0]) == 7 * 64
-    df = engine._corpus_side(counts, host_ids)
-    assert "image_id" in df.columns and "host_bucket" in df.columns
+    df = engine._fetch(sched, counts, host_ids, 4200)
+    assert {"url", "image_id", "fetch_ok", "psnr_db"} <= set(df.columns)
+    assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
     # above the cap: counts only, no pairing
     monkeypatch.setattr(arrow_scan, "ARROW_PUSHDOWN_CAP", 4100)
     groups2, counts2, host_ids2 = engine._sched_metadata(sched)
@@ -382,6 +388,7 @@ from ccrawler_spark.fixtures.gen import (
 )
 from ccrawler_spark.functions.spark_exprs import host_bucket, image_id_of
 from ccrawler_spark.scheduler.cli import build_session, make_engine
+from ccrawler_spark.scheduler.fetch import fetch_and_decode
 
 spark = build_session(4, driver_mem="2g")
 fdir = str(ensure_fixtures("tiny"))
@@ -391,28 +398,30 @@ engine, _ = make_engine(
     conf=CrawlConf(round_budget=4096), corpus_layout=layout,
 )
 real = universe_urls_df(spark, fdir).select(
-    "host", image_id_of(F.col("url")).alias("image_id")
+    "host", image_id_of(F.col("url")).alias("image_id"), "url"
 )
 phantom = real.select(
     "host",
     F.substring(F.sha2(F.concat("image_id", F.lit("#phantom")), 256), 1, 16)
     .alias("image_id"),
+    F.concat("url", F.lit("#phantom")).alias("url"),
 )
 sched = real.unionByName(phantom).withColumn(
     "host_bucket", host_bucket(F.col("host"), 64)
 ).withColumn("slot_ms", F.lit(0).cast("long"))
-cols = ["image_id", "fmt", "phash"]
+cols = ["url", "fetch_ok", "pixels_ok", "caption_ok", "phash_ok", "psnr_db",
+        "dec_w", "dec_h"]
 _, counts, host_ids = engine._sched_metadata(sched)
+n = sum(counts.values())
 got = sorted(
-    tuple(r) for r in engine._corpus_side(counts, host_ids)
+    tuple(r) for r in engine._fetch(sched, counts, host_ids, n)
     .select(*cols).collect()
 )
 flat = spark.read.parquet(f"{fdir}/corpus.parquet")
 want = sorted(
-    tuple(r) for r in flat.join(sched.select("image_id").distinct(),
-                                "image_id").select(*cols).collect()
+    tuple(r) for r in fetch_and_decode(sched, flat, n).select(*cols).collect()
 )
-print(f"SCHED={sched.count()} GOT={len(got)} EQUAL={got == want}")
+print(f"SCHED={n} GOT={sum(r[1] for r in got)} EQUAL={got == want}")
 spark.stop()
 """
 
@@ -420,11 +429,12 @@ spark.stop()
 def test_small_budget_corpus_side_many_ids_matches_flat(layout_dir, tmp_path):
     """A small-budget round whose schedule carries ~2,000 (host,
     image_id) rows — the tiny corpus's 1,000 ids plus as many phantom
-    ids on the same hosts — must read exactly the flat corpus rows of
-    those ids. A JVM parquet ``IN`` pushdown of that many ids builds an
-    ``Or`` tree that overflows the stack; the engine's session
-    (``build_session``) is the condition under test, so this runs in a
-    fresh subprocess (one JVM start)."""
+    ids on the same hosts — must fetch through the Arrow scan exactly
+    what the flat corpus join fetches: every real id decodes, every
+    phantom is a miss, flag for flag. A JVM parquet ``IN`` pushdown of
+    that many ids builds an ``Or`` tree that overflows the stack; the
+    engine's session (``build_session``) is the condition under test,
+    so this runs in a fresh subprocess (one JVM start)."""
     out = subprocess.run(
         [sys.executable, "-c", _MANY_IDS_PROBE, str(tmp_path)],
         cwd=pathlib.Path(__file__).resolve().parents[1],
@@ -437,3 +447,99 @@ def test_small_budget_corpus_side_many_ids_matches_flat(layout_dir, tmp_path):
     assert int(fields["SCHED"]) >= 2000
     assert int(fields["GOT"]) >= 1000
     assert fields["EQUAL"] == "True"
+
+
+def test_fused_and_flat_flags_agree_on_bad_rows(spark, tiny_fixtures,
+                                                layout_dir, tmp_path):
+    """Negative paths of the per-row flags. In a copy of the layout one
+    row's payload is corrupted and another row's caption is changed, and
+    the schedule also holds an image_id the corpus lacks. The Arrow path
+    (decode inside the layout scan) and the flat join + decode path over
+    the same layout return identical flag rows, psnr_db and decoded
+    dimensions included, and each bad row fails exactly its own flags."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ccrawler_spark.fixtures.gen import universe_urls_df
+    from ccrawler_spark.functions.spark_exprs import host_bucket, image_id_of
+    from ccrawler_spark.scheduler.cli import make_engine
+    from ccrawler_spark.scheduler.fetch import fetch_and_decode
+
+    lay = tmp_path / "layout"
+    shutil.copytree(layout_dir, lay)
+    # a file with a lossless (rgb8) row and at least one other row: a
+    # flipped rgb8 byte still decodes, to the wrong pixels
+    for pf in sorted(lay.glob("host_bucket=*/*.parquet")):
+        f = pq.ParquetFile(pf)
+        t = f.read()
+        rg_rows = f.metadata.row_group(0).num_rows
+        f.close()
+        fmts = t.column("fmt").to_pylist()
+        if t.num_rows >= 2 and "rgb8" in fmts:
+            break
+    else:
+        pytest.fail("no layout file with an rgb8 row and another row")
+    ids = t.column("image_id").to_pylist()
+    i_pix = fmts.index("rgb8")
+    i_cap = 1 if i_pix == 0 else 0
+    payloads = t.column("bytes").to_pylist()
+    payloads[i_pix] = payloads[i_pix][:-1] + bytes(
+        [payloads[i_pix][-1] ^ 0xFF])
+    captions = t.column("caption").to_pylist()
+    captions[i_cap] = captions[i_cap] + " (edited)"
+    t = t.set_column(t.schema.get_field_index("bytes"), "bytes",
+                     pa.array(payloads, pa.binary()))
+    t = t.set_column(t.schema.get_field_index("caption"), "caption",
+                     pa.array(captions, pa.string()))
+    pq.write_table(t, pf, row_group_size=rg_rows)
+    # the Hadoop checksum of the rewritten file is stale now
+    (pf.parent / f".{pf.name}.crc").unlink(missing_ok=True)
+
+    universe = universe_urls_df(spark, str(tiny_fixtures)).select(
+        "host", "url", image_id_of(F.col("url")).alias("image_id"),
+    )
+    in_file = universe.filter(F.col("image_id").isin(ids))
+    phantom = in_file.limit(1).select(
+        "host", F.concat("url", F.lit("#absent")).alias("url"),
+        F.lit("ffffffffffffffff").alias("image_id"),
+    )
+    sched = in_file.unionByName(phantom).withColumn(
+        "host_bucket", host_bucket(F.col("host"), 64)
+    ).withColumn("slot_ms", F.lit(0).cast("long")).cache()
+
+    engine, _ = make_engine(spark, str(tiny_fixtures), str(tmp_path / "s"),
+                            size="tiny", corpus_layout=str(lay))
+    _, counts, host_ids = engine._sched_metadata(sched)
+    assert host_ids is not None  # the Arrow path is the one under test
+    n = sum(counts.values())
+    assert n == len(ids) + 1
+    cols = ["url", "fetch_ok", "pixels_ok", "caption_ok", "phash_ok",
+            "psnr_db", "dec_w", "dec_h"]
+
+    def flags(df):
+        return {r["url"]: r.asDict() for r in df.select(*cols).collect()}
+
+    fused = flags(engine._fetch(sched, counts, host_ids, n))
+    flat = flags(fetch_and_decode(sched, spark.read.parquet(str(lay)), n))
+    assert fused == flat
+    sched.unpersist()
+
+    url_of = {r["image_id"]: r["url"] for r in in_file.collect()}
+    pix = fused.pop(url_of[ids[i_pix]])
+    assert pix["fetch_ok"] and not pix["pixels_ok"], pix
+    assert pix["psnr_db"] < 999.0
+    cap = fused.pop(url_of[ids[i_cap]])
+    assert cap["fetch_ok"] and cap["pixels_ok"] and cap["phash_ok"], cap
+    assert not cap["caption_ok"], cap
+    (absent_url,) = [u for u in fused if u.endswith("#absent")]
+    assert fused.pop(absent_url) == {
+        "url": absent_url, "fetch_ok": False, "pixels_ok": False,
+        "caption_ok": False, "phash_ok": False, "psnr_db": 0.0,
+        "dec_w": None, "dec_h": None,
+    }
+    assert fused and all(
+        r["fetch_ok"] and r["pixels_ok"] and r["caption_ok"]
+        and r["phash_ok"] for r in fused.values()
+    ), fused

@@ -22,11 +22,14 @@ def test_fanout_rules():
     assert f(58, 25_000, 64) == 1
     assert f(100_000, 25_000, 64) == 4
     assert f(10_000_000, 25_000, 64) == 64
-    # decode (fetch.fetch_and_decode): 512 images a task, cap 2 × dp
-    assert f(40, 512, 8) == 1
-    assert f(1_500, 512, 8) == 3
-    assert f(11_629, 512, 8) == 8
-    assert f(11_629, 512, 64) == 23
+    # decode (fetch._decode_tasks): 512 images a task, cap dp — the
+    # decode crossing of fetch.fetch_and_decode, and the Arrow layout
+    # scan that decodes in fetch.fetch_from_layout, which also caps it
+    # at the file count
+    assert f(40, 512, 4) == 1
+    assert f(1_500, 512, 4) == 3
+    assert f(11_629, 512, 4) == 4
+    assert f(11_629, 512, 32) == 23
 
 
 def test_tiny_bootstrap_one_file_per_bucket(spark, tiny_fixtures, tmp_path):

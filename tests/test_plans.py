@@ -4,6 +4,7 @@ it's the plan you'd want")."""
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,62 @@ def test_fetch_prunes_corpus_columns(spark, tiny_fixtures):
     # w/h are never projected ("h:" alone would false-positive on phash:)
     assert all(",w:" not in l and ",h:" not in l and "<w:" not in l
                for l in read_schemas), read_schemas
+
+
+def _nodes(plan: str) -> list[tuple[str, str]]:
+    """(node name, its Input line) for each node of a formatted plan."""
+    return re.findall(r"^\(\d+\) (\w[\w ]*?)\s*\n(?:Output.*\n)?(Input.*)?$",
+                      plan, re.M)
+
+
+def test_layout_fetch_one_python_crossing(spark, tiny_fixtures):
+    """The layout fetch (fetch.fetch_from_layout) with its fetch
+    sequence: each image crosses into Python once — exactly one Python
+    map node (the Arrow scan that decodes), no driver-built list shipped
+    through a Python stage (``Scan ExistingRDD``), and no Exchange
+    carries the payload ``bytes`` (the flat join + decode plan, which
+    does shuffle them to its decode, shows the check can fail)."""
+    from collections import Counter
+
+    from ccrawler_spark.fixtures.gen import (
+        ensure_corpus_layout, universe_urls_df,
+    )
+    from ccrawler_spark.functions.spark_exprs import host_bucket, image_id_of
+    from ccrawler_spark.scheduler.engine import _pair_ids
+    from ccrawler_spark.scheduler.fetch import (
+        fetch_and_decode, fetch_from_layout,
+    )
+    from ccrawler_spark.scheduler.stages import with_fetch_sequence
+
+    layout = str(ensure_corpus_layout(spark, tiny_fixtures))
+    sched = universe_urls_df(spark, str(tiny_fixtures)).filter(
+        F.col("host").isin("h0.example", "h5.example")
+    ).select(
+        "host", "url", image_id_of(F.col("url")).alias("image_id"),
+        host_bucket(F.col("host"), 64).alias("host_bucket"),
+        F.xxhash64("url").alias("url_hash"),
+        F.lit(0).cast("long").alias("slot_ms"),
+    )
+    rows = sched.collect()
+    groups = Counter((0, r["host_bucket"]) for r in rows)
+
+    def plan(fetched):
+        return plan_of(with_fetch_sequence(fetched, groups, 1, 0))
+
+    fused = plan(fetch_from_layout(sched, layout, _pair_ids(rows), len(rows)))
+    nodes = _nodes(fused)
+    python = [n for n, _ in nodes
+              if "InArrow" in n or "InPandas" in n or "EvalPython" in n]
+    assert python == ["MapInArrow"], fused
+    assert "Scan ExistingRDD" not in fused, fused
+    exchanges = [i for n, i in nodes if n == "Exchange"]
+    assert exchanges and not any("bytes" in i for i in exchanges), fused
+
+    flat = plan(fetch_and_decode(
+        sched, spark.read.parquet(f"{tiny_fixtures}/corpus.parquet"),
+        len(rows),
+    ))
+    assert any("bytes" in i for n, i in _nodes(flat) if n == "Exchange")
 
 
 def test_textops_scalar_zero_shuffle(spark):
