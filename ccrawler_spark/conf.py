@@ -25,30 +25,21 @@ class CrawlConf:
     bloom_bits_per_key: int = 10
     bloom_num_hashes: int = 7
     bloom_segment_bits: int = 1 << 17  # 16 KiB/bucket; ~13k keys at 10 b/key
-    salting_enabled: bool = True
     salt_threshold_factor: float = 4.0  # τ = factor × mean host queue length
-    salt_fanout: int = 8
     robots_version: int = 1  # as-of version for robots rules (O14)
-    # Read nowhere: the frontier head cache it sized is gone and every
-    # round ranks the gated frontier. Kept because it is part of the
-    # fingerprint (removing it changes every store's) and of older
-    # manifests' confs, which from_json must still load.
+    # Read by nothing in the package. perfbench/workloads.py still
+    # passes head_multiple=1, so it goes with the next benchmark change.
     head_multiple: int = 4
     # O30 recrawl: 0 disables. When > 0, a fetched URL re-enters the
     # frontier with discover_ts = fetch virtual time + interval, and a
     # queued row is eligible for round r only once discover_ts ≤
     # round_ts(r) (due predicate, docs/SEMANTICS.md §6a).
     recrawl_interval_micros: int = 0
-    seed: int = 42
     t0_micros: int = T0_MICROS
     round_period_micros: int = ROUND_PERIOD_MICROS
 
     def to_json(self) -> str:
         return json.dumps(dataclasses.asdict(self), sort_keys=True)
-
-    @staticmethod
-    def from_json(s: str) -> "CrawlConf":
-        return CrawlConf(**json.loads(s))
 
     def fingerprint(self) -> str:
         """Stable hash recorded in manifests; resume refuses on mismatch."""
@@ -61,4 +52,4 @@ SMALL = CrawlConf(round_budget=2_000)
 # politeness scatters point lookups uniformly, so the payload-column scan
 # is per-round O(corpus) regardless of K — a larger K amortizes it and
 # makes rounds decode-dominated (the honestly-parallel part)
-BENCH = CrawlConf(per_host_k=200, round_budget=2_000_000, salt_fanout=32)
+BENCH = CrawlConf(per_host_k=200, round_budget=2_000_000)

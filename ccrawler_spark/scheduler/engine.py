@@ -127,6 +127,12 @@ class CrawlEngine:
         self.H = hosts.count()
         self.robots_active = stages.robots_active(robots, conf.robots_version).cache()
         self.conf = conf
+        # Catalyst cuts the per-host top-k map-side (stages.schedule)
+        # only while k ≤ this threshold; above it the whole frontier
+        # crosses the host exchange
+        key = "spark.sql.optimizer.windowGroupLimitThreshold"
+        if int(spark.conf.get(key)) < conf.per_host_k:
+            spark.conf.set(key, conf.per_host_k)
 
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame) -> RoundStats:
@@ -228,9 +234,10 @@ class CrawlEngine:
         round_ts = conf.t0_micros + r * conf.round_period_micros
 
         # 1-4. dequeue: the composed frontier → (recrawl: due rows) →
-        # robots gate (broadcast join, Catalyst longest-prefix) → salted
-        # per-host top-k → budget K → politeness slots, one plan fused
-        # into the frontier scan
+        # robots gate (broadcast join, Catalyst longest-prefix) → one
+        # per-host rank window (top-k, cut map-side before the host
+        # exchange) → budget K → politeness slots from the rank, one
+        # plan fused into the frontier scan
         frontier = store.read_frontier(r - 1)
         if conf.recrawl_interval_micros > 0:
             # O30/O10 due predicate: only rows whose discover_ts
@@ -243,9 +250,8 @@ class CrawlEngine:
         gated = stages.robots_gate(frontier, self.robots_active, conf)
         # cached: the metadata collect materializes it for every later
         # reader (discovery, fetch, recrawl)
-        sched0 = stages.split_ranked(
-            stages.rank_per_host(gated.filter(F.col("allowed")), conf),
-            conf, self.H,
+        sched0 = stages.schedule(
+            gated.filter(F.col("allowed")), conf, self.H
         ).cache()
 
         # `denied` comes from a separate tiny pass: the gate is static

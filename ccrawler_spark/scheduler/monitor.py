@@ -2,8 +2,7 @@
 
 These never affect scheduling results — they are the cheap sketches an
 operator of a 10^10-URL crawl watches: HLL seen/host cardinality,
-hot-host detection feeding the salting decision, per-bucket queue
-depths.
+hot-host detection, per-bucket queue depths.
 """
 
 from __future__ import annotations
@@ -45,10 +44,11 @@ def merge_sketches(per_round: DataFrame) -> DataFrame:
 
 
 def hot_hosts(frontier: DataFrame, conf: CrawlConf) -> DataFrame:
-    """O24: hosts whose queue share exceeds τ = factor × mean — the
-    candidates for salted repartitioning. The engine's two-phase salted
-    dequeue is always-exact, so this feeds fan-out *tuning* and
-    metrics, not correctness."""
+    """O24: hosts whose queue share exceeds τ = factor × mean, with a
+    fan-out suggestion sized from the queue. A metric for the operator:
+    the dequeue needs no per-host decision, since its per-host top-k is
+    cut map-side before the host exchange whatever the skew
+    (stages.schedule)."""
     counts = frontier.groupBy("host").agg(F.count("*").alias("queued"))
     stats = counts.agg(F.avg("queued").alias("mean")).first()
     if stats["mean"] is None:  # drained frontier — a normal terminal state

@@ -9,7 +9,10 @@ delta write); bootstrap adds the URL normalization tail (O6). All are Arrow-batc
 (BASELINE.json:15). Everything else is JVM-side whole-stage codegen.
 Every window is partitioned: the fetch sequence's group offsets are
 summed on the driver from counts the engine already collects, so no
-stage ranks rows in a single partition.
+stage ranks rows in a single partition. The dequeue is one window
+(``schedule``): its per-host rank gives the top-k, survives the budget
+limit and sets the politeness slots; hot-host skew is handled by
+Catalyst's map-side group limit ahead of the host exchange.
 
 Determinism discipline (docs/SEMANTICS.md §8): every window/sort here
 orders by a total key — ORD = (priority, discover_ts, url_hash, url),
@@ -34,12 +37,6 @@ from ccrawler_spark.functions.spark_exprs import (
 )
 
 ORD_COLS = ["priority", "discover_ts", "url_hash", "url"]
-
-
-def _ord(df_or_prefix: str | None = None) -> list[Column]:
-    if df_or_prefix:
-        return [F.col(f"{df_or_prefix}.{c}") for c in ORD_COLS]
-    return [F.col(c) for c in ORD_COLS]
 
 
 def fanout(n_rows: int, rows_per_task: int, cap: int) -> int:
@@ -112,56 +109,35 @@ def robots_gate(frontier: DataFrame, active_rules: DataFrame, conf: CrawlConf) -
 
 
 # ------------------------------------------------- O24/O26/O27/O31: dequeue
-def slots_col() -> Column:
-    """O27 politeness slots: virtual time within the round, per host."""
-    w3 = Window.partitionBy("host").orderBy(*_ord())
-    return ((F.row_number().over(w3) - F.lit(1)) * F.col("crawl_delay_ms")).cast("long")
+def schedule(allowed: DataFrame, conf: CrawlConf, n_hosts: int) -> DataFrame:
+    """The round's schedule over the gated frontier: per-host top-k
+    (O26), the global budget K (O31) and politeness slots (O27) from one
+    window.
 
-
-def rank_per_host(allowed: DataFrame, conf: CrawlConf) -> DataFrame:
-    """Attach ``_rn`` = exact per-host rank (1-based, total order ORD),
-    keeping only rank ≤ k = ``conf.per_host_k``.
-
-    Skew handling (O24, "hot-host skew via salted repartitioning",
-    B:6): when ``conf.salting_enabled`` and ``salt_fanout > 1``, a
-    two-phase top-k — phase 1 ranks within (host, salt) where salt =
-    umod(url_hash, salt_fanout), keeping k rows per salt; phase 2 ranks
-    the ≤ k·fanout survivors per host. Exact because each salt keeps
-    ≥ k candidates and phase 2 orders by the same total ORD. A hot
-    host's rows are spread over ``salt_fanout`` partitions instead of
-    one straggler task (AQE can split skewed *joins* but not skewed
-    *windows* — SURVEY.md §4.1); the frontier a round ranks may hold
-    millions of rows for one host."""
+    ``_rn`` is the per-host rank in the total order ORD, kept where
+    ``_rn ≤ k``. Catalyst plans that filter as a map-side ``Partial``
+    WindowGroupLimit, the host exchange, then a ``Final`` one, so each
+    map task ships at most k rows per host and a hot host never crosses
+    the shuffle whole (O24; the engine keeps the session's
+    ``windowGroupLimitThreshold`` ≥ k so the rule fires). The budget
+    keeps a prefix of ORD, so a host's kept rows are a prefix of its
+    ranked rows and ``_rn`` is still their rank within the host: slot =
+    (_rn − 1) × crawl delay, as in the oracle."""
     k = conf.per_host_k
-    ord_cols = _ord()
-    if conf.salting_enabled and conf.salt_fanout > 1:
-        salt = umod_long(F.col("url_hash"), conf.salt_fanout)
-        w1 = Window.partitionBy("host", salt).orderBy(*ord_cols)
-        allowed = (
-            allowed.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= k)
-            .drop("_rn1")
-        )
-    w2 = Window.partitionBy("host").orderBy(*ord_cols)
-    return (
-        allowed.withColumn("_rn", F.row_number().over(w2))
+    w = Window.partitionBy("host").orderBy(*ORD_COLS)
+    scheduled = (
+        allowed.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
     )
-
-
-def split_ranked(ranked: DataFrame, conf: CrawlConf,
-                 n_hosts: int) -> DataFrame:
-    """O26/O31/O27 dequeue over a ``rank_per_host`` frame: the per-host
-    top-k, then the global budget K, then politeness slots — the
-    round's schedule."""
-    scheduled = ranked.drop("_rn")
-    if n_hosts * conf.per_host_k > conf.round_budget:
+    if n_hosts * k > conf.round_budget:
         # the budget binds. When the per-host cap already bounds the
         # round below K the limit is statically a no-op and is skipped:
         # for K in the millions Spark plans orderBy+limit as a
         # single-partition GlobalLimit, a pure serial stage
-        scheduled = scheduled.orderBy(*_ord()).limit(conf.round_budget)
-    return scheduled.withColumn("slot_ms", slots_col())
+        scheduled = scheduled.orderBy(*ORD_COLS).limit(conf.round_budget)
+    return scheduled.withColumn(
+        "slot_ms", ((F.col("_rn") - 1) * F.col("crawl_delay_ms")).cast("long")
+    ).drop("_rn")
 
 
 SEQ_KEY = ["slot_ms", "host_bucket", "host", "url_hash", "url"]

@@ -1,7 +1,7 @@
 """T2 at small scale (100k-URL universe, 5 rounds, K=2000) — exact
 ordering + seen-set parity, robots denials, and skew sanity (T5-lite:
 the Zipf(1.2) host distribution drives real hot-host pressure through
-the salted dequeue)."""
+the per-host top-k of stages.schedule)."""
 
 import pytest
 

@@ -145,28 +145,86 @@ def test_textops_hashing_plan_shapes(spark):
         assert plan.count("MapInPandas") == 1, f"{op.__name__}:\n{plan[:800]}"
 
 
-def test_dequeue_exchange_budget(spark):
-    """The dequeue pipeline must not shuffle more than: salt window +
-    host window + budget single-partition + slots reuse (≤ 4
-    exchanges); the slots window must reuse the host-window
-    partitioning rather than add a fifth. ``n_hosts`` makes the budget
-    bind, so the sort+limit plan is the one counted."""
-    from ccrawler_spark.conf import TINY
-    from ccrawler_spark.scheduler.stages import rank_per_host, split_ranked
-
-    fr = spark.createDataFrame(
+def _dequeue_frontier(spark):
+    return spark.createDataFrame(
         [(f"http://h{i%3}.example/p/{i}", f"h{i%3}.example", i, 0)
          for i in range(100)],
         "url string, host string, url_hash long, priority int",
     ).withColumn("discover_ts", F.timestamp_micros(F.lit(0))).withColumn(
         "crawl_delay_ms", F.lit(1000).cast("long")
     )
+
+
+def test_dequeue_exchange_budget(spark):
+    """The dequeue plan has one Exchange: the host exchange under its
+    one rank window. The budget's sort+limit plans as
+    TakeOrderedAndProject, which merges each partition's top K through
+    its own single-partition shuffle (no Exchange node), and the slots
+    are a projection of the rank, so they add none. ``n_hosts`` makes
+    the budget bind, so the sort+limit plan is the one counted."""
+    from ccrawler_spark.conf import TINY
+    from ccrawler_spark.scheduler.stages import schedule
+
     n_hosts = TINY.round_budget  # n_hosts × k > K
-    ranked = rank_per_host(fr, TINY)
-    plan = plan_of(split_ranked(ranked, TINY, n_hosts), mode="simple")
+    plan = plan_of(schedule(_dequeue_frontier(spark), TINY, n_hosts),
+                   mode="simple")
     assert "TakeOrderedAndProject" in plan or "GlobalLimit" in plan, plan
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges <= 4, f"{n_exchanges} exchanges:\n{plan}"
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Window [") == 1, plan
+
+
+def _assert_partial_limit_below_host_exchange(plan: str, k: int):
+    """A ``Partial`` WindowGroupLimit of k sits below the host exchange
+    and its ``Final`` above it, in a ``simple`` (top-down) plan."""
+    lines = plan.splitlines()
+
+    def at(pred):
+        (i,) = [i for i, l in enumerate(lines) if pred(l)]
+        return i
+
+    ex = at(lambda l: "Exchange hashpartitioning(host#" in l)
+    part = at(lambda l: "WindowGroupLimit" in l and l.endswith(f"{k}, Partial"))
+    final = at(lambda l: "WindowGroupLimit" in l and l.endswith(f"{k}, Final"))
+    assert final < ex < part, plan
+
+
+@pytest.mark.parametrize("conf_name,n_hosts", [("TINY", 50), ("BENCH", 3)])
+def test_dequeue_cuts_hot_hosts_before_exchange(spark, conf_name, n_hosts):
+    """O24: the per-host top-k is cut map-side — at most k rows per
+    host leave each map task — for the parity conf (budget binding)
+    and the bench conf (k = 200, budget slack)."""
+    from ccrawler_spark import conf as confmod
+    from ccrawler_spark.scheduler.stages import schedule
+
+    conf = getattr(confmod, conf_name)
+    plan = plan_of(schedule(_dequeue_frontier(spark), conf, n_hosts),
+                   mode="simple")
+    _assert_partial_limit_below_host_exchange(plan, conf.per_host_k)
+
+
+def test_engine_keeps_group_limit_threshold(spark, tiny_fixtures, tmp_path):
+    """Catalyst infers the group limit only while k ≤
+    windowGroupLimitThreshold (default 1000): an engine with k = 2000
+    raises the session value, so its dequeue keeps the Partial limit."""
+    from ccrawler_spark.conf import CrawlConf
+    from ccrawler_spark.scheduler.cli import make_engine
+    from ccrawler_spark.scheduler.stages import schedule
+
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, 1000)
+    try:
+        conf = CrawlConf(per_host_k=2000, round_budget=10**9)
+        frontier = _dequeue_frontier(spark)
+        assert "WindowGroupLimit" not in plan_of(
+            schedule(frontier, conf, 3), mode="simple")
+        engine, _ = make_engine(spark, str(tiny_fixtures), str(tmp_path),
+                                conf=conf)
+        assert int(spark.conf.get(key)) == 2000
+        _assert_partial_limit_below_host_exchange(
+            plan_of(schedule(frontier, engine.conf, 3), mode="simple"), 2000)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_bootstrap_dedup_rides_layout_exchange(spark):
