@@ -3,8 +3,9 @@ for schedules between the two perfbench workloads (40 and 11,629
 images), to check the decode rule of scheduler/fetch.py (512 images a
 task, at most defaultParallelism) where neither workload reaches.
 This times the flat join + decode plan; the layout fetch
-(fetch_from_layout) sizes its decoding scan by the same rule, capped
-at the file count.
+(fetch_from_layout) sizes its decoding scan by the same rule, and the
+range split on host_bucket gives it at most one task per scheduled
+bucket.
 
 The schedule and its corpus rows are cached first, so the wall covers
 the broadcast join, the decode shuffle, the Arrow crossing and the

@@ -111,9 +111,8 @@ def worker(cores: int, json_path: str, fixture_dir: str | None,
     fdir = fixture_dir or str(ensure_bench_fixtures(spark))
     # the design-scale engine runs over the bucket-partitioned /
     # host-clustered corpus layout (io/corpus_layout); the bench conf
-    # is host-dense so no pruning fires, but the bytes scanned equal
-    # the flat corpus and the measured engine is the one a cluster
-    # would run. Built once by orchestrate()'s 48g pre-gen session
+    # is host-dense, so the scan keeps most row groups, but the
+    # measured engine is the one a cluster would run. Built once by orchestrate()'s 48g pre-gen session
     # (the one-time payload shuffle needs the bigger heap) and cached.
     from ccrawler_spark.fixtures.gen import ensure_corpus_layout
 

@@ -1,5 +1,5 @@
-"""The pruned corpus reader: a pyarrow scan behind ``mapInArrow`` that
-reads only the corpus rows a round schedules from the fetch-path layout
+"""The corpus layout reader: a pyarrow scan behind ``mapInArrow`` that
+reads only the corpus rows a schedule names from the fetch-path layout
 (io/corpus_layout).
 
 Why a set scan and not a pushed filter: Spark's parquet datasource
@@ -11,16 +11,20 @@ under the engine's own session overflowed from 1,500 ids up
 (docs/SCALING.md, "One pruned corpus reader"), so the JVM reader was
 removed. This reader tests set membership the obvious way — a sorted
 list + bisect per row-group statistic, a hash-set ``is_in`` kernel per
-value vector — with no expression recursion, so its cap,
-``ARROW_PUSHDOWN_CAP`` (128k), is set only by the broadcast size of
-the key sets (a few MB).
+value vector — with no expression recursion, and its sets are built in
+the tasks, so no schedule size changes its plan.
 
-Execution shape (all distributed, nothing driver-side but the file
-list, which ships as an Arrow table — a local scan, no Python stage):
+Execution shape (all distributed; the driver plans the scan and lists,
+collects and broadcasts nothing):
 
-- **partition pruning** — the scheduled hosts' bucket-prefixed keys
-  name their ``host_bucket=`` directories directly (top 7 bits), so
-  only those directories' files enter the scan;
+- **the schedule is the scan's input** — the schedule rows
+  ``(host_bucket, host_key, image_id[, url])`` are range-partitioned
+  on ``host_bucket``, so all rows of a bucket reach one task, and each
+  task builds its key and id sets (and, for ``emit``, its image_id →
+  urls map) from its own rows;
+- **partition pruning** — each task lists the
+  ``host_bucket=b/*.parquet`` files of its own buckets only, so an
+  unscheduled bucket is never opened;
 - **row-group skipping** — each task reads its files' FOOTERS and
   keeps a row group only if some scheduled host_key lands in its
   [min,max] and one of THAT host's scheduled image_ids lands in its id
@@ -31,10 +35,16 @@ list, which ships as an Arrow table — a local scan, no Python stage):
   caller's ``emit`` are exactly the scheduled ones — at 100 TB the
   bytes moved track the schedule, not the touch fraction;
 - **one crossing** — each file's filtered table goes through ``emit``
-  inside the same Python task. The engine's fetch path
+  inside the same Python task. The engine's fetch
   (scheduler/fetch.fetch_from_layout) decodes there, so the payload
   never returns to the JVM: the scan streams ``(url, caption, flags)``
   rows, not bytes. ``pruned_corpus_arrow`` emits the rows as read.
+
+Scope note: the tasks list the layout with ``pathlib``, so the layout
+root must be on a filesystem every executor mounts (local disks and
+NFS/FUSE-mounted stores); there is no reader for an object store. A
+pyarrow.dataset/fsspec listing would lift the constraint without
+changing any semantics.
 
 ``pruned_corpus_arrow`` is identical to ``spark.read.parquet(layout)``
 filtered to the scheduled (host, image_id) pairs — pinned by
@@ -55,12 +65,6 @@ from ccrawler_spark.io.corpus_layout import (
     META_FILE, host_key_py, read_layout_meta,
 )
 
-# the set-based pushdown bound: above this the broadcast key set stops
-# being "schedule metadata" (128k ids ≈ 2 MB pickled) and the engine
-# reads the layout pruned to the scheduled buckets only. Physical
-# planning only — results identical either way.
-ARROW_PUSHDOWN_CAP = 131072
-
 
 def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
     """An empty frame of ``schema`` from an empty Arrow table: a local
@@ -71,70 +75,7 @@ def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
     return spark.createDataFrame(to_arrow_schema(schema).empty_table())
 
 
-def pruned_corpus_arrow(
-    spark: SparkSession,
-    path: str,
-    host_ids: dict,
-    track: list | None = None,
-) -> DataFrame:
-    """The scheduled corpus rows as read (``scan_layout`` with no
-    ``emit``): sound for the fetch join (pruning can only drop rows that
-    cannot match any scheduled row), output schema identical to
-    ``spark.read.parquet(path)`` (data columns + the ``host_bucket``
-    partition column), one task per file up to ``defaultParallelism``."""
-    return scan_layout(spark, path, host_ids,
-                       spark.sparkContext.defaultParallelism, track=track)
-
-
-def scan_layout(
-    spark: SparkSession,
-    path: str,
-    host_ids: dict,
-    tasks: int,
-    emit: Callable[[pa.Table], Iterator[pa.RecordBatch]] | None = None,
-    schema: StructType | None = None,
-    track: list | None = None,
-) -> DataFrame:
-    """Layout scan of the scheduled rows (module docstring), in at most
-    ``tasks`` tasks and never more than one per file.
-
-    Each file's admitted, residual-filtered rows — the data columns plus
-    ``host_bucket`` — go through ``emit(table)`` in the scan's Python
-    task, and the batches it yields, of ``schema``, are the output.
-    Without ``emit`` the rows themselves are the output, with the schema
-    of ``spark.read.parquet(path)``.
-
-    ``host_ids`` (dict host → iterable of its scheduled image_ids; a
-    dict keyed by image_id iterates as its ids) drives HOST-SCOPED id
-    admission: a row group is kept only if some scheduled host's key
-    lands in its [min,max] AND one of *that host's* ids lands in its id
-    range. A global AND (host-set ∧ id-set) would admit a group
-    whenever ANY of the K scheduled ids falls in its id range — at K ≈
-    10⁴⁺ nearly every range does, so skipping decays to host-only touch
-    (measured r6: 556 vs 286 groups on the sparse bench schedule).
-    Scoping the id test to the ≤ per_host_k ids of the group's own
-    hosts keeps the admission probability flat as K grows. Sound
-    because a scheduled corpus row (h, i) can only sit in a group whose
-    host_key range covers key(h) — so testing i against groups admitted
-    via key(h) covers every row the fetch join could match. The
-    residual filter is global (host_key in the key set AND image_id in
-    the id set), like the fetch join on image_id it feeds.
-
-    ``track``: optional list the key-set broadcast is appended to, so
-    the caller can ``unpersist()`` it once the round's actions complete
-    (ADVICE r6: at the 128k cap each round otherwise strands ~2 MB of
-    broadcast blocks until GC + ContextCleaner get to the closure).
-    ``unpersist`` (not ``destroy``) keeps the plan re-evaluable —
-    Spark re-ships from the driver if a late branch re-executes.
-
-    Scope note (ADVICE r6): the file list comes from a driver-side
-    ``pathlib`` glob, so the layout root must be on a locally-mounted
-    filesystem (local disks and NFS/FUSE-mounted stores); there is no
-    fallback reader for an object store. A pyarrow.dataset/fsspec
-    listing would lift the constraint without changing any semantics."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
+def _layout_meta(path: str) -> dict:
     meta = read_layout_meta(path)
     if meta is None:
         raise ValueError(
@@ -142,35 +83,79 @@ def scan_layout(
             "host_key pushdown values without the bucket count it was "
             "written with"
         )
-    b = int(meta["buckets"])
-    ids_by_key: dict[int, list] = {}
-    for h, v in host_ids.items():  # merge hash-colliding hosts
-        ids_by_key.setdefault(host_key_py(h, b), []).extend(v)
-    ids_by_key = {k: sorted(v) for k, v in ids_by_key.items()}
-    keys = sorted(ids_by_key)
-    ids_l = sorted({i for v in ids_by_key.values() for i in v})
-    root = pathlib.Path(path)
-    # bucket partition pruning, driver-side from the directory names —
-    # the bucket IS the key's top 7 bits, so no separate bucket list
-    sel = {k >> 57 for k in keys}
-    paths, bks = [], []
-    for bdir in sorted(root.glob("host_bucket=*")):
-        bk = int(bdir.name.split("=", 1)[1])
-        if bk not in sel:
-            continue
-        for pf in sorted(bdir.glob("*.parquet")):
-            paths.append(str(pf))
-            bks.append(bk)
+    return meta
 
+
+def pruned_corpus_arrow(
+    spark: SparkSession, path: str, host_ids: dict,
+) -> DataFrame:
+    """The scheduled corpus rows as read (``scan_layout`` with no
+    ``emit``) of ``host_ids`` (dict host → iterable of its scheduled
+    image_ids): sound for the fetch join (pruning can only drop rows
+    that cannot match any scheduled row), output schema identical to
+    ``spark.read.parquet(path)`` (data columns + the ``host_bucket``
+    partition column), in up to ``defaultParallelism`` tasks."""
+    b = int(_layout_meta(path)["buckets"])
+    keys, ids = [], []
+    for h, v in host_ids.items():
+        k = host_key_py(h, b)
+        for i in v:
+            keys.append(k)
+            ids.append(i)
+    sched = spark.createDataFrame(pa.table({
+        # the bucket is the key's top 7 bits (corpus_layout.CLUSTER_KEYS)
+        "host_bucket": pa.array([k >> 57 for k in keys], pa.int32()),
+        "host_key": pa.array(keys, pa.int64()),
+        "image_id": pa.array(ids, pa.string()),
+    }))
+    return scan_layout(sched, path, spark.sparkContext.defaultParallelism)
+
+
+def scan_layout(
+    sched: DataFrame,
+    path: str,
+    tasks: int,
+    emit: Callable[[pa.Table, dict], Iterator[pa.RecordBatch]] | None = None,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Layout scan of the rows ``sched`` names (module docstring), in at
+    most ``tasks`` tasks, every bucket's files in one task.
+
+    ``sched`` holds ``(host_bucket, host_key, image_id)`` rows, plus
+    ``url`` when there is an ``emit``. Each file's admitted,
+    residual-filtered rows — the data columns plus ``host_bucket`` — go
+    through ``emit(table, urls)`` in the scan's Python task, with
+    ``urls`` the task's {image_id: [url, …]}, and the batches it
+    yields, of ``schema``, are the output. Without ``emit`` the rows
+    themselves are the output, with the schema of
+    ``spark.read.parquet(path)``.
+
+    Admission is HOST-SCOPED: a row group is kept only if some
+    scheduled host's key lands in its [min,max] AND one of *that
+    host's* ids lands in its id range. A global AND (host-set ∧ id-set)
+    would admit a group whenever ANY of the K scheduled ids falls in
+    its id range — at K ≈ 10⁴⁺ nearly every range does, so skipping
+    decays to host-only touch (measured r6: 556 vs 286 groups on the
+    sparse bench schedule). Scoping the id test to the ≤ per_host_k ids
+    of the group's own hosts keeps the admission probability flat as K
+    grows. Sound because a scheduled corpus row (h, i) can only sit in
+    a group whose host_key range covers key(h), in a file of h's
+    bucket, which the task holding h's rows lists. The residual filter
+    is over the task's sets (host_key in its keys AND image_id in its
+    ids)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    meta = _layout_meta(path)
+    root = pathlib.Path(path)
     if schema is None:
         if meta.get("data_schema") is not None:
             # layout-static schema from the metadata sidecar: no
             # per-round driver-side footer read (VERDICT r6 #4)
             base = StructType.fromJson(meta["data_schema"])
         else:  # pre-r7 layout: fall back to one footer
-            any_file = paths[0] if paths else next(
-                iter(sorted(root.glob("host_bucket=*/*.parquet"))), None
-            )
+            any_file = next(iter(sorted(root.glob("host_bucket=*/*.parquet"))),
+                            None)
             if any_file is None:
                 raise ValueError(
                     f"corpus layout at {path} has no parquet files"
@@ -179,14 +164,6 @@ def scan_layout(
         schema = StructType(
             list(base.fields) + [StructField("host_bucket", IntegerType())]
         )
-    if not paths:  # scheduled buckets have no files: statically empty
-        return empty_frame(spark, schema)
-
-    # ship the key sets once per executor (torrent broadcast), not once
-    # per task closure — at the 128k cap they are ~2 MB pickled
-    bc = spark.sparkContext.broadcast((keys, ids_l, ids_by_key))
-    if track is not None:
-        track.append(bc)
 
     def scan(batches):
         import bisect
@@ -196,9 +173,23 @@ def scan_layout(
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        keys_l, idsv, by_key = bc.value
+        rows = [b for b in batches if b.num_rows]
+        if not rows:
+            return
+        s = pa.Table.from_batches(rows)
+        ids = s.column("image_id").to_pylist()
+        by_key: dict[int, list] = {}  # merges hash-colliding hosts
+        for k, i in zip(s.column("host_key").to_pylist(), ids):
+            by_key.setdefault(k, []).append(i)
+        for v in by_key.values():
+            v.sort()
+        keys_l = sorted(by_key)
         key_arr = pa.array(keys_l, pa.int64())
-        id_arr = pa.array(idsv, pa.string())
+        id_arr = pc.unique(s.column("image_id"))
+        urls: dict[str, list[str]] = {}
+        if emit is not None:
+            for i, u in zip(ids, s.column("url").to_pylist()):
+                urls.setdefault(i, []).append(u)
 
         def admits(srt, st):
             # absent stats cannot prove a skip — keep the group
@@ -225,11 +216,9 @@ def scan_layout(
                 admits(by_key[k], sti) for k in keys_l[lo:hi]
             )
 
-        for batch in batches:
-            fps = batch.column("path").to_pylist()
-            fbks = batch.column("bucket").to_pylist()
-            for fp, bk in zip(fps, fbks):
-                f = pq.ParquetFile(fp)
+        for bk in sorted(set(s.column("host_bucket").to_pylist())):
+            for fp in sorted((root / f"host_bucket={bk}").glob("*.parquet")):
+                f = pq.ParquetFile(str(fp))
                 md = f.metadata
                 if md.num_row_groups == 0:
                     continue
@@ -254,12 +243,9 @@ def scan_layout(
                     "host_bucket",
                     pa.array(np.full(t.num_rows, bk, dtype=np.int32)),
                 )
-                yield from (t.to_batches() if emit is None else emit(t))
+                yield from (t.to_batches() if emit is None
+                            else emit(t, urls))
 
-    files = spark.createDataFrame(pa.table({
-        "path": pa.array(paths, pa.string()),
-        "bucket": pa.array(bks, pa.int32()),
-    }))
-    return files.repartition(max(1, min(len(paths), tasks))).mapInArrow(
+    return sched.repartitionByRange(max(1, tasks), "host_bucket").mapInArrow(
         scan, schema
     )

@@ -1,5 +1,5 @@
 """Fetch-path corpus layout: bucket-partitioned, host/image_id-clustered
-parquet so a scheduling round's fetch join stops scanning the whole
+parquet so a scheduling round's fetch stops scanning the whole
 corpus payload column (the last O(corpus)-per-round structure at design
 scale — VERDICT r3 #1).
 
@@ -14,9 +14,8 @@ K ≪ corpus) a small fraction of the host universe. The layout makes
 that structure physical:
 
 - **partitioned by** ``host_bucket=`` (the crawler writes the corpus,
-  so it knows the source host of every image) — the fetch join prunes
-  to the buckets actually scheduled (free: the engine already has the
-  scheduled per-bucket counts driver-side for lineage);
+  so it knows the source host of every image) — the fetch scan opens
+  only the buckets its schedule rows name;
 - **clustered** (sorted within files) **by (host_key, image_id)**
   where host_key is the bucket-prefixed numeric key (CLUSTER_KEYS
   comment) — parquet row-group min/max statistics on ``host_key``
@@ -36,13 +35,16 @@ the set-based Arrow scan in io/arrow_scan; a Spark parquet ``IN``
 pushdown of the same keys becomes an ``Or`` tree that overflows the
 JVM stack (docs/SCALING.md rounds 5-6 and "One pruned corpus reader").
 
-Dense-schedule regime (the bench conf fetches ~20% of the corpus per
-round, touching every host): the schedule is past the Arrow scan's
-cap, the engine reads the layout pruned to the scheduled
-``host_bucket`` partitions, every row group is kept, and the scan cost
-equals the flat layout's — the pruning is never a regression. Measured
-numbers + the row-group touch histogram live in docs/SCALING.md
-(finding 8, updated r4).
+One plan at every schedule size: the schedule itself is the scan's
+input, range-partitioned on ``host_bucket``, so a dense schedule (the
+bench conf fetches ~20% of the corpus per round, touching every host)
+takes the same scan as a sparse one and simply keeps more row groups.
+The layout's 7-bit bucket prefix bounds the engine to
+``host_buckets ≤ 64`` (``write_corpus_layout`` asserts it, and
+``assert_layout_compatible`` makes the engine's bucket count equal the
+layout's). Measured numbers + the row-group touch histogram live in
+docs/SCALING.md (finding 8, updated r4, and "One fetch plan at every
+schedule size").
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ from __future__ import annotations
 import json
 import pathlib
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ccrawler_spark.functions.spark_exprs import host_bucket
@@ -119,12 +121,8 @@ def write_corpus_layout(
     # exactly; anything above 64 buckets would wrap the signed long
     assert buckets <= 64, "host_key bucket prefix supports ≤ 64 buckets"
     df = df.withColumn("host_bucket", host_bucket(F.col("host"), buckets))
-    # bucket-prefixed numeric cluster key (see CLUSTER_KEYS)
-    df = df.withColumn(
-        "host_key",
-        F.col("host_bucket").cast("long") * F.lit(1 << 57)
-        + F.shiftrightunsigned(F.xxhash64("host"), 7),
-    )
+    df = df.withColumn("host_key",
+                       host_key(F.col("host_bucket"), F.col("host")))
     # RANGE partitioning on the full cluster key (r5, replacing the
     # earlier (bucket, id-salt) hash split): a tail host's rows land in
     # exactly ONE file instead of one per salt (the salt multiplied
@@ -159,6 +157,14 @@ def write_corpus_layout(
     ])
     write_layout_meta(path, buckets, row_group_bytes,
                       data_schema=_json.loads(data_schema.json()))
+
+
+def host_key(bucket: Column, host: Column) -> Column:
+    """The bucket-prefixed numeric cluster key (see CLUSTER_KEYS) of
+    ``host`` in ``bucket``: the bucket in the top 7 bits, the unsigned
+    xxhash64 of the host in the lower 57."""
+    return (bucket.cast("long") * F.lit(1 << 57)
+            + F.shiftrightunsigned(F.xxhash64(host), 7))
 
 
 def host_key_py(host: str, buckets: int) -> int:
@@ -199,11 +205,12 @@ def read_layout_meta(path: str) -> dict | None:
 
 def assert_layout_compatible(path: str, host_buckets: int) -> None:
     """Fail loudly before any round runs if the layout's bucketing does
-    not match the engine conf: a dense round reads the layout filtered
-    to the ``host_bucket`` values the conf assigned its schedule, so a
+    not match the engine conf: the fetch scan lists the layout's
+    ``host_bucket`` directories the conf assigned its schedule, so a
     mismatch would silently drop scheduled corpus rows — fetches come
     back ``fetch_ok=false`` and look like legitimate misses (ADVICE r4,
-    medium)."""
+    medium). A matching layout also bounds the conf to its ≤ 64
+    buckets."""
     meta = read_layout_meta(path)
     if meta is None:
         raise ValueError(

@@ -104,17 +104,22 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
 
 def make_engine(spark, fixture_dir: str, out_dir: str, conf=None,
                 size: str = "tiny", corpus_layout: str | None = None):
+    """Engine + store over a fixture dir. Without ``corpus_layout`` the
+    engine fetches from the fixture's own layout, written once next to
+    it (fixtures.gen.ensure_corpus_layout)."""
     from ccrawler_spark import conf as confmod
+    from ccrawler_spark.fixtures.gen import ensure_corpus_layout
     from ccrawler_spark.io.snapshot import SnapshotStore
     from ccrawler_spark.scheduler.engine import CrawlEngine
 
     if conf is None:
         conf = {"tiny": confmod.TINY, "small": confmod.SMALL, "bench": confmod.BENCH}[size]
+    if corpus_layout is None:
+        corpus_layout = str(ensure_corpus_layout(spark, fixture_dir))
     store = SnapshotStore(spark, out_dir, conf)
-    corpus = spark.read.parquet(f"{fixture_dir}/corpus.parquet")
     hosts = spark.read.parquet(f"{fixture_dir}/hosts.parquet")
     robots = spark.read.parquet(f"{fixture_dir}/robots.parquet")
-    return CrawlEngine(spark, store, corpus, hosts, robots, conf,
+    return CrawlEngine(spark, store, hosts, robots, conf,
                        corpus_layout=corpus_layout), store
 
 

@@ -2,9 +2,13 @@
 
 One engine round is a single declarative DataFrame DAG over the
 snapshot-store tables; the only driver-side state is the manifest
-(small JSON). Seen dedup is one exact anti-join (scheduler/seen.py);
-the per-bucket bloom segments are merged each round for lineage, task
-side (cogrouped per host_bucket), never collected or broadcast.
+(small JSON) and the round's schedule counts. The fetch is one plan at
+every schedule size: the schedule is shuffled to the Arrow scan of the
+fetch-path corpus layout, which decodes where it reads
+(scheduler/fetch.fetch_from_layout). Seen dedup is one exact anti-join
+(scheduler/seen.py); the per-bucket bloom segments are merged each
+round for lineage, task side (cogrouped per host_bucket), never
+collected or broadcast.
 Rounds are idempotent pure functions of (snapshot n-1, conf) — the
 virtual clock (SEMANTICS.md §6) and total-order keys make re-running a
 crashed round byte-identical, which is the resumability contract
@@ -28,7 +32,7 @@ from ccrawler_spark.functions.spark_exprs import umod_long
 from ccrawler_spark.io.arrow_scan import empty_frame
 from ccrawler_spark.io.snapshot import SnapshotStore
 from ccrawler_spark.scheduler import stages
-from ccrawler_spark.scheduler.fetch import fetch_and_decode, fetch_from_layout
+from ccrawler_spark.scheduler.fetch import fetch_from_layout
 from ccrawler_spark.scheduler.seen import seen_dedup
 
 FRONTIER_COLS = [
@@ -66,20 +70,6 @@ def layout_dedup(rows: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-def _pair_ids(rows) -> dict[str, dict[str, list[str]]]:
-    """(host, image_id, url) schedule rows → {host: {image_id: [url,
-    …]}}: the hosts and ids drive the Arrow scan's host-scoped row-group
-    admission, and the urls name each matched corpus row's scheduled
-    rows (fetch.fetch_from_layout). A list keeps every url of an id, as
-    a join on image_id would."""
-    out: dict[str, dict[str, list[str]]] = {}
-    for r in rows:
-        out.setdefault(r["host"], {}).setdefault(r["image_id"], []).append(
-            r["url"]
-        )
-    return out
-
-
 @dataclass
 class RoundStats:
     round: int
@@ -94,34 +84,22 @@ class CrawlEngine:
         self,
         spark: SparkSession,
         store: SnapshotStore,
-        corpus: DataFrame,
         hosts: DataFrame,
         robots: DataFrame,
         conf: CrawlConf,
-        corpus_layout: str | None = None,
+        corpus_layout: str,
     ):
         self.spark = spark
         self.store = store
-        self.corpus = corpus
-        # Arrow-scan broadcasts (key sets, urls) created during the
-        # current round; run_round unpersists them in its finally
-        # (ADVICE r6)
-        self._round_bcs: list = []
-        # optional bucket-partitioned / (host, image_id)-clustered corpus
-        # (io/corpus_layout): the fetch prunes its scan to the
-        # scheduled rows' row groups (io/arrow_scan, decoding there)
-        # when the schedule is sparse, else to the scheduled buckets,
-        # instead of scanning the whole payload column every round.
-        # Purely physical — fetch results are identical.
-        # Fail loudly up front if the layout's bucketing doesn't match
-        # conf.host_buckets: a mismatched partition filter would silently
-        # drop scheduled rows (ADVICE r4, medium).
-        if corpus_layout is not None:
-            from ccrawler_spark.io.corpus_layout import (
-                assert_layout_compatible,
-            )
+        # the bucket-partitioned / (host, image_id)-clustered corpus
+        # (io/corpus_layout): the fetch scans only the scheduled rows'
+        # row groups (io/arrow_scan, decoding there) instead of the
+        # whole payload column every round. Fail loudly up front if the
+        # layout's bucketing doesn't match conf.host_buckets: the scan
+        # would silently miss scheduled rows (ADVICE r4, medium).
+        from ccrawler_spark.io.corpus_layout import assert_layout_compatible
 
-            assert_layout_compatible(corpus_layout, conf.host_buckets)
+        assert_layout_compatible(corpus_layout, conf.host_buckets)
         self.corpus_layout = corpus_layout
         self.hosts = hosts
         self.H = hosts.count()
@@ -212,20 +190,10 @@ class CrawlEngine:
         # compactions — was three pools r5, whose with-block barriers
         # also serialized driver work behind executor writes)
         pool = ThreadPoolExecutor(max_workers=8)
-        self._round_bcs: list = []
         try:
             return self._run_round_body(r, pool)
         finally:
             pool.shutdown(wait=True, cancel_futures=True)
-            # release the arrow scan's key-set broadcast blocks now
-            # that every round-r action has run (ADVICE r6) — lazy
-            # unpersist: a re-evaluated plan re-ships from the driver
-            for _bc in self._round_bcs:
-                try:
-                    _bc.unpersist(blocking=False)
-                except Exception:
-                    pass  # session teardown races are benign here
-            self._round_bcs = []
 
     def _run_round_body(self, r: int, pool) -> RoundStats:
         conf = self.conf
@@ -293,8 +261,8 @@ class CrawlEngine:
         # cached: the fused counts collect materializes it, so the
         # denied delta's write does not run the gate again
         denied = denied.cache()
-        # schedule-metadata collect (sequence group counts, lineage
-        # counts and Arrow-scan keys — see _sched_metadata) on a pool
+        # schedule-metadata collect (sequence group counts and lineage
+        # counts — see _sched_metadata) on a pool
         # thread: its first action materializes the sched0 cache while
         # the MAIN thread builds the round's remaining plans. Plan
         # construction is driver-side py4j chatter (hundreds of
@@ -349,9 +317,9 @@ class CrawlEngine:
 
         # 5-6. fetch + decode invariants (one Arrow crossing per image)
         # and the fetch sequence, needing the schedule metadata (the
-        # fetch plan's pairing, the group counts) — joined here, after
+        # group counts, which also size the scan) — joined here, after
         # the main thread finished the discovery plans
-        group_counts, sched_counts, host_ids = sched_meta.result()
+        group_counts, sched_counts = sched_meta.result()
         n_fetched = sum(sched_counts.values())
         # submit the fused counts job only now that the sched0 cache is
         # materialized: the discovery path scans sched0, and an earlier
@@ -359,11 +327,12 @@ class CrawlEngine:
         # whole dequeue pipeline twice
         tagged_job = pool.submit(tagged.collect)
         # seq (cumulative across rounds) is attached to the fetch
-        # output: fetch_and_decode reads its input twice, and a
-        # sequenced input would run the window in both reads
+        # output: the fetch reads its input twice (the scan and the
+        # flags' join-back), and a sequenced input would run the window
+        # in both reads
         seq_offset = prev["counters"]["fetched_total"]
         fetched = stages.with_fetch_sequence(
-            self._fetch(sched0, sched_counts, host_ids, n_fetched),
+            self._fetch(sched0, n_fetched),
             group_counts, r, seq_offset,
         )
         fetch_log = fetched.select(
@@ -523,83 +492,33 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- helpers
     def _sched_metadata(self, sched0: DataFrame):
-        """Everything the driver needs off the cached schedule: the
+        """What the driver needs off the cached schedule: the
         per-(slot_ms, host_bucket) row counts that the fetch sequence's
-        group offsets are summed from (stages.with_fetch_sequence), the
-        per-bucket lineage counts, and the schedule's (host → image_id
-        → urls) pairing (``_pair_ids``) for the fetch from the layout's
-        Arrow scan (fetch.fetch_from_layout) when there is a layout and
-        the schedule has at most ``ARROW_PUSHDOWN_CAP`` rows.
+        group offsets are summed from (stages.with_fetch_sequence), and
+        the per-bucket lineage counts summed from them. One
+        groupBy-count collect of at most per_host_k × #crawl_delays × B
+        rows — schedule METADATA, whatever the round budget; the
+        schedule rows themselves reach the fetch scan by a shuffle
+        (``_fetch``).
 
-        A round_budget within the cap bounds the schedule statically,
-        so ONE collect of (slot_ms, host_bucket, host, image_id, url)
-        yields counts AND pairing — one job where a groupBy-count plus a
-        key collect would be two (VERDICT r4 #6). Larger budgets run the
-        groupBy-count first (≤ per_host_k × #crawl_delays × B rows) and
-        collect the pairs only when that count fits the cap. Every
-        collect here is schedule METADATA (≤ cap rows ≈ 2 MB off the
-        cached frame), not data movement. Bucket counts are summed from
-        the group counts on the driver.
-
-        Returns (group_counts, bucket_counts, host_ids) with host_ids
-        None when the round takes the flat corpus or the bucket-pruned
-        layout read."""
+        Returns (group_counts, bucket_counts)."""
         from collections import Counter
 
-        from ccrawler_spark.io import arrow_scan
-
-        # read at call time, so a test can shrink the cap
-        cap = arrow_scan.ARROW_PUSHDOWN_CAP
-        if self.conf.round_budget <= cap:
-            rows = sched0.select(
-                *stages.SEQ_GROUP, "host", "image_id", "url"
-            ).collect()
-            groups = dict(Counter(
-                (int(r["slot_ms"]), int(r["host_bucket"])) for r in rows
-            ))
-        else:
-            groups = {
-                (int(r["slot_ms"]), int(r["host_bucket"])): int(r["count"])
-                for r in sched0.groupBy(*stages.SEQ_GROUP).count().collect()
-            }
-            n = sum(groups.values())
-            rows = (
-                sched0.select("host", "image_id", "url").collect()
-                if self.corpus_layout is not None and 0 < n <= cap else None
-            )
+        groups = {
+            (int(r["slot_ms"]), int(r["host_bucket"])): int(r["count"])
+            for r in sched0.groupBy(*stages.SEQ_GROUP).count().collect()
+        }
         counts: Counter = Counter()
         for (_, b), c in groups.items():
             counts[b] += c
-        if self.corpus_layout is None or not rows:
-            return groups, dict(counts), None
-        return groups, dict(counts), _pair_ids(rows)
+        return groups, dict(counts)
 
-    def _fetch(self, sched0: DataFrame, sched_counts: dict[int, int],
-               host_ids, n_fetched: int) -> DataFrame:
-        """The round's schedule with its decode flags: decoded inside
-        the layout's Arrow scan when the schedule's pairing was
-        collected (see _sched_metadata), else joined to
-        ``_corpus_side`` and decoded. Purely physical: identical
-        results."""
-        if host_ids is not None:
-            return fetch_from_layout(
-                sched0, self.corpus_layout, host_ids, n_fetched,
-                track=self._round_bcs,
-            )
-        return fetch_and_decode(
-            sched0, self._corpus_side(sched_counts), n_fetched
-        )
-
-    def _corpus_side(self, sched_counts: dict[int, int]) -> DataFrame:
-        """Fetch-join corpus frame of a round without the pairing: the
-        flat corpus without a layout; otherwise — a dense round, which
-        touches most row groups of its buckets anyway — the layout
-        pruned to the scheduled host_bucket partitions."""
-        if self.corpus_layout is None:
-            return self.corpus
-        return self.spark.read.parquet(self.corpus_layout).filter(
-            F.col("host_bucket").isin(sorted(sched_counts))
-        )
+    def _fetch(self, sched0: DataFrame, n_fetched: int) -> DataFrame:
+        """The round's schedule with its decode flags, decoded inside
+        the layout's Arrow scan (fetch.fetch_from_layout) — one plan at
+        every schedule size, the scan sized by the ``n_fetched``
+        schedule rows."""
+        return fetch_from_layout(sched0, self.corpus_layout, n_fetched)
 
     def _bucket_counts(self, df: DataFrame) -> dict[int, int]:
         # intentional collect: tiny side — B ≤ 64 aggregated rows

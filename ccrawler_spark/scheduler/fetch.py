@@ -5,17 +5,18 @@
 the image payload. Decode runs in ``mapInArrow`` — Arrow RecordBatches
 cross the JVM↔Python boundary once per batch, the numpy codecs operate
 per image (BASELINE.json:15: vectorized Arrow/pandas UDFs, never
-row-at-a-time Python ``F.udf``). Two plans, one kernel
-(``_decode_batches``):
+row-at-a-time Python ``F.udf``). One kernel (``_decode_batches``) in
+two plans:
 
-- ``fetch_from_layout`` — the engine's plan when the schedule's
-  (host → image_id → urls) pairing is in hand: the Arrow layout scan
-  (io/arrow_scan) decodes each matched row in the task that read it,
-  so each image crosses into Python once and the scan streams
-  ``(url, caption, flags)`` back, never the payload bytes;
-- ``fetch_and_decode`` — any other corpus frame (the flat corpus, the
-  bucket-pruned layout read above ``ARROW_PUSHDOWN_CAP``): a broadcast
-  join on image_id, then the decode crossing.
+- ``fetch_from_layout`` — the engine's fetch, at every schedule size:
+  the schedule is shuffled to the Arrow layout scan (io/arrow_scan),
+  which decodes each matched row in the task that read it, so each
+  image crosses into Python once and the scan streams ``(url, caption,
+  flags)`` back, never the payload bytes;
+- ``fetch_and_decode`` — the reference plan over any corpus frame (the
+  flat corpus): a broadcast join on image_id, then the decode
+  crossing. Tests and the bench scripts compare the engine's fetch
+  against it.
 
 Per-row invariants (BASELINE.json:15), computed against the
 deterministic reference pixels (docs/SEMANTICS.md §3):
@@ -46,6 +47,7 @@ from pyspark.sql.types import (
 
 from ccrawler_spark.functions.spark_exprs import expected_caption
 from ccrawler_spark.io import arrow_scan
+from ccrawler_spark.io.corpus_layout import host_key
 from ccrawler_spark.scheduler import stages
 
 DECODE_CHECK_FIELDS = [
@@ -168,36 +170,25 @@ def fetch_and_decode(scheduled: DataFrame, corpus: DataFrame,
     return _join_flags(scheduled, checks)
 
 
-def fetch_from_layout(scheduled: DataFrame, layout: str, host_urls: dict,
-                      n_rows: int, track: list | None = None) -> DataFrame:
+def fetch_from_layout(scheduled: DataFrame, layout: str,
+                      n_rows: int) -> DataFrame:
     """Fetch ``scheduled`` from the corpus layout at ``layout`` in one
-    Python crossing per image: the Arrow layout scan decodes each
-    matched row where it reads it (module docstring).
+    Python crossing per image: the schedule's ``(host_bucket, host_key,
+    image_id, url)`` rows are the Arrow layout scan's input, and the
+    scan decodes each matched row where it reads it (module docstring).
 
-    ``host_urls`` is the schedule's pairing, {host: {image_id: [url,
-    …]}} (engine._pair_ids): its hosts and ids drive the scan's
-    admission, and its urls name each matched corpus row's scheduled
-    rows — every url with that image_id, as the join on image_id in
-    ``fetch_and_decode`` pairs them. ``n_rows`` sizes the scan like
-    that plan's decode, capped at the file count by the scan. ``track``
-    collects the round's broadcasts (io/arrow_scan.scan_layout).
+    Each matched corpus row is paired with every url of its image_id in
+    the scan task's rows, as the join on image_id in
+    ``fetch_and_decode`` pairs them — the task holding a bucket's rows
+    holds every row of that bucket's hosts. ``n_rows`` (the schedule's
+    row count) sizes the scan like that plan's decode.
     """
-    spark = scheduled.sparkSession
-    urls_by_id: dict[str, list[str]] = {}
-    for ids in host_urls.values():
-        for image_id, urls in ids.items():
-            urls_by_id.setdefault(image_id, []).extend(urls)
-    bc = spark.sparkContext.broadcast(urls_by_id)
-    if track is not None:
-        track.append(bc)
-
-    def emit(t: pa.Table) -> Iterator[pa.RecordBatch]:
+    def emit(t: pa.Table, urls_by_id: dict) -> Iterator[pa.RecordBatch]:
         import numpy as np
 
-        by_id = bc.value
         rows, urls = [], []
         for i, image_id in enumerate(t.column("image_id").to_pylist()):
-            for u in by_id.get(image_id, ()):
+            for u in urls_by_id.get(image_id, ()):
                 rows.append(i)
                 urls.append(u)
         t = t.take(pa.array(rows, pa.int64()))
@@ -205,7 +196,7 @@ def fetch_from_layout(scheduled: DataFrame, layout: str, host_urls: dict,
             "url": pa.array(urls, pa.string()),
             "bytes": t.column("bytes"),
             "fmt": t.column("fmt"),
-            # checked JVM-side on the scan's output (fetch_from_layout)
+            # checked JVM-side on the scan's output (below)
             "caption_ok": pa.array(np.ones(t.num_rows, dtype=bool)),
             "phash": t.column("phash"),
             "caption": t.column("caption"),
@@ -213,13 +204,16 @@ def fetch_from_layout(scheduled: DataFrame, layout: str, host_urls: dict,
         for b, out in zip(batches, _decode_batches(iter(batches))):
             yield out.append_column("caption", b.column("caption"))
 
+    sched = scheduled.select(
+        "host_bucket",
+        host_key(F.col("host_bucket"), F.col("host")).alias("host_key"),
+        "image_id", "url",
+    )
     checks = arrow_scan.scan_layout(
-        spark, layout, host_urls, _decode_tasks(scheduled, n_rows),
-        emit=emit,
+        sched, layout, _decode_tasks(scheduled, n_rows), emit=emit,
         schema=StructType(
             DECODE_CHECK_FIELDS + [StructField("caption", StringType())]
         ),
-        track=track,
     ).withColumn(
         # the O41 caption invariant on the scan's small output, with
         # the pinned JVM xxhash64 (see fetch_and_decode)

@@ -2,10 +2,10 @@
 
 Each function is a declarative DataFrame→DataFrame transform; Catalyst
 fuses them into one plan per round (one action: the snapshot write).
-A round's Python crossings are exactly: image decode (O41) — inside
-the Arrow corpus scan on a layout round (io/arrow_scan), after the
-fetch join otherwise — and the bloom segment merge (O11, the engine's
-delta write); bootstrap adds the URL normalization tail (O6). All are Arrow-batched, never row-at-a-time
+A round's Python crossings are exactly: image decode (O41), inside
+the Arrow corpus layout scan (io/arrow_scan), and the bloom segment
+merge (O11, the engine's delta write); bootstrap adds the URL
+normalization tail (O6). All are Arrow-batched, never row-at-a-time
 (BASELINE.json:15). Everything else is JVM-side whole-stage codegen.
 Every window is partitioned: the fetch sequence's group offsets are
 summed on the driver from counts the engine already collects, so no

@@ -282,8 +282,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
     The member-id broadcast is size-gated (ADVICE r4): in a dup-heavy
     corpus the member set approaches O(N) doc_ids, so above
     ``NGRAM_MEMBER_BROADCAST_CAP`` pairs the semi-join falls back to a
-    shuffle-hash join instead of forcing an unbounded driver broadcast
-    (same gating style as the engine's _sched_metadata pushdown cap).
+    shuffle-hash join instead of forcing an unbounded driver broadcast.
     The count is free — ``cands`` is already checkpointed."""
     cands = lsh_candidate_pairs(docs).localCheckpoint(eager=True)
     member_ids = (

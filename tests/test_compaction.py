@@ -4,16 +4,17 @@ uncompacted run (and to the oracle)."""
 
 from ccrawler_spark import testing as tt
 from ccrawler_spark.conf import TINY
+from ccrawler_spark.fixtures.gen import ensure_corpus_layout
 from ccrawler_spark.io.snapshot import SnapshotStore
 from ccrawler_spark.scheduler.engine import CrawlEngine
 
 
 def test_compaction_preserves_parity(spark, tiny_fixtures, tmp_path):
     store = SnapshotStore(spark, tmp_path, TINY, compact_threshold=2)
-    corpus = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
+    layout = str(ensure_corpus_layout(spark, tiny_fixtures))
     hosts = spark.read.parquet(f"{tiny_fixtures}/hosts.parquet")
     robots = spark.read.parquet(f"{tiny_fixtures}/robots.parquet")
-    engine = CrawlEngine(spark, store, corpus, hosts, robots, TINY)
+    engine = CrawlEngine(spark, store, hosts, robots, TINY, layout)
     seeds = spark.read.parquet(f"{tiny_fixtures}/seeds.parquet")
     engine.bootstrap(seeds)
     for r in range(1, 4):
@@ -49,10 +50,10 @@ def test_long_horizon_chains_bounded_and_wall_flat(spark, tiny_fixtures,
 
     ROUNDS = 20
     store = SnapshotStore(spark, tmp_path, TINY, compact_threshold=3)
-    corpus = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
+    layout = str(ensure_corpus_layout(spark, tiny_fixtures))
     hosts = spark.read.parquet(f"{tiny_fixtures}/hosts.parquet")
     robots = spark.read.parquet(f"{tiny_fixtures}/robots.parquet")
-    engine = CrawlEngine(spark, store, corpus, hosts, robots, TINY)
+    engine = CrawlEngine(spark, store, hosts, robots, TINY, layout)
     seeds = spark.read.parquet(f"{tiny_fixtures}/seeds.parquet")
     engine.bootstrap(seeds)
     walls = []

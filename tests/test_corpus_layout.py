@@ -1,6 +1,8 @@
 """Fetch-path corpus layout (io/corpus_layout) and its one pruned
-reader (io/arrow_scan): engine parity with the flat corpus, plan-level
-partition-pruning proof, and metadata-level row-group skipping proof."""
+reader (io/arrow_scan): the reader against the flat corpus, the
+engine's fetch against the flat join + decode, and metadata-level
+row-group skipping proof. Engine parity with the oracle over the
+layout is tests/test_parity.py's."""
 
 import pathlib
 import subprocess
@@ -17,72 +19,8 @@ def layout_dir(spark, tiny_fixtures):
     return str(ensure_corpus_layout(spark, tiny_fixtures))
 
 
-def _run(spark, fdir, out, rounds=3, corpus_layout=None):
-    from ccrawler_spark.scheduler.cli import make_engine
-
-    engine, store = make_engine(
-        spark, str(fdir), str(out), size="tiny", corpus_layout=corpus_layout
-    )
-    engine.bootstrap(spark.read.parquet(f"{fdir}/seeds.parquet"))
-    for r in range(1, rounds + 1):
-        engine.run_round(r)
-    return store
-
-
 def _sorted_rows(df):
     return [tuple(r) for r in df.orderBy(*df.columns).collect()]
-
-
-@pytest.fixture
-def arrow_calls(monkeypatch):
-    """The layout path of each call of the Arrow layout scan (the fetch
-    path looks the scan up on its module at call time, so patching the
-    module attribute reaches it)."""
-    from ccrawler_spark.io import arrow_scan
-
-    calls = []
-    real = arrow_scan.scan_layout
-
-    def counted(*args, **kwargs):
-        calls.append(args[1])
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(arrow_scan, "scan_layout", counted)
-    return calls
-
-
-def test_engine_parity_layout_on_off(spark, tiny_fixtures, layout_dir,
-                                     arrow_calls, tmp_path):
-    """The pruned fetch path is purely physical: fetch_log and frontier
-    must be byte-identical with and without the layout — and with the
-    layout every round fetches through the Arrow scan."""
-    s_flat = _run(spark, tiny_fixtures, tmp_path / "flat")
-    assert arrow_calls == []
-    s_lay = _run(spark, tiny_fixtures, tmp_path / "layout",
-                 corpus_layout=layout_dir)
-    assert arrow_calls == [layout_dir] * 3
-    n = s_flat.latest()
-    assert s_lay.latest() == n
-    assert _sorted_rows(s_flat.read_fetch_log(n)) == _sorted_rows(
-        s_lay.read_fetch_log(n)
-    )
-    assert _sorted_rows(s_flat.read_frontier(n)) == _sorted_rows(
-        s_lay.read_frontier(n)
-    )
-
-
-def test_pruned_scan_pushes_filters(spark, tiny_fixtures, layout_dir,
-                                    tmp_path):
-    """Plan proof for a schedule above the Arrow scan's cap: the
-    engine reads the layout with the scheduled host_bucket values in
-    PartitionFilters, so unscheduled bucket directories are pruned."""
-    from ccrawler_spark.scheduler.cli import make_engine
-
-    engine, _ = make_engine(spark, str(tiny_fixtures), str(tmp_path),
-                            size="tiny", corpus_layout=layout_dir)
-    df = engine._corpus_side({1: 10, 2: 10, 3: 10})
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [host_bucket" in plan
 
 
 def test_row_group_stats_enable_skipping(spark, tiny_fixtures, tmp_path):
@@ -163,37 +101,6 @@ def test_layout_bucket_mismatch_fails_loudly(spark, tiny_fixtures,
     )["cluster_keys"] == ["host_bucket", "host_key.bp2", "image_id"]
 
 
-def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir,
-                                      arrow_calls, tmp_path):
-    """Recrawl mode re-schedules fetched URLs (due predicate); the
-    pruned fetch path (the Arrow reader, every round) must stay
-    byte-neutral there too."""
-    from ccrawler_spark.conf import CrawlConf
-    from ccrawler_spark.scheduler.cli import make_engine
-
-    conf = CrawlConf(round_budget=50, recrawl_interval_micros=90_000_000)
-    stores = []
-    for out, lay in ((tmp_path / "flat", None),
-                     (tmp_path / "layout", layout_dir)):
-        engine, store = make_engine(
-            spark, str(tiny_fixtures), str(out), conf=conf, corpus_layout=lay
-        )
-        engine.bootstrap(spark.read.parquet(f"{tiny_fixtures}/seeds.parquet"))
-        for r in range(1, 4):
-            engine.run_round(r)
-        stores.append(store)
-    assert arrow_calls == [layout_dir] * 3
-    flat, lay = stores
-    n = flat.latest()
-    assert lay.latest() == n
-    assert _sorted_rows(flat.read_fetch_log(n)) == _sorted_rows(
-        lay.read_fetch_log(n)
-    )
-    assert _sorted_rows(flat.read_frontier(n)) == _sorted_rows(
-        lay.read_frontier(n)
-    )
-
-
 def test_arrow_scan_matches_jvm_and_flat(spark, tiny_fixtures, layout_dir):
     """The Arrow reader's host-scoped mode (the engine's plan) returns
     exactly the flat corpus rows of the scheduled (host → ids) pairing,
@@ -221,48 +128,56 @@ def test_arrow_scan_matches_jvm_and_flat(spark, tiny_fixtures, layout_dir):
     assert got.schema == spark.read.parquet(layout_dir).schema
 
 
+def _plan_nodes(df) -> list[str]:
+    """Node names of ``df``'s physical plan, top to bottom."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"^[ :+\-]*(?:\*\(\d+\) )?(\w+)", plan, re.M)
+
+
+def _synthetic_schedule(spark, n: int):
+    """``n`` schedule rows over 100 hosts, 64 buckets and 7 slots."""
+    return spark.range(n).select(
+        F.concat(F.lit("h"), (F.col("id") % 100).cast("string"),
+                 F.lit(".example")).alias("host"),
+        F.lpad(F.hex("id"), 16, "0").alias("image_id"),
+        (F.col("id") % 64).cast("int").alias("host_bucket"),
+        ((F.col("id") % 7) * 1000).alias("slot_ms"),
+        F.concat(F.lit("http://x/p/"), F.col("id").cast("string"))
+        .alias("url"),
+    )
+
+
 def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
-                                         monkeypatch, tmp_path):
-    """Engine planning: a schedule within ARROW_PUSHDOWN_CAP plans the
-    Arrow scan with its full (host → id → urls) pairing — from the
-    one-collect path of a TINY budget and from the count-first path of
-    a budget above the cap, which agree on the sequence group counts
-    and the bucket counts. Above the cap the plan is no pairing, i.e.
-    the bucket-pruned layout read."""
+                                         tmp_path):
+    """Engine planning is one plan at every schedule size: a TINY budget
+    and a budget of 200,000 collect the same sequence group counts and
+    bucket counts off the same schedule, and ``_fetch`` builds the same
+    plan shape — the one Arrow scan — for both, and for a schedule of
+    140,000 rows."""
     from ccrawler_spark.conf import TINY, CrawlConf
-    from ccrawler_spark.io import arrow_scan
     from ccrawler_spark.scheduler.cli import make_engine
 
-    sched = spark.createDataFrame(
-        [(f"h{i % 100}.example", f"{i:016x}", i % 64, (i % 7) * 1000,
-          f"http://h{i % 100}.example/p/{i}")
-         for i in range(4200)],
-        "host string, image_id string, host_bucket int, slot_ms long, "
-        "url string",
-    )
-    metas = []
+    sched = _synthetic_schedule(spark, 4200)
+    metas, shapes = [], []
     big = CrawlConf(round_budget=200_000, per_host_k=64)
     for i, conf in enumerate((TINY, big)):
         out = str(tmp_path / f"store{i}")
         engine, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf,
                                 corpus_layout=layout_dir)
-        groups, counts, host_ids = engine._sched_metadata(sched)
+        groups, counts = engine._sched_metadata(sched)
         assert sum(counts.values()) == 4200
-        assert set(host_ids) == {f"h{i}.example" for i in range(100)}
-        assert sum(len(v) for v in host_ids.values()) == 4200
-        assert host_ids["h7.example"]["0000000000000007"] == [
-            "http://h7.example/p/7"
-        ]
         metas.append((groups, counts))
+        df = engine._fetch(sched, sum(counts.values()))
+        assert {"url", "image_id", "fetch_ok", "psnr_db"} <= set(df.columns)
+        shapes.append(_plan_nodes(df))
     assert metas[0] == metas[1]
     assert len(metas[0][0]) == 7 * 64
-    df = engine._fetch(sched, counts, host_ids, 4200)
-    assert {"url", "image_id", "fetch_ok", "psnr_db"} <= set(df.columns)
-    assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
-    # above the cap: counts only, no pairing
-    monkeypatch.setattr(arrow_scan, "ARROW_PUSHDOWN_CAP", 4100)
-    groups2, counts2, host_ids2 = engine._sched_metadata(sched)
-    assert (groups2, counts2) == metas[1] and host_ids2 is None
+    shapes.append(_plan_nodes(
+        engine._fetch(_synthetic_schedule(spark, 140_000), 140_000)))
+    assert "MapInArrow" in shapes[0], shapes[0]
+    assert shapes[0] == shapes[1] == shapes[2], shapes
 
 
 def test_arrow_scan_soundness_randomized(spark, tiny_fixtures, layout_dir):
@@ -388,7 +303,7 @@ from ccrawler_spark.fixtures.gen import (
 )
 from ccrawler_spark.functions.spark_exprs import host_bucket, image_id_of
 from ccrawler_spark.scheduler.cli import build_session, make_engine
-from ccrawler_spark.scheduler.fetch import fetch_and_decode
+from ccrawler_spark.scheduler.fetch import _decode_tasks, fetch_and_decode
 
 spark = build_session(4, driver_mem="2g")
 fdir = str(ensure_fixtures("tiny"))
@@ -411,17 +326,17 @@ sched = real.unionByName(phantom).withColumn(
 ).withColumn("slot_ms", F.lit(0).cast("long"))
 cols = ["url", "fetch_ok", "pixels_ok", "caption_ok", "phash_ok", "psnr_db",
         "dec_w", "dec_h"]
-_, counts, host_ids = engine._sched_metadata(sched)
+_, counts = engine._sched_metadata(sched)
 n = sum(counts.values())
 got = sorted(
-    tuple(r) for r in engine._fetch(sched, counts, host_ids, n)
-    .select(*cols).collect()
+    tuple(r) for r in engine._fetch(sched, n).select(*cols).collect()
 )
 flat = spark.read.parquet(f"{fdir}/corpus.parquet")
 want = sorted(
     tuple(r) for r in fetch_and_decode(sched, flat, n).select(*cols).collect()
 )
-print(f"SCHED={n} GOT={sum(r[1] for r in got)} EQUAL={got == want}")
+print(f"SCHED={n} TASKS={_decode_tasks(sched, n)} "
+      f"GOT={sum(r[1] for r in got)} EQUAL={got == want}")
 spark.stop()
 """
 
@@ -445,6 +360,8 @@ def test_small_budget_corpus_side_many_ids_matches_flat(layout_dir, tmp_path):
     assert line, out.stdout[-2000:]
     fields = dict(kv.split("=") for kv in line[0].split())
     assert int(fields["SCHED"]) >= 2000
+    # the scan runs in 4 tasks, so the scheduled buckets split across them
+    assert int(fields["TASKS"]) == 4
     assert int(fields["GOT"]) >= 1000
     assert fields["EQUAL"] == "True"
 
@@ -511,8 +428,7 @@ def test_fused_and_flat_flags_agree_on_bad_rows(spark, tiny_fixtures,
 
     engine, _ = make_engine(spark, str(tiny_fixtures), str(tmp_path / "s"),
                             size="tiny", corpus_layout=str(lay))
-    _, counts, host_ids = engine._sched_metadata(sched)
-    assert host_ids is not None  # the Arrow path is the one under test
+    _, counts = engine._sched_metadata(sched)
     n = sum(counts.values())
     assert n == len(ids) + 1
     cols = ["url", "fetch_ok", "pixels_ok", "caption_ok", "phash_ok",
@@ -521,7 +437,7 @@ def test_fused_and_flat_flags_agree_on_bad_rows(spark, tiny_fixtures,
     def flags(df):
         return {r["url"]: r.asDict() for r in df.select(*cols).collect()}
 
-    fused = flags(engine._fetch(sched, counts, host_ids, n))
+    fused = flags(engine._fetch(sched, n))
     flat = flags(fetch_and_decode(sched, spark.read.parquet(str(lay)), n))
     assert fused == flat
     sched.unpersist()

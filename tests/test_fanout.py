@@ -5,6 +5,7 @@ small bootstrap no longer spreads snapshot 0 over 256 tasks."""
 import pathlib
 
 from ccrawler_spark.conf import TINY
+from ccrawler_spark.fixtures.gen import ensure_corpus_layout
 from ccrawler_spark.io.snapshot import SnapshotStore
 from ccrawler_spark.scheduler import stages
 from ccrawler_spark.scheduler.engine import CrawlEngine
@@ -23,9 +24,8 @@ def test_fanout_rules():
     assert f(100_000, 25_000, 64) == 4
     assert f(10_000_000, 25_000, 64) == 64
     # decode (fetch._decode_tasks): 512 images a task, cap dp — the
-    # decode crossing of fetch.fetch_and_decode, and the Arrow layout
-    # scan that decodes in fetch.fetch_from_layout, which also caps it
-    # at the file count
+    # Arrow layout scan that decodes in fetch.fetch_from_layout, and the
+    # decode crossing of the reference fetch.fetch_and_decode
     assert f(40, 512, 4) == 1
     assert f(1_500, 512, 4) == 3
     assert f(11_629, 512, 4) == 4
@@ -38,10 +38,9 @@ def test_tiny_bootstrap_one_file_per_bucket(spark, tiny_fixtures, tmp_path):
     store = SnapshotStore(spark, tmp_path, TINY)
     engine = CrawlEngine(
         spark, store,
-        spark.read.parquet(f"{tiny_fixtures}/corpus.parquet"),
         spark.read.parquet(f"{tiny_fixtures}/hosts.parquet"),
         spark.read.parquet(f"{tiny_fixtures}/robots.parquet"),
-        TINY,
+        TINY, str(ensure_corpus_layout(spark, tiny_fixtures)),
     )
     st = engine.bootstrap(spark.read.parquet(f"{tiny_fixtures}/seeds.parquet"))
     base = pathlib.Path(store.data_path("frontier", "base-r0"))

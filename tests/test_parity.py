@@ -7,11 +7,40 @@ from ccrawler_spark import testing as tt
 
 
 @pytest.fixture(scope="module")
-def tiny_run(spark, tiny_fixtures, tmp_path_factory):
+def tiny_scanned(spark, tiny_fixtures, tmp_path_factory):
+    """The tiny run, plus the layout path of each call of the Arrow
+    layout scan made while it ran (the fetch looks the scan up on its
+    module at call time, so patching the module attribute reaches it)."""
+    from ccrawler_spark.io import arrow_scan
+
+    calls = []
+    real = arrow_scan.scan_layout
+
+    def counted(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
     out = tmp_path_factory.mktemp("tiny_store")
-    engine, store, stats = tt.engine_run(spark, "tiny", str(out), rounds=3)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(arrow_scan, "scan_layout", counted)
+        engine, store, stats = tt.engine_run(spark, "tiny", str(out), rounds=3)
     oracle = tt.oracle_run("tiny", rounds=3)
-    return store, oracle, stats
+    return store, oracle, stats, calls
+
+
+@pytest.fixture(scope="module")
+def tiny_run(tiny_scanned):
+    return tiny_scanned[:3]
+
+
+def test_every_round_fetches_through_layout_scan(spark, tiny_fixtures,
+                                                 tiny_scanned):
+    """The parity run is the benchmarked path: every round fetches
+    through the Arrow scan of the fixture's corpus layout."""
+    from ccrawler_spark.fixtures.gen import ensure_corpus_layout
+
+    layout = str(ensure_corpus_layout(spark, tiny_fixtures))
+    assert tiny_scanned[3] == [layout] * 3
 
 
 def test_fetch_ordering_exact(tiny_run):

@@ -63,14 +63,16 @@ def test_layout_fetch_one_python_crossing(spark, tiny_fixtures):
     map node (the Arrow scan that decodes), no driver-built list shipped
     through a Python stage (``Scan ExistingRDD``), and no Exchange
     carries the payload ``bytes`` (the flat join + decode plan, which
-    does shuffle them to its decode, shows the check can fail)."""
+    does shuffle them to its decode, shows the check can fail). The
+    schedule reaches the scan by the one Exchange below ``MapInArrow``,
+    which range-partitions it on ``host_bucket``, and no broadcast
+    carries the schedule's ``url`` or ``image_id``."""
     from collections import Counter
 
     from ccrawler_spark.fixtures.gen import (
         ensure_corpus_layout, universe_urls_df,
     )
     from ccrawler_spark.functions.spark_exprs import host_bucket, image_id_of
-    from ccrawler_spark.scheduler.engine import _pair_ids
     from ccrawler_spark.scheduler.fetch import (
         fetch_and_decode, fetch_from_layout,
     )
@@ -91,7 +93,8 @@ def test_layout_fetch_one_python_crossing(spark, tiny_fixtures):
     def plan(fetched):
         return plan_of(with_fetch_sequence(fetched, groups, 1, 0))
 
-    fused = plan(fetch_from_layout(sched, layout, _pair_ids(rows), len(rows)))
+    # sized for 4 scan tasks: a 1-task scan's exchange is SinglePartition
+    fused = plan(fetch_from_layout(sched, layout, 4 * 512))
     nodes = _nodes(fused)
     python = [n for n, _ in nodes
               if "InArrow" in n or "InPandas" in n or "EvalPython" in n]
@@ -99,6 +102,14 @@ def test_layout_fetch_one_python_crossing(spark, tiny_fixtures):
     assert "Scan ExistingRDD" not in fused, fused
     exchanges = [i for n, i in nodes if n == "Exchange"]
     assert exchanges and not any("bytes" in i for i in exchanges), fused
+    broadcasts = [i for n, i in nodes if n == "BroadcastExchange"]
+    assert not any(re.search(r"\b(url|image_id)#", i) for i in broadcasts), (
+        fused)
+    # the node just below MapInArrow: the schedule's range exchange
+    below = nodes[[n for n, _ in nodes].index("MapInArrow") - 1]
+    assert below[0] == "Exchange", fused
+    assert re.search(
+        r"^Arguments: rangepartitioning\(host_bucket#", fused, re.M), fused
 
     flat = plan(fetch_and_decode(
         sched, spark.read.parquet(f"{tiny_fixtures}/corpus.parquet"),
