@@ -608,7 +608,7 @@ _TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 
 
 def _shingles(k: int = 3) -> str:
-    """DuckDB word-k-shingles (distinct), matching textops.word_shingles."""
+    """DuckDB word-k-shingles (distinct), matching textops.dedup.shingle_arrays."""
     mk = " || ' ' || ".join(f"w[i+{j}]" for j in range(k))
     return (
         f"(SELECT list_distinct(CASE WHEN len(w) >= {k} THEN "

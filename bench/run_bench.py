@@ -196,20 +196,13 @@ def orchestrate(levels=(8, 32), store_dir: str = "/dev/shm") -> None:
     bench_dir = REPO / "BENCH"
     bench_dir.mkdir(exist_ok=True)
     # pre-generate fixtures once (with a big session) so workers share them
-    from ccrawler_spark.fixtures.gen import FIXTURE_ROOT
+    from ccrawler_spark.fixtures.gen import FIXTURE_ROOT, corpus_layout_current
 
-    from ccrawler_spark.io.corpus_layout import CLUSTER_KEYS, read_layout_meta
-
-    meta = read_layout_meta(str(FIXTURE_ROOT / "bench" / "corpus_layout"))
-    layout_ok = (
-        (FIXTURE_ROOT / "bench" / "_LAYOUT_DONE").exists()
-        and meta is not None
-        and meta.get("cluster_keys") == CLUSTER_KEYS
-    )
-    # the marker alone is not enough: a stale cluster-key version would
-    # otherwise rebuild inside a worker's 16g session (the one-time
-    # payload shuffle needs the 48g pre-gen session below)
-    if not ((FIXTURE_ROOT / "bench" / "_DONE_FULL").exists() and layout_ok):
+    # the marker alone is not enough: a stale layout would otherwise
+    # rebuild inside a worker's 16g session (the one-time payload
+    # shuffle needs the 48g pre-gen session below)
+    if not ((FIXTURE_ROOT / "bench" / "_DONE_FULL").exists()
+            and corpus_layout_current(FIXTURE_ROOT / "bench")):
         from ccrawler_spark.scheduler.cli import build_session
 
         s = build_session(32, driver_mem="48g")

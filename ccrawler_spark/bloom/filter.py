@@ -72,7 +72,3 @@ def probe(segment: np.ndarray | None, url_hashes: np.ndarray, num_hashes: int) -
     byte = segment[pos >> 3]
     bit = (byte >> (pos & 7).astype(np.uint8)) & 1
     return bit.all(axis=1)
-
-
-def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    return np.bitwise_or(a, b)

@@ -34,12 +34,6 @@ def decode(payload: bytes, fmt: str) -> np.ndarray:
     return _DEC[fmt](payload)
 
 
-def decode_auto(payload: bytes) -> np.ndarray:
-    """Dispatch on the 4-byte magic header."""
-    magic = bytes(payload[:4]).decode("ascii").lower()
-    return _DEC[magic](payload)
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """PSNR in dB, float64 (SEMANTICS.md §8).
 

@@ -166,8 +166,8 @@ def ensure_fixtures(size: str, with_corpus: bool = True) -> pathlib.Path:
 
 
 def ensure_bench_fixtures(spark) -> pathlib.Path:
-    """Bench-size fixtures with the 10^6-row corpus synthesized in
-    parallel via mapInPandas (0.6 ms/image × 10^6 is a Spark job, not a
+    """Bench-size fixtures with the 10^7-row corpus synthesized in
+    parallel via mapInPandas (0.6 ms/image × 10^7 is a Spark job, not a
     driver loop). Deterministic per row ⇒ parallelism-safe."""
     size = "bench"
     H, U, n_seeds, _rounds = SIZES[size]
@@ -239,6 +239,21 @@ def universe_urls_df(spark, fdir: str, chunk: int = 50_000):
     )
 
 
+def corpus_layout_current(fdir) -> bool:
+    """Whether ``fdir``'s cached corpus layout is finished and current:
+    the 64 buckets and cluster keys the engine reads, and the
+    ``data_schema`` the layout scan builds its output schema from."""
+    from ccrawler_spark.io.corpus_layout import CLUSTER_KEYS, read_layout_meta
+
+    fdir = pathlib.Path(fdir)
+    if not (fdir / "_LAYOUT_DONE").exists():
+        return False
+    meta = read_layout_meta(str(fdir / "corpus_layout"))
+    return (meta is not None and meta.get("buckets") == 64
+            and meta.get("cluster_keys") == CLUSTER_KEYS
+            and "data_schema" in meta)
+
+
 def ensure_corpus_layout(spark, fdir) -> pathlib.Path:
     """Fetch-path corpus layout for a fixture dir (io/corpus_layout):
     one-time indexing job, cached next to the fixtures. The
@@ -247,23 +262,19 @@ def ensure_corpus_layout(spark, fdir) -> pathlib.Path:
     payload, so this join is fixture plumbing, not operator cost."""
     from pyspark.sql import functions as F
 
+    import shutil
+
     from ccrawler_spark.functions.spark_exprs import image_id_of
     from ccrawler_spark.io.corpus_layout import write_corpus_layout
 
-    import shutil
-
-    from ccrawler_spark.io.corpus_layout import CLUSTER_KEYS, read_layout_meta
-
     fdir = pathlib.Path(fdir)
     out = fdir / "corpus_layout"
-    if (fdir / "_LAYOUT_DONE").exists():
-        meta = read_layout_meta(str(out))
-        if (meta is not None and meta.get("buckets") == 64
-                and meta.get("cluster_keys") == CLUSTER_KEYS):
-            return out
-        # stale cache (pre-metadata, or clustered on old keys): rebuild
-        (fdir / "_LAYOUT_DONE").unlink()
-        shutil.rmtree(out, ignore_errors=True)
+    if corpus_layout_current(fdir):
+        return out
+    # absent or stale (pre-metadata, old cluster keys, no data_schema):
+    # rebuild
+    (fdir / "_LAYOUT_DONE").unlink(missing_ok=True)
+    shutil.rmtree(out, ignore_errors=True)
     corpus = spark.read.parquet(str(fdir / "corpus.parquet"))
     urls = universe_urls_df(spark, str(fdir))
     url_map = urls.select(

@@ -83,6 +83,11 @@ def _layout_meta(path: str) -> dict:
             "host_key pushdown values without the bucket count it was "
             "written with"
         )
+    if "data_schema" not in meta:
+        raise ValueError(
+            f"corpus layout at {path} has no data_schema in its "
+            f"{META_FILE}: rewrite it with write_corpus_layout"
+        )
     return meta
 
 
@@ -143,24 +148,12 @@ def scan_layout(
     bucket, which the task holding h's rows lists. The residual filter
     is over the task's sets (host_key in its keys AND image_id in its
     ids)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
     meta = _layout_meta(path)
     root = pathlib.Path(path)
     if schema is None:
-        if meta.get("data_schema") is not None:
-            # layout-static schema from the metadata sidecar: no
-            # per-round driver-side footer read (VERDICT r6 #4)
-            base = StructType.fromJson(meta["data_schema"])
-        else:  # pre-r7 layout: fall back to one footer
-            any_file = next(iter(sorted(root.glob("host_bucket=*/*.parquet"))),
-                            None)
-            if any_file is None:
-                raise ValueError(
-                    f"corpus layout at {path} has no parquet files"
-                )
-            base = from_arrow_schema(pq.read_schema(str(any_file)))
+        # layout-static schema from the metadata sidecar: no per-round
+        # driver-side footer read (VERDICT r6 #4)
+        base = StructType.fromJson(meta["data_schema"])
         schema = StructType(
             list(base.fields) + [StructField("host_bucket", IntegerType())]
         )

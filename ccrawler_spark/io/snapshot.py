@@ -37,8 +37,9 @@ adds delta is also the seen delta and no round writes the seen table.
 
 A crashed round leaves orphan data dirs but no manifest → invisible to
 ``latest()``; re-running the round is idempotent (SEMANTICS.md §6 step
-12) and ``gc_orphans()`` removes the debris, as it does the head-cache
-dirs an older store's manifests name (no round reads them).
+12). ``gc_orphans()`` removes the debris, as it does the head-cache
+dirs an older store's manifests name (no round reads them); the CLI's
+``--resume`` runs it before the first resumed round.
 """
 
 from __future__ import annotations

@@ -5,7 +5,9 @@
 
 Prints one JSON line per round (fetched/denied/enqueued/queued counts)
 and a final summary. ``--resume`` continues from the latest committed
-snapshot in --out instead of bootstrapping (E3, SEMANTICS.md §6).
+snapshot in --out instead of bootstrapping (E3, SEMANTICS.md §6),
+after removing the data dirs no committed manifest names
+(``SnapshotStore.gc_orphans``).
 """
 
 from __future__ import annotations
@@ -45,8 +47,10 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
 
     # shuffle spill on tmpfs: local[N] shares ONE disk across all task
     # slots, so shuffle IO is parallelism-independent there — a local-mode
-    # artifact (real clusters add local disks with every executor). RAM
-    # (125 GB) comfortably holds the ≤5 GB round shuffles.
+    # artifact (real clusters add local disks with every executor). It
+    # relies on a round's shuffle files fitting in the RAM that the
+    # driver heap and the Python workers leave free: tmpfs pages are
+    # memory, and /dev/shm may be sized above what is free.
     shm = pathlib.Path("/dev/shm/ccrawler-spark-local")
     shm.mkdir(exist_ok=True)
 
@@ -146,6 +150,11 @@ def main(argv=None):
         if start is None:
             print("nothing to resume from", file=sys.stderr)
             return 2
+        # the fingerprint check refuses a foreign store before the
+        # crashed round's leftover data dirs are deleted
+        store.read_manifest(start)
+        print(json.dumps({"resume_from": start,
+                          "orphans_removed": store.gc_orphans()}))
     else:
         seeds = spark.read.parquet(f"{fdir}/seeds.parquet")
         st = engine.bootstrap(seeds)

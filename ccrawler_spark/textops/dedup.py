@@ -41,34 +41,15 @@ LSH_BUCKET_CAP = 64  # drop (band, bucket) groups larger than this —
 # identical cap (__spark_entry__.oracle_sql), keeping the gate exact.
 
 
-def tokens_col(text_col):
-    """Whitespace tokenization, shared by several ops (matches DuckDB
-    ``regexp_split_to_array(trim(text), '\\s+')``)."""
-    return F.split(F.trim(text_col), r"\s+")
-
-
-def word_shingles(text_col, k: int = SHINGLE_K):
-    """Array of k-word shingles (space-joined), distinct."""
-    w = tokens_col(text_col)
-    n = F.size(w)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingle = lambda i: F.concat_ws(
-        " ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(k)]
-    )
-    return F.array_distinct(
-        F.when(n >= k, F.transform(idx, shingle)).otherwise(F.array(w[0]))
-    )
-
-
 def shingle_arrays(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, shingles array<string>) — ``word_shingles`` semantics
-    in one Arrow batch (round 8): identical construction to the
-    ``minhash_signatures`` batch pass (ASCII ``\\s`` split, trim of
-    0x20 only, first-occurrence distinct, ``[w[0]]`` when n < k;
-    null text → ``[null]``, matching ``array(w[0])`` over a null
-    split). The JVM HOF form evaluated interpreted per element and,
-    being inlinable, re-ran once per consuming join branch; the gate's
-    value hash pins parity."""
+    """(doc_id, shingles array<string>) — distinct k-word shingles in
+    one Arrow batch, the semantics of the DuckDB twin ``_shingles``
+    (``__spark_entry__.py``) and of the ``minhash_signatures`` batch
+    pass: ASCII ``\\s`` split, trim of 0x20 only, first-occurrence
+    distinct, ``[w[0]]`` when n < k; null text → ``[null]``, matching
+    ``[w[1]]`` over a null split. A JVM higher-order-function form
+    evaluated interpreted per element and, being inlinable, re-ran once
+    per consuming join branch; the gate's value hash pins parity."""
 
     def sh(batches):
         import re
@@ -132,7 +113,7 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
     HOF mixes would not re-run the md5 pipeline 16× — but the mixes
     themselves still evaluated interpreted at ~µs/element (measured
     ~2.1 s fully materialized at sf0.1; ~0.5 s here). Per batch, the
-    shingle set is built with the exact ``word_shingles`` semantics
+    shingle set is built with the exact ``shingle_arrays`` semantics
     (ASCII tokenization parity — see ``simhash64``; k-word join,
     first-occurrence distinct, ``[w[0]]`` when n < k), hashed with the
     portable md5-60, and all 16 mixes + mins are one (shingles × 16)
@@ -330,7 +311,7 @@ def simhash64(docs: DataFrame) -> DataFrame:
     the vote matrix is one numpy (tokens × 60) reduction per doc —
     integer ops, exact.
 
-    Tokenization parity with ``tokens_col`` (and the DuckDB twin) is
+    Tokenization parity with the DuckDB twins' ``_TOKENS`` is
     deliberate and tested by the value-hash gate: ASCII-only ``\\s``
     (Java regex semantics, not Python's Unicode default), trim of
     SPACES only (Spark/DuckDB ``trim`` strips 0x20, not all

@@ -32,13 +32,6 @@ def test_rle8_long_runs():
     assert np.array_equal(codecs.decode(codecs.encode(px, "rle8"), "rle8"), px)
 
 
-def test_decode_auto_dispatch():
-    px = _px(3)
-    for fmt in codecs.FORMATS:
-        d = codecs.decode_auto(codecs.encode(px, fmt))
-        assert d.shape == px.shape
-
-
 def test_phash_is_stable_int64():
     for i in range(20):
         ph = corpus.phash_of(_px(i))

@@ -257,9 +257,10 @@ def test_arrow_scan_statless_footers_admit_everything(spark, tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from ccrawler_spark.io.arrow_scan import pruned_corpus_arrow
-    from ccrawler_spark.io.corpus_layout import META_FILE, host_key_py
+    from ccrawler_spark.io.corpus_layout import host_key_py, write_layout_meta
 
     buckets = 64
     host = "h0.example"
@@ -282,7 +283,11 @@ def test_arrow_scan_statless_footers_admit_everything(spark, tmp_path):
     ids_b = [f"b{i:015x}" for i in range(9)]
     mk(ids_a, "part-0.parquet", False)           # no stats anywhere
     mk(ids_b, "part-1.parquet", ["host_key"])    # id stats absent only
-    (root / META_FILE).write_text(json.dumps({"buckets": buckets}))
+    data_schema = StructType([StructField("image_id", StringType()),
+                              StructField("fmt", StringType()),
+                              StructField("host_key", LongType())])
+    write_layout_meta(str(root), buckets, None,
+                      data_schema=json.loads(data_schema.json()))
 
     want = {ids_a[1], ids_a[7], ids_b[4]}
     got = pruned_corpus_arrow(
@@ -290,6 +295,34 @@ def test_arrow_scan_statless_footers_admit_everything(spark, tmp_path):
     ).select("image_id", "fmt", "host_bucket").collect()
     assert sorted(r["image_id"] for r in got) == sorted(want)
     assert all(r["host_bucket"] == bk and r["fmt"] == "png" for r in got)
+
+
+def test_layout_without_data_schema_is_rebuilt(spark, tiny_fixtures,
+                                               layout_dir, tmp_path):
+    """A cached layout whose sidecar lacks ``data_schema`` is stale:
+    ``ensure_corpus_layout`` rebuilds it rather than have the scan
+    read a footer for its schema."""
+    import json
+    import shutil
+
+    from ccrawler_spark.fixtures.gen import (
+        corpus_layout_current, ensure_corpus_layout,
+    )
+    from ccrawler_spark.io.corpus_layout import META_FILE, read_layout_meta
+
+    fdir = tmp_path / "fixture"
+    shutil.copytree(tiny_fixtures, fdir)
+    assert corpus_layout_current(fdir)
+    sidecar = fdir / "corpus_layout" / META_FILE
+    meta = json.loads(sidecar.read_text())
+    del meta["data_schema"]
+    sidecar.write_text(json.dumps(meta))
+    assert not corpus_layout_current(fdir)
+
+    out = ensure_corpus_layout(spark, fdir)
+    assert corpus_layout_current(fdir)
+    assert read_layout_meta(str(out))["data_schema"] == read_layout_meta(
+        layout_dir)["data_schema"]
 
 
 _MANY_IDS_PROBE = """

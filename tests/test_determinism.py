@@ -6,6 +6,7 @@ DuckDB (parquet layout may differ, content must not)."""
 import json
 import os
 import pathlib
+import shutil
 import subprocess
 import sys
 
@@ -67,7 +68,8 @@ def test_parallelism_independence(tiny_fixtures, tmp_path):
 def test_resume_identical_to_uninterrupted(tiny_fixtures, tmp_path):
     """Crash after round 2 + resume == uninterrupted 3 rounds (E3),
     also when the resumed manifest names a stale frontier head cache,
-    as an older store's may: no round reads it."""
+    as an older store's may: no round reads it. ``--resume`` removes
+    both it and a crashed round's unreferenced adds dir."""
     full, part = str(tmp_path / "full"), str(tmp_path / "part")
     run_cli(["--size", "tiny", "--rounds", "3", "--out", full, "--cores", "8"])
     run_cli(["--size", "tiny", "--rounds", "2", "--out", part, "--cores", "8"])
@@ -91,8 +93,14 @@ def test_resume_identical_to_uninterrupted(tiny_fixtures, tmp_path):
     m2 = json.loads(m2_path.read_text())
     m2["frontier"]["head"] = {"path": "frontier/head-stale", "since_refill": 0}
     m2_path.write_text(json.dumps(m2))
+    # a crashed round's leftover: a data dir no committed manifest names
+    orphan = pathlib.Path(part, "data", "frontier", "adds-r9")
+    orphan.mkdir()
+    shutil.copy(next(stale.glob("*.parquet")), orphan / "part-0.parquet")
     run_cli(["--size", "tiny", "--rounds", "3", "--out", part, "--cores", "8",
              "--resume"])
+    assert not orphan.exists()
+    assert not stale.exists()
     assert fetch_rows(full) == fetch_rows(part)
     assert seen_rows(full) == seen_rows(part)
 

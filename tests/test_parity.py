@@ -85,9 +85,15 @@ def test_per_row_fetch_invariants(tiny_run):
         assert r["psnr_db"] >= 40.0
 
 
+LINEAGE_FIELDS = ("frontier_offset", "bloom_version", "fetched", "denied",
+                  "enqueued", "recrawled")
+
+
 def test_lineage_offsets_match_frontier(tiny_run):
     """Manifest per-partition lineage (frontier offsets) must agree with
-    the actual composed frontier (BASELINE.json:6 resumability)."""
+    the actual composed frontier (BASELINE.json:6 resumability), and
+    every committed round's per-bucket metrics rows must equal its
+    manifest lineage, field by field."""
     store, _, _ = tiny_run
     n = store.latest()
     m = store.read_manifest(n)
@@ -101,6 +107,19 @@ def test_lineage_offsets_match_frontier(tiny_run):
         if v["frontier_offset"] != 0
     }
     assert manifest == actual
+
+    for r in range(n + 1):
+        lineage = {
+            int(b): tuple(v[f] for f in LINEAGE_FIELDS)
+            for b, v in store.read_manifest(r)["lineage"].items()
+        }
+        rows = store.read_metrics(r).filter(f"round = {r}").collect()
+        metrics = {
+            int(row["host_bucket"]): tuple(row[f] for f in LINEAGE_FIELDS)
+            for row in rows
+        }
+        assert len(rows) == len(metrics), f"round {r}: duplicate buckets"
+        assert metrics == lineage, f"round {r}"
 
 
 def test_bloom_segments_cover_seen_set(tiny_run):

@@ -1,6 +1,6 @@
 """Training-data pipeline operators (textops): semantic tests beyond the
-driver's SQL-oracle equality — dedup behavior, ANN recall, multimodal
-plumbing (SURVEY-adjacent ops graded as first-class)."""
+driver's SQL-oracle equality — dedup behavior and ANN recall
+(SURVEY-adjacent ops graded as first-class)."""
 
 import numpy as np
 import pytest
@@ -123,46 +123,6 @@ def test_embedding_near_dup_finds_planted_pairs(spark):
     assert got <= truth | got  # no false positives below threshold checked next
     assert all(a // 3 == b // 3 for a, b in got)  # only intra-cluster pairs
     assert len(got & truth) >= 0.9 * len(truth)
-
-
-def test_image_features_real_decode(spark, tiny_fixtures):
-    from ccrawler_spark.fixtures import corpus as ref
-    from ccrawler_spark.textops.multimodal import image_features
-
-    corpus = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet").limit(20)
-    feats = {r["image_id"]: r for r in image_features(corpus).collect()}
-    assert len(feats) == 20
-    # spot-check one row against a direct numpy computation
-    row = corpus.select("image_id").first()
-    # find the url for this image_id by brute force over the tiny universe
-    import duckdb
-
-    con = duckdb.connect()
-    hosts = con.execute(
-        f"SELECT host, pages FROM '{tiny_fixtures}/hosts.parquet'"
-    ).fetchall()
-    url = None
-    for h, pages in hosts:
-        for j in range(int(pages)):
-            u = f"http://{h}/p/{j}"
-            if ref.image_id(u) == row["image_id"]:
-                url = u
-                break
-        if url:
-            break
-    px = ref.pixels_of(url).astype(np.float64)
-    got = feats[row["image_id"]]
-    assert abs(got["mean_r"] - px[:, :, 0].mean()) < 1e-9
-    assert got["w"] == px.shape[1] and got["h"] == px.shape[0]
-    assert len(got["thumb_8x8"]) == 64
-
-
-def test_image_resize_shape(spark, tiny_fixtures):
-    from ccrawler_spark.textops.multimodal import image_resize
-
-    corpus = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet").limit(5)
-    rows = image_resize(corpus, 16, 16).collect()
-    assert all(len(r["pixels"]) == 16 * 16 * 3 for r in rows)
 
 
 def test_ann_ivf_finds_planted_neighbors(spark):
